@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -88,8 +89,52 @@ def _normalize(name: str, df: DataFrame) -> DataFrame:
     return df
 
 
+# Session confs that change the schema Spark infers from a parquet file.
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+# realpath -> (file version + schema confs, inferred schema). One entry
+# per path, replaced when the key stops matching, so the memo is
+# bounded by the number of distinct table paths. The key fully
+# determines the schema, so one memo serves every session.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version. Schema inference launches a job to read a footer; with the
+    schema supplied Spark only lists the files, so added or removed
+    part files still show up on every call."""
+    real = os.path.realpath(path)
+    st = os.stat(real)
+    key = (
+        st.st_ino,
+        st.st_mtime_ns,
+        st.st_size,
+        tuple(spark.conf.get(c) for c in SCHEMA_CONFS),
+    )
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[real] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver table with schema fixups.
+
+    The parquet schema is read once per file version: the memo key is
+    the table path's realpath, inode, mtime (ns) and size plus the
+    session values of ``SCHEMA_CONFS``; later loads supply the
+    memoized schema, so they launch no Spark job. The table's files are
+    still listed on every call.
 
     Side effect: loading ``events`` sets two SESSION-WIDE configs
     (``spark.sql.legacy.parquet.nanosAsLong`` and
@@ -104,7 +149,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
     _prepare_read(spark, name)
-    return _normalize(name, spark.read.parquet(table_path(sf_dir, name)))
+    return _normalize(name, _read_parquet(spark, table_path(sf_dir, name)))
 
 
 def load_tables(
@@ -113,11 +158,9 @@ def load_tables(
     """Load every driver table; optionally register temp views."""
     out: dict[str, DataFrame] = {}
     for name in TABLE_NAMES:
-        path = table_path(sf_dir, name)
-        if not os.path.exists(path):
+        if not os.path.exists(table_path(sf_dir, name)):
             continue
-        _prepare_read(spark, name)
-        df = _normalize(name, spark.read.parquet(path))
+        df = load_table(spark, sf_dir, name)
         if register_views:
             df.createOrReplaceTempView(name)
         out[name] = df

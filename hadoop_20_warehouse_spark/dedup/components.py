@@ -108,6 +108,9 @@ def connected_components(
     k = max(1, steps_per_round)
     labels = None
     if max_iterations < 1:  # degenerate cap: labels are the seeds
+        if stats is not None:
+            stats["rounds"] = 0
+            stats["steps"] = 0
         return und.select(F.col("u").alias("node")).distinct().withColumn(
             "component", F.col("node")
         )

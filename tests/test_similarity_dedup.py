@@ -156,6 +156,20 @@ def test_connected_components_rounds_diameter_bound(spark):
     assert 2 <= stats["rounds"] <= 5
 
 
+def test_connected_components_zero_iterations_fills_stats(spark):
+    """A degenerate cap (max_iterations=0) still fills the stats dict:
+    no rounds and no steps ran, and every node keeps its own id."""
+    from hadoop_20_warehouse_spark.dedup.components import connected_components
+
+    edges = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
+    stats: dict = {}
+    out = connected_components(edges, max_iterations=0, stats=stats)
+    assert stats == {"rounds": 0, "steps": 0}
+    assert {(r.node, r.component) for r in out.collect()} == {
+        (1, 1), (2, 2), (3, 3)
+    }
+
+
 def test_pq_encode_and_adc_match_numpy_reference(spark):
     """PQ (similarity/pq.py) against a brute-force numpy reference on
     a small corpus: codebook determinism, code assignments, and ADC

@@ -53,9 +53,18 @@ def main() -> None:
     table = "\n".join(rows) + "\n"
     for n in sorted(set(old) | set(med)):
         o, v = old.get(n), med.get(n)
-        tag = "" if (o and v and 0.5 <= v / o <= 2.0) else "  <<<"
+        if o is None:
+            tag = "  new"
+        elif v is None or (o and 0.5 <= v / o <= 2.0):
+            tag = ""
+        else:
+            tag = "  <<<"
         print(f"{n:35s} {o if o is not None else '-':>8} -> "
               f"{v if v is not None else '(kept)'}{tag}")
+    stale = sorted(set(old) - set(med))
+    if stale:
+        print(f"stale anchors kept, no run had the query ({len(stale)}): "
+              + ", ".join(stale))
     if write:
         out = src[: m.start(2)] + table + src[m.end(2):]
         with open(BASELINE, "w") as fh:
