@@ -62,7 +62,6 @@ def sign_buckets(
     n_tables: int = DEFAULT_TABLES,
     n_planes: int = DEFAULT_PLANES,
     dim: int = 64,
-    method: str | None = None,
 ) -> DataFrame:
     """(id, table_idx, bucket): one b-bit sign signature per table.
     Table t uses global plane indices t*n_planes .. t*n_planes+b-1 so
@@ -71,26 +70,18 @@ def sign_buckets(
     ``dim`` must equal the actual embedding length (see
     bucket_sig_column's warning about NULL-padded zips).
 
-    Two bit-identical strategies (property-tested): ``"hof"``
-    (default) — all n_tables×n_planes plane dots from ONE vector
-    traversal (knn.plane_dots_expr, JVM-side), per-table buckets as
-    sign/shift arithmetic over the dots array; ``"gemm"`` — one
-    plane-matrix matmul per Arrow batch with a sign-band exact
-    recompute (similarity/scores.plane_signs).  Unlike the centroid
-    assign and the brute scorer, the order-controlled r11 A/B found NO
-    gemm advantage here at N=2k or 20k (the single-traversal fold
-    already amortizes the 32-plane work), so HOF stays the default;
-    the gemm form exists for very deep plane configs and as a second
-    implementation pinning the first."""
+    All n_tables×n_planes plane dots come from ONE vector traversal
+    (knn.plane_dots_expr, JVM-side); per-table buckets are sign/shift
+    arithmetic over the dots array.  Unlike the centroid assign and the
+    brute scorer, the order-controlled r11 A/B found NO advantage for
+    the Arrow-batched plane matmul (similarity/scores.plane_signs) at
+    N=2k or 20k — the single-traversal fold already amortizes the
+    32-plane work — so this form is the production kernel and
+    plane_signs is the second implementation the tests pin it
+    against."""
     from hadoop_20_warehouse_spark.session import scatter
     from hadoop_20_warehouse_spark.similarity.knn import plane_dots_expr
 
-    if method == "gemm":
-        from hadoop_20_warehouse_spark.similarity.scores import plane_signs
-
-        return plane_signs(
-            scatter(df), id_col, vec_col, n_tables, n_planes, dim
-        )
     df = scatter(df)
     dots = F.expr(plane_dots_expr(vec_col, n_tables * n_planes, dim)).alias("_dots")
     rows = [
@@ -184,19 +175,12 @@ def brute_force_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = DEFAULT_THRESHOLD,
-    method: str | None = None,
 ) -> DataFrame:
     """Exact all-pairs baseline (id_a < id_b, sim >= threshold) — test
-    yardstick only; O(n²), never the production path.  ``"gemm"``
-    dispatches to similarity/scores.pairs_threshold (bit-identical,
-    batch×broadcast matmul); the HOF crossJoin form stays the default
-    executable specification at yardstick scale."""
-    if method == "gemm":
-        from hadoop_20_warehouse_spark.similarity.scores import (
-            pairs_threshold,
-        )
-
-        return pairs_threshold(df, id_col, vec_col, threshold)
+    yardstick only; O(n²), never the production path.  The crossJoin
+    form is the executable specification at yardstick scale;
+    similarity/scores.pairs_threshold is its bit-identical
+    batch×broadcast matmul twin."""
     vecs = df.select(
         F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("nrm")
     )

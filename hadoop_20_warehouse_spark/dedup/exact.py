@@ -42,15 +42,3 @@ SELECT md5({text_col}) AS content_md5,
 FROM {table}
 GROUP BY md5({text_col})
 """.strip()
-
-
-def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep one row per distinct content (the canonical-id row).
-    Implemented as a semi-join of the input against the elected
-    canonical ids — two narrow shuffles, no row explosion."""
-    groups = exact_dedup_groups(df, id_col, text_col)
-    return df.join(
-        groups.select(F.col("canonical_id").alias(id_col)),
-        on=id_col,
-        how="left_semi",
-    )

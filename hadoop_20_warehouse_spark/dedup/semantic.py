@@ -22,28 +22,25 @@ is within the threshold, so the kept set is exactly the ids with no
 smaller near-dup, reproducible across engines and runs (the same
 min-id-representative convention as ``dedup.components``).
 
-Spark shape (100 TB posture) — both compute-dense stages have a small-k
-form and a batched large-k form, dispatched on ``num_cells`` and
-bit-identical (property-tested):
+Spark shape (100 TB posture) — each compute-dense stage has one
+batched kernel:
 
-- cell assignment is shuffle-free either way: below the measured k
-  threshold the k centroids travel as ONE broadcast array row and each
-  vector argmins with array HOFs (JVM-side but *interpreted* — HOFs
-  break whole-stage codegen, the repo's measured finding, so the
-  O(N·k·d) constant grows with k); above it the assignment is one
-  numpy GEMM per Arrow batch (``similarity.assign`` — the paper-scale
-  path, where num_cells ∝ N reaches ~50k clusters);
-- the pairwise stage is one cell-keyed exchange either way: the
-  ``join`` form self-joins on cell id and scores each pair with the
-  (interpreted) HOF cosine; the ``grouped`` form computes each cell's
-  cosine matrix as one matmul inside ``applyInPandas`` and ships NO
-  pair rows at all (r11 rehearsal, 200k docs / 2k cells: 50.3s → 11.0s
-  end-to-end).  Per-cell skew is bounded by the clustering itself —
-  at scale you raise ``num_cells`` ∝ N so cells stay O(N/k) and
+- cell assignment is shuffle-free: one numpy GEMM per Arrow batch
+  against the broadcast centroid matrix (``similarity.assign`` — the
+  paper-scale path, where num_cells ∝ N reaches ~50k clusters);
+- the pairwise stage is one cell-keyed exchange of (id, cell, vector)
+  rows: each cell's cosine matrix is one matmul inside
+  ``applyInPandas`` and NO pair rows ship at all (r11 rehearsal, 200k
+  docs / 2k cells: 50.3s → 11.0s end-to-end against the cell-keyed
+  self-join with a per-pair HOF cosine, which the tests keep as the
+  reference form).  Per-cell skew is bounded by the clustering itself
+  — at scale you raise ``num_cells`` ∝ N so cells stay O(N/k) and
   Σ|cell|² stays near-linear;
-- pairs ship (id, vector) only (join form) or never ship (grouped);
 - the removal aggregation (min smaller-neighbor per doc) is a partial
   agg (min of struct), combiner-friendly.
+
+A NULL embedding takes the centroid-id-ordered cell like a zero vector
+and pairs with nothing (its cosine is NULL), as in the oracle.
 
 Cross-engine determinism: sampled centroids (smallest-k by md5(id) —
 ``similarity.ivf.centroids``), cosines rounded to 6 decimals, min-id
@@ -59,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from hadoop_20_warehouse_spark.similarity.ivf import _cells
-from hadoop_20_warehouse_spark.similarity.knn import _dot, _norm, _safe_div, cosine_sql
+from hadoop_20_warehouse_spark.similarity.knn import _norm, cosine_sql
 
 DEFAULT_NUM_CELLS = 32
 DEFAULT_SEM_THRESHOLD = 0.35
@@ -87,7 +84,9 @@ def _pairs_grouped(
 
     Shuffle shape: ONE exchange of (id, cell, vector) rows keyed on
     cell — half the self-join's two-sided shuffle — and pairs never
-    ship at all (they are born and filtered inside the worker).
+    ship at all (they are born and filtered inside the worker).  Rows
+    with a NULL vector are skipped: their cosine is NULL, so they pair
+    with nothing.
     Worker memory is row-chunked (chunk × |cell| scores); a skewed
     cell costs one long task, the same skew the clustering knob
     (num_cells ∝ N) exists to bound."""
@@ -119,6 +118,7 @@ def _pairs_grouped(
     def fn(pdf):
         import pandas as pd
 
+        pdf = pdf[pdf[vec_col].notna()]
         n = len(pdf)
         empty = pd.DataFrame(
             {"cell_id": [], "id_a": [], "id_b": [], "sim": []}
@@ -171,8 +171,6 @@ def semantic_dedup_removed(
     num_cells: int = DEFAULT_NUM_CELLS,
     threshold: float = DEFAULT_SEM_THRESHOLD,
     cents: DataFrame | None = None,
-    method: str | None = None,
-    pair_method: str | None = None,
 ) -> DataFrame:
     """(vec_id, cell_id, dup_of, sim) — the REMOVED set: each row is a
     document with at least one same-cell neighbor of smaller id whose
@@ -187,69 +185,17 @@ def semantic_dedup_removed(
     ``cents``: optional (centroid_id, cv, cn) table — pass
     ``similarity.ivf.train_centroids(...)`` for a trained quantizer;
     defaults to the deterministic sampled centroids."""
-    from hadoop_20_warehouse_spark.session import persist_generation
-
-    # rank-1 cell per vector — shuffle-free broadcast argmin (HOF below
-    # the measured k crossover, Arrow-batched GEMM above it — the
-    # paper-scale num_cells ∝ N path; method=None auto-picks)
-    cells = _cells(
-        df, id_col, vec_col, num_cells, nprobe=1, cents=cents, method=method
-    ).drop("crank")
+    # rank-1 cell per vector — shuffle-free Arrow-batched GEMM argmin
+    cells = _cells(df, id_col, vec_col, num_cells, nprobe=1, cents=cents).drop(
+        "crank"
+    )
     vecs = df.select(
         F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("nrm")
     )
-    if pair_method is None:
-        from hadoop_20_warehouse_spark.similarity.assign import (
-            GEMM_ASSIGN_MIN_K,
-        )
-
-        pair_method = (
-            "grouped" if num_cells >= GEMM_ASSIGN_MIN_K else "join"
-        )
-    if pair_method == "grouped":
-        # per-cell GEMM: pairs are born inside the worker — one
-        # cell-keyed exchange, no pair rows ever shuffle
-        pairs = _pairs_grouped(
-            cells.join(vecs, on=id_col), id_col, vec_col, threshold
-        )
-        best = pairs.groupBy("id_b", "cell_id").agg(
-            F.min(F.struct("id_a", "sim")).alias("m")
-        )
-        return best.select(
-            F.col("id_b").alias(id_col),
-            "cell_id",
-            F.col("m")["id_a"].alias("dup_of"),
-            F.col("m")["sim"].alias("sim"),
-        )
-    # (id, cell, v, n) feeds BOTH sides of the self-join — persist once
-    tagged = persist_generation(
-        "semdedup_tagged", cells.join(vecs, on=id_col)
-    )
-    a = tagged.select(
-        F.col(id_col).alias("id_a"),
-        F.col("centroid_id").alias("cell_id"),
-        F.col(vec_col).alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = tagged.select(
-        F.col(id_col).alias("id_b"),
-        F.col("centroid_id").alias("cell_id"),
-        F.col(vec_col).alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    pairs = (
-        a.join(b, on="cell_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "cell_id",
-            "id_a",
-            "id_b",
-            F.round(
-                _safe_div(_dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")),
-                6,
-            ).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
+    # per-cell GEMM: pairs are born inside the worker — one cell-keyed
+    # exchange, no pair rows ever shuffle
+    pairs = _pairs_grouped(
+        cells.join(vecs, on=id_col), id_col, vec_col, threshold
     )
     # partial-agg min(struct): smallest dup_of per removed doc; id_a is
     # unique per (id_b, cell) pair set so the struct order is total

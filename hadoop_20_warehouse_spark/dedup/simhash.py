@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_20_warehouse_spark.functions.hashing import md5_int64, md5_int64_sql
+from hadoop_20_warehouse_spark.functions.hashing import md5_int64_sql
 from hadoop_20_warehouse_spark.functions.text import tokens
 
 DEFAULT_BITS = 32
@@ -92,64 +92,3 @@ sums AS (
 )
 SELECT id AS {id_col}, {fp_terms} AS simhash FROM sums
 """.strip()
-
-
-def simhash_dup_groups(
-    df: DataFrame, id_col: str, text_col: str, n_bits: int = DEFAULT_BITS
-) -> DataFrame:
-    """Documents sharing an identical fingerprint (Hamming distance 0
-    shortcut). For distance ≤ k banding, split the fingerprint into
-    k+1 blocks and bucket-join on each block (Manku's construction) —
-    see ``simhash_band_pairs``."""
-    fp = simhash(df, id_col, text_col, n_bits)
-    return (
-        fp.groupBy("simhash")
-        .agg(F.min(id_col).alias("canonical_id"), F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
-def simhash_band_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_bits: int = DEFAULT_BITS,
-    blocks: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup candidate pairs by fingerprint banding: split the
-    B-bit fingerprint into ``blocks`` bit-ranges; any pair within
-    Hamming distance < blocks shares at least one exact block
-    (pigeonhole). Verify candidates with an exact popcount filter.
-    """
-    fp = simhash(df, id_col, text_col, n_bits)
-    width = n_bits // blocks
-    mask = (1 << width) - 1
-    block_col = F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(b).alias("block_idx"),
-                F.shiftright(F.col("simhash"), b * width).bitwiseAND(F.lit(mask)).alias("block_val"),
-            )
-            for b in range(blocks)
-        ])
-    ).alias("blk")
-    blocked = fp.select(F.col(id_col), F.col("simhash"), block_col).select(
-        F.col(id_col), "simhash", F.col("blk.block_idx"), F.col("blk.block_val")
-    )
-    a = blocked.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("fp_a"), "block_idx", "block_val"
-    )
-    b = blocked.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("fp_b"), "block_idx", "block_val"
-    )
-    cand = (
-        a.join(b, on=["block_idx", "block_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "fp_a", "fp_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return cand.withColumn("hamming", hamming.cast("int")).filter(
-        F.col("hamming") <= max_hamming
-    ).select("id_a", "id_b", "hamming")

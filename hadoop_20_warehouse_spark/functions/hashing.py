@@ -99,10 +99,6 @@ def es_sample_key_sql(id_expr: str, weight_expr: str) -> str:
 # --- SQL-string builders for the DuckDB oracle side -----------------------
 
 
-def md5_hex_sql(expr: str) -> str:
-    return f"md5({expr})"
-
-
 def md5_int64_sql(expr: str) -> str:
     return f"CAST('0x' || substring(md5({expr}), 1, {_HEX_CHARS}) AS BIGINT)"
 

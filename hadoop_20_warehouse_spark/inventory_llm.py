@@ -965,19 +965,15 @@ def q_dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=SEM.semantic_dedup_removed_sql("embeddings", num_cells=96),
 )
 def q_dedup_semantic_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with the Arrow-batched GEMM quantizer pinned on
-    (similarity/assign.py) at a 96-cell count — the paper-scale assign
-    path (cells ∝ N; Abbas et al. 2023 run ~50k clusters) where the
-    per-row HOF argmin's interpreted O(N·k·d) constant would dominate:
-    cell assignment is ONE numpy matmul per Arrow batch against the
-    broadcast centroid matrix, shuffle-free, bit-identical to the HOF
-    form (tie-band exact recompute + HALF_UP shortest-decimal rounding
-    — see the assign module's equality argument).  The oracle is the
-    SAME SQL as dedup_semantic_cells at the larger cell count, so the
-    driver hash-checks the GEMM path end-to-end: identical cells,
-    pairs, removed set, and greedy dup_of links."""
+    """SemDeDup at a 96-cell count — the paper-scale shape (cells ∝ N;
+    Abbas et al. 2023 run ~50k clusters).  Runs the same plan as
+    dedup_semantic_cells (Arrow-batched GEMM cell assignment, per-cell
+    GEMM pairs; similarity/assign.py, dedup/semantic.py) at three times
+    the cell count.  The oracle is the SAME SQL as dedup_semantic_cells
+    at the larger cell count, so the oracle check hashes identical
+    cells, pairs, removed set, and greedy dup_of links."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return SEM.semantic_dedup_removed(emb, num_cells=96, method="gemm")
+    return SEM.semantic_dedup_removed(emb, num_cells=96)
 
 
 @register(
@@ -985,16 +981,15 @@ def q_dedup_semantic_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=IVF.ivf_topk_sql("embeddings", k=5, num_centroids=64, nprobe=3),
 )
 def q_knn_ivf_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat ANN with the GEMM quantizer pinned on and nprobe=3 —
-    exercises the batched assign's multi-probe ORDERING (crank ranks
-    decided by rounded cosine with centroid-id tiebreaks across three
-    probes, not just the rank-1 winner) at a 64-centroid count above
-    the measured dispatch threshold.  Same search plan as knn_ivf
-    (probe→cell equi-join IS the candidate pruning); the oracle
-    reproduces centroids, cell ranks, candidates, and the final
-    ranking exactly."""
+    """IVF-flat ANN at 64 centroids and nprobe=3 — the same plan as
+    knn_ivf (Arrow-batched GEMM assign, probe→cell equi-join as the
+    candidate pruning) at a larger cell count, exercising the assign's
+    multi-probe ORDERING (crank ranks decided by rounded cosine with
+    centroid-id tiebreaks across three probes, not just the rank-1
+    winner).  The oracle reproduces centroids, cell ranks, candidates,
+    and the final ranking exactly."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return IVF.ivf_topk(emb, k=5, num_centroids=64, nprobe=3, method="gemm")
+    return IVF.ivf_topk(emb, k=5, num_centroids=64, nprobe=3)
 
 
 @register(

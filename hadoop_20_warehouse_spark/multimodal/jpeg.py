@@ -158,11 +158,6 @@ def _idct2(block: np.ndarray) -> np.ndarray:
     return _DCT_C.T @ block @ _DCT_C
 
 
-def _fdct2(block: np.ndarray) -> np.ndarray:
-    """2-D forward DCT of an 8x8 sample block (orthonormal)."""
-    return _DCT_C @ block @ _DCT_C.T
-
-
 def scale_quant(table: np.ndarray, quality: int) -> np.ndarray:
     """IJG quality scaling of a base quantization table (libjpeg's
     jpeg_quality_scaling): quality 50 returns the table verbatim —

@@ -93,14 +93,6 @@ AGGREGATORS: dict[str, Callable[[Column], Column]] = {
 }
 
 
-def register_aggregator(name: str, fn: Callable[[Column], Column]) -> None:
-    """UserDefinedValueAggregatorDescriptor analog
-    (lib/aggregate/UserDefinedValueAggregatorDescriptor.java): register
-    a custom aggregate expression by name.
-    """
-    AGGREGATORS[name] = fn
-
-
 def uniq_value_count_capped(
     df: DataFrame, key_cols: list[str], value_col: str, cap: int
 ) -> DataFrame:

@@ -45,12 +45,3 @@ def distinct(df: DataFrame) -> DataFrame:
     """Group-by-all-columns identity reduce → Spark hash-dedup."""
     return df.distinct()
 
-
-def intersect_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Multiplicity-preserving INTERSECT (min of per-side counts)."""
-    return a.intersectAll(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Multiplicity-preserving EXCEPT (bag difference)."""
-    return a.exceptAll(b)

@@ -234,10 +234,3 @@ def keyfield_partition(
     return parted.sortWithinPartitions(
         *keyfield_sort_columns(line_col, sort_spec, separator)
     )
-
-
-def keyfield_sort(
-    df: DataFrame, line_col: str, spec: str, separator: str = "\t"
-) -> DataFrame:
-    """Sort a frame of delimited text lines by a keyfield spec."""
-    return df.orderBy(*keyfield_sort_columns(line_col, spec, separator))

@@ -1,22 +1,25 @@
-"""Batched (GEMM) centroid assignment — the large-k twin of the
-broadcast-HOF argmin in ``similarity.ivf``.
+"""Batched (GEMM) centroid assignment — the one corpus-side centroid
+assign behind every ANN/SemDeDup quantizer in this library
+(``ivf.train_centroids``, ``ivf._cells``, ``pq._assign_with_centroid``).
 
-Every ANN/SemDeDup operator in this library quantizes vectors by
-scoring them against a broadcast centroid table and keeping the
-``nprobe`` nearest by rounded cosine (``ivf._scorer``).  The HOF form
-(array_min / array_sort over transform) is JVM-side and shuffle-free,
-but higher-order array functions run as INTERPRETED expressions — the
-repo's own measured finding (PLANS.md codegen notes) — so its O(N·k·d)
-constant factor dominates once k grows toward the cell counts a 100 TB
-deployment runs (SemDeDup's paper-scale ~50k clusters).  Real
-deployments batch this stage as a matrix multiply; this module is that
-path: ``mapInPandas`` over Arrow batches, ONE numpy GEMM per batch
-against the broadcast centroid matrix, still shuffle-free and
-embarrassingly parallel.
+Every such operator quantizes vectors by scoring them against a
+centroid table and keeping the ``nprobe`` nearest by rounded cosine
+with centroid-id tiebreaks.  The row-local HOF form of that argmin
+(array_min / array_sort over transform, ``ivf._scorer``) is JVM-side
+and shuffle-free, but higher-order array functions run as INTERPRETED
+expressions — the repo's own measured finding (PLANS.md codegen notes)
+— so its O(N·k·d) constant factor dominates as k grows toward the
+cell counts a 100 TB deployment runs (SemDeDup's paper-scale ~50k
+clusters).  Real deployments batch this stage as a matrix multiply;
+this module is that path: ``mapInPandas`` over Arrow batches, ONE
+numpy GEMM per batch against the broadcast centroid matrix, still
+shuffle-free and embarrassingly parallel.  The HOF form survives only
+as the test-side reference the equality property is checked against
+(tests/test_similarity_dedup.py ``hof_assign_topn``).
 
 Bit-identical by construction — the load-bearing property (the DuckDB
 oracles hash the downstream results, so the assign must reproduce the
-HOF argmin EXACTLY, same rounding and same tiebreaks):
+rounded-cosine argmin EXACTLY, same rounding and same tiebreaks):
 
 - float32 inputs widen to float64 exactly; float64 inputs pass
   through — every elementwise product/divide is then the same IEEE
@@ -37,18 +40,22 @@ HOF argmin EXACTLY, same rounding and same tiebreaks):
   .valueOf == Double.toString == Python ``repr``), sorted by
   (-rounded, centroid_id) — byte-for-byte the ``ivf._scorer``
   ordering, NULL cosines (zero norms) last.
+- A NULL vector — corpus row or centroid row — scores like a zero
+  vector: every cosine it takes part in is NULL, so a NULL corpus
+  vector gets the centroid-id-ordered cells (the oracles' NULLS-LAST
+  order).  It passes through as ``vec`` and its ``resid`` is NULL, as
+  is the ``resid`` against a NULL centroid.
 - A property test (tests/test_similarity_dedup.py) pins GEMM == HOF
   frame equality on real float32 embeddings, synthetic doubles,
-  exact-duplicate vectors, and zero vectors.
+  exact-duplicate vectors, zero vectors and NULL vectors.
 
-Crossover: measured round 11 (PLANS.md) at N=2,000 (sf0.1 embeddings)
-and N=20,000 (synthetic doubles), k ∈ [8, 2048]: the GEMM path wins at
-EVERY measured point (k=8/N=2k: 0.46s vs 1.05s; k=320/N=20k: 0.48s vs
-4.0s; k=2048/N=20k: 0.91s vs 27.7s — the HOF cost is ~linear in k, the
-GEMM cost is flat until the matmul term finally surfaces).  The
-dispatch threshold keeps HOF only below k=16, where the two are within
-session noise and HOF avoids the plan-build centroid collect and the
-Python worker entirely.
+Why one kernel: measured round 11 (PLANS.md) at N=2,000 (sf0.1
+embeddings) and N=20,000 (synthetic doubles), k ∈ [8, 2048], the GEMM
+path wins at EVERY measured point (k=8/N=2k: 0.46s vs 1.05s;
+k=320/N=20k: 0.48s vs 4.0s; k=2048/N=20k: 0.91s vs 27.7s — the HOF
+cost is ~linear in k, the GEMM cost is flat until the matmul term
+finally surfaces).  With no k at which the HOF form wins, there is no
+dispatch threshold.
 
 Reference lineage: the assignment stage itself has no reference
 counterpart (vector ops are an extension); the batch-the-inner-loop
@@ -65,11 +72,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
-# Measured HOF-vs-GEMM dispatch point (PLANS.md r11): GEMM wins at
-# every measured k ≥ 8, but below 16 centroids the margin is session
-# noise and HOF skips the plan-build collect + Python worker.
-GEMM_ASSIGN_MIN_K = 16
-
 # Decision band on the cosine scale: 1e-6 covers the 6-decimal
 # rounding granularity; the error term dominates the GEMM
 # reassociation bound (≈ 2·d·eps on the normalized cosine, eps =
@@ -80,10 +82,6 @@ GEMM_ASSIGN_MIN_K = 16
 def _band(d: int) -> float:
     return 1e-6 + max(1e-12, 8.0 * float(d) * 2.3e-16)
 
-
-# Backward-compat alias at the repo's 64-dim convention (imported by
-# older call sites/tests); new code should call _band(d).
-_BAND = _band(64)
 
 # Sort key for NULL cosines (zero norm): the HOF scorer coalesces the
 # NULL negsim to +inf so those candidates rank LAST with centroid-id
@@ -112,21 +110,38 @@ def _round6_scaled(x: float) -> int:
 
 def collect_centroid_matrix(cents: DataFrame):
     """Collect a (centroid_id, cv, cn) table into numpy arrays for the
-    broadcast closure.  The table is O(k) rows by construction
-    (``ivf.centroids``/``train_centroids`` cap it), so the collect is
-    the same bounded driver hop the HOF path's broadcast array row
-    takes.  ``cn`` is reused from the Spark-computed column — not
-    recomputed — so the denominator is the identical double."""
+    broadcast closure: (cids, C, cn, null_c).  The table is O(k) rows
+    by construction (``ivf.centroids``/``train_centroids`` cap it), so
+    the collect is a bounded driver hop.  ``cn`` is reused from the
+    Spark-computed column — not recomputed — so the denominator is the
+    identical double.  A NULL ``cv`` becomes a zero row flagged in
+    ``null_c`` (its cosines are NULL; its residuals are NULL)."""
     import numpy as np
 
     rows = cents.select("centroid_id", "cv", "cn").collect()
     cids = [r["centroid_id"] for r in rows]
-    C = np.array([list(r["cv"]) for r in rows], dtype=np.float64)
+    dims = {len(r["cv"]) for r in rows if r["cv"] is not None}
+    if len(dims) > 1:
+        raise ValueError(
+            f"assign_topn: centroid vectors have mixed lengths {sorted(dims)}"
+        )
+    if rows and not dims:
+        raise ValueError(
+            "assign_topn: every centroid vector is NULL — the argmin is "
+            "undefined (check the quantizer's source frame)"
+        )
+    C = np.zeros((len(rows), dims.pop() if dims else 0), dtype=np.float64)
+    null_c = np.zeros(len(rows), dtype=bool)
+    for i, r in enumerate(rows):
+        if r["cv"] is None:
+            null_c[i] = True
+        else:
+            C[i] = r["cv"]
     cn = np.array(
         [float(r["cn"]) if r["cn"] is not None else 0.0 for r in rows],
         dtype=np.float64,
     )
-    return cids, C, cn
+    return cids, C, cn, null_c
 
 
 def _seq_dot(a, b):
@@ -149,13 +164,14 @@ def assign_topn(
 ) -> DataFrame:
     """(id, centroid_id, crank[, vec][, resid]) — each vector's
     ``nprobe`` nearest centroids by rounded cosine with centroid-id
-    tiebreaks, bit-identical to ``ivf._cells``'s HOF argmin (see
-    module docstring for the equality argument).
+    tiebreaks, bit-identical to the HOF argmin over ``ivf._scorer`` (see
+    module docstring for the equality argument, NULL vectors included).
 
     ``include_resid`` appends ``resid`` = v − centroid per emitted row
-    (the IVF-PQ residual, float64 — same as the HOF path's zip_with of
-    double casts); ``include_vec`` carries the input vector through
-    (the train_centroids loop shape).
+    (the IVF-PQ residual, float64 — the HOF form's zip_with of double
+    casts); ``include_vec`` carries the input vector through (the
+    train_centroids loop shape).  A vector whose length differs from
+    the centroids' raises ``ValueError`` naming its id.
 
     Scale: one GEMM per Arrow batch against the broadcast centroid
     matrix — no shuffle, no window; worker memory is bounded by
@@ -163,14 +179,14 @@ def assign_topn(
     import numpy as np
 
     spark = corpus.sparkSession
-    cids, C, cn = collect_centroid_matrix(cents)
+    cids, C, cn, null_c = collect_centroid_matrix(cents)
     k = len(cids)
     if k == 0:
         raise ValueError(
             "assign_topn: empty centroid table — the argmin is "
             "undefined (check the quantizer's source frame)"
         )
-    bc = spark.sparkContext.broadcast((cids, C, cn))
+    bc = spark.sparkContext.broadcast((cids, C, cn, null_c))
 
     sel = corpus.select(F.col(id_col), F.col(vec_col))
     id_type = sel.schema[0].dataType
@@ -191,10 +207,10 @@ def assign_topn(
     def gen(batches):
         import pandas as pd
 
-        cids_, C_, cn_ = bc.value
-        kk = C_.shape[0]
+        cids_, C_, cn_, null_c_ = bc.value
+        kk, dim = C_.shape
         cid_arr = np.arange(kk)
-        band = _band(C_.shape[1])
+        band = _band(dim)
         # pre-normalized centroid matrix, computed ONCE per worker:
         # Sp = V @ (C/cn).T gives Sp[i,j] = dot(v_i, c_j)/cn_j, which
         # ORDERS each row exactly like the cosine (vn_i is a constant
@@ -211,7 +227,7 @@ def assign_topn(
         CnT = (C_ / np.where(zero_c, 1.0, cn_)[:, None]).T
         any_zero_c = bool(zero_c.any())
 
-        def emit(ids_chunk, V, raw_chunk, rows_sel):
+        def emit(ids_chunk, V, raw_chunk, null_chunk, rows_sel):
             # rows_sel: list over rows of [centroid_index, ...] ordered
             cols = {
                 id_col: np.repeat(ids_chunk, [len(s) for s in rows_sel]),
@@ -228,7 +244,9 @@ def assign_topn(
                 ]
             if include_resid:
                 cols["resid"] = [
-                    V[i] - C_[c] for i, s in enumerate(rows_sel) for c in s
+                    None if null_chunk[i] or null_c_[c] else V[i] - C_[c]
+                    for i, s in enumerate(rows_sel)
+                    for c in s
                 ]
             return pd.DataFrame(cols)
 
@@ -236,14 +254,27 @@ def assign_topn(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            raw = [np.asarray(v) for v in pdf[vec_col]]
-            V_all = np.stack([v.astype(np.float64) for v in raw])
+            raw = list(pdf[vec_col])
+            # a NULL vector scores as a zero row: all its cosines are NULL
+            V_all = np.zeros((len(raw), dim), dtype=np.float64)
+            null_v = np.zeros(len(raw), dtype=bool)
+            for i, v in enumerate(raw):
+                if v is None:
+                    null_v[i] = True
+                elif len(v) != dim:
+                    raise ValueError(
+                        f"assign_topn: vector {id_col}={ids[i]} has length "
+                        f"{len(v)}, centroids have length {dim}"
+                    )
+                else:
+                    V_all[i] = v
             # row-chunk so chunk_rows × k scores stay bounded
             chunk = max(1, (1 << 24) // max(kk, 1))
             for lo in range(0, len(ids), chunk):
                 V = V_all[lo : lo + chunk]
                 ids_chunk = ids[lo : lo + chunk]
                 raw_chunk = raw[lo : lo + chunk]
+                null_chunk = null_v[lo : lo + chunk]
                 B = V.shape[0]
                 vn = np.sqrt(_seq_dot(V, V))
                 Sp = V @ CnT  # (B, k) — THE batch GEMM, cosine·vn scale
@@ -318,6 +349,6 @@ def assign_topn(
                             keyed.append((-_round6_scaled(sim), cids_[c], c))
                         keyed.sort(key=lambda t: (t[0], t[1]))
                         rows_sel[i] = [t[2] for t in keyed[:np_eff]]
-                yield emit(ids_chunk, V, raw_chunk, rows_sel)
+                yield emit(ids_chunk, V, raw_chunk, null_chunk, rows_sel)
 
     return sel.mapInPandas(gen, schema=schema)

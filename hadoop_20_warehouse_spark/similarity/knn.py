@@ -241,15 +241,6 @@ def plane_dots_expr(vec_col: str, n_planes_total: int, dim: int) -> str:
     )
 
 
-def bucket_signature(
-    df: DataFrame, id_col: str, vec_col: str, n_planes: int = 8, dim: int = 64
-) -> DataFrame:
-    """(id, bucket): one sign-LSH bucket per vector."""
-    return df.select(
-        F.col(id_col), bucket_sig_column(vec_col, n_planes, dim).alias("bucket")
-    )
-
-
 def bucket_sig_sql(vec_col: str, n_planes: int, plane_offset: int = 0) -> str:
     """SQL twin of ``bucket_sig_column`` (same planes via PLANE_SQL)."""
 
@@ -277,25 +268,24 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 8,
     dim: int = 64,
-    method: str | None = None,
 ) -> DataFrame:
     """ANN top-k within sign-LSH buckets: (query_id, neighbor_id, sim,
     rank) for every corpus vector as query, candidates limited to the
     same bucket. The scale path: bucket equi-join replaces the cross
     join; recall < 1 by construction.
 
-    Two bit-identical scorers (property-tested): ``"join"`` (default)
-    — the bucket self-join + per-pair cosine + per-query window;
-    ``"grouped"`` — one cosine matmul per bucket inside applyInPandas,
-    ranks computed in-group (similarity/scores.lsh_grouped_topk).
-    The r11 order-controlled A/B kept JOIN as the default: sign-LSH's
-    own design holds buckets SMALL (2^b buckets, ~n/2^b rows each), so
-    per-bucket matmuls are tiny while per-group pandas overhead is not
-    (join wins ~1.7x at n=2k, ties at 20k), and a degenerate dense
-    bucket is better served by AQE skew-splitting the join than by one
-    long pandas task.  The grouped form is the right scorer only for
-    deliberately shallow signatures (few, large buckets — the SemDeDup
-    cell regime, where its twin is the measured 4.6x default)."""
+    Scorer: the bucket self-join + per-pair cosine + per-query window.
+    The r11 order-controlled A/B against the per-bucket cosine matmul
+    inside applyInPandas (similarity/scores.lsh_grouped_topk,
+    bit-identical; the tests pin one against the other) kept the JOIN:
+    sign-LSH's own design holds buckets SMALL (2^b buckets, ~n/2^b rows
+    each), so per-bucket matmuls are tiny while per-group pandas
+    overhead is not (join wins ~1.7x at n=2k, ties at 20k), and a
+    degenerate dense bucket is better served by AQE skew-splitting the
+    join than by one long pandas task.  The grouped form is the right
+    scorer only for deliberately shallow signatures (few, large buckets
+    — the SemDeDup cell regime, where it is the measured 4.6x
+    choice)."""
     from hadoop_20_warehouse_spark.session import scatter
 
     # signature, vector, and norm in ONE projection (the join-with-sig
@@ -306,12 +296,6 @@ def lsh_topk(
         _norm(F.col(vec_col)).alias("nrm"),
         bucket_sig_column(vec_col, n_planes, dim).alias("bucket"),
     )
-    if method == "grouped":
-        from hadoop_20_warehouse_spark.similarity.scores import (
-            lsh_grouped_topk,
-        )
-
-        return lsh_grouped_topk(vecs, id_col, vec_col, k)
     a = vecs.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
         F.col("nrm").alias("qn"), "bucket",

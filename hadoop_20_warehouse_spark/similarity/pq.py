@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_20_warehouse_spark.similarity import assign as ASSIGN
+
 DEFAULT_M = 8
 DEFAULT_K = 16
 
@@ -341,55 +343,16 @@ def _assign_with_centroid(
     cents: DataFrame,
     id_col: str,
     vec_col: str,
-    num_centroids: int | None = None,
-    method: str | None = None,
 ) -> DataFrame:
     """(id, cell_id, resid) — rank-1 cosine cell assignment AND the
-    residual (v − centroid) in ONE row-local projection: the centroid
-    table travels as a broadcast array row and array_min picks
-    (rounded-neg-cosine, cid, cv) structs, so the winning centroid's
-    VECTOR comes back from the same argmin — no id-keyed join between
-    assignment and residual (struct comparison never reaches the cv
-    field: (negsim, cid) is already unique).  JVM-side but interpreted
-    (HOFs break codegen); above the measured k crossover the same
-    assignment+residual dispatches to the Arrow-batched GEMM
-    (``similarity.assign.assign_topn(include_resid=True)`` —
-    bit-identical, see that module's equality argument)."""
-    from hadoop_20_warehouse_spark.similarity import assign as ASSIGN
-    from hadoop_20_warehouse_spark.similarity.ivf import (
-        _centroid_array,
-        _scorer,
-    )
-    from hadoop_20_warehouse_spark.similarity.knn import _norm
-
-    if method is None and num_centroids is not None:
-        method = (
-            "gemm" if num_centroids >= ASSIGN.GEMM_ASSIGN_MIN_K else "hof"
-        )
-    if method == "gemm":
-        return ASSIGN.assign_topn(
-            corpus, cents, id_col=id_col, vec_col=vec_col, nprobe=1,
-            include_resid=True,
-        ).select(
-            F.col(id_col), F.col("centroid_id").alias("cell_id"), "resid"
-        )
-    vecs = corpus.select(
-        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("vn")
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("cs"), _scorer(F.col(vec_col), F.col("vn"), include_cv=True)
-        )
-    )
-    return vecs.crossJoin(F.broadcast(_centroid_array(cents))).select(
-        F.col(id_col),
-        best["cid"].alias("cell_id"),
-        F.zip_with(
-            F.col(vec_col),
-            best["cv"],
-            lambda x, y: x.cast("double") - y.cast("double"),
-        ).alias("resid"),
-    )
+    residual (v − centroid) from ONE Arrow-batched GEMM pass
+    (``similarity.assign.assign_topn(include_resid=True)``): the
+    winning centroid's vector never leaves the worker, so there is no
+    id-keyed join between assignment and residual."""
+    return ASSIGN.assign_topn(
+        corpus, cents, id_col=id_col, vec_col=vec_col, nprobe=1,
+        include_resid=True,
+    ).select(F.col(id_col), F.col("centroid_id").alias("cell_id"), "resid")
 
 
 def ivfpq_topk(
@@ -404,7 +367,6 @@ def ivfpq_topk(
     k_codes: int = DEFAULT_K,
     dim: int = 64,
     topk: int = 20,
-    method: str | None = None,
     codebook: str = "sampled",
     iters: int = 2,
 ) -> DataFrame:
@@ -444,10 +406,7 @@ def ivfpq_topk(
     # either way)
     assigned = persist_generation(
         "ivfpq_assigned",
-        _assign_with_centroid(
-            corpus, cents, id_col, vec_col,
-            num_centroids=num_centroids, method=method,
-        ),
+        _assign_with_centroid(corpus, cents, id_col, vec_col),
     )
     if codebook == "trained":
         cb = pq_train_codebook(

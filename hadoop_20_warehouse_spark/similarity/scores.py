@@ -32,10 +32,13 @@ emitted or compared) to:
   grouping; test-yardstick only, O(n²) by definition).
 
 Equality with the HOF forms is property-tested (including zero-norm
-NULL-cosine ordering and duplicate-vector rounding ties); dispatch
-stays with the callers — these kernels win at every scale measured,
-but the HOF forms remain the no-Python-worker default for tiny inputs
-and as the executable specification.
+NULL-cosine ordering and duplicate-vector rounding ties).  Only
+:func:`brute_topk` runs in production (``knn.brute_force_topk``'s
+default).  The r11 A/B kept the HOF sign fold and the bucket self-join
+for sign-LSH, and the all-pairs baseline is a test yardstick, so
+:func:`plane_signs`, :func:`pairs_threshold` and
+:func:`lsh_grouped_topk` are the second implementations the tests pin
+those forms against.
 """
 
 from __future__ import annotations
@@ -343,10 +346,9 @@ def pairs_threshold(
     like ``brute_topk``'s query collect, the bounded contract is
     enforced, not just documented: above ``max_corpus_rows`` the
     collect raises instead of silently pressuring driver memory.
-    This is the documented O(n²) yardstick (reachable only via
-    explicit ``method='gemm'``); the scale path for all-pairs
-    similarity is the banded/bucketed family (dedup.semantic,
-    minhash/simhash LSH).
+    This is the documented O(n²) yardstick (only tests call it); the
+    scale path for all-pairs similarity is the banded/bucketed family
+    (dedup.semantic, minhash LSH).
 
     ``chunked=True`` is the multi-pass escape hatch (VERDICT r14 #6):
     only the BROADCAST side is sliced into md5 buckets — each pass
@@ -404,8 +406,8 @@ def _pairs_threshold_pass(
             f"pairs_threshold: corpus exceeds {max_corpus_rows} rows — "
             "the all-pairs GEMM yardstick collects and broadcasts the "
             "full corpus (bounded by contract); use the banded scale "
-            "paths (dedup.semantic semantic_dedup_pairs, minhash/simhash "
-            "LSH) for corpora beyond yardstick scale, or chunked=True "
+            "paths (dedup.semantic semantic_dedup_removed, minhash LSH) "
+            "for corpora beyond yardstick scale, or chunked=True "
             "for the multi-pass escape hatch"
         )
     if not rows:
@@ -475,9 +477,9 @@ def lsh_grouped_topk(
     k: int,
 ) -> DataFrame:
     """(query_id, neighbor_id, sim, rank) — per-bucket exact top-k for
-    sign-LSH search (``knn.lsh_topk``'s scorer): ``vecs`` carries
-    (id, vec, nrm, bucket); each vector's candidate set is exactly its
-    own bucket (ONE signature per vector), so the per-query top-k is
+    sign-LSH search (the grouped twin of ``knn.lsh_topk``'s bucket
+    self-join): ``vecs`` carries (id, vec, nrm, bucket); each vector's
+    candidate set is exactly its own bucket (ONE signature per vector), so the per-query top-k is
     computable ENTIRELY inside the bucket group — one bucket-keyed
     exchange, one cosine matmul per bucket (row-chunked), tie-band
     exact rounded sims, ranks emitted in-group with the HOF form's

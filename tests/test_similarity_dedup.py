@@ -10,8 +10,16 @@ from pyspark.sql import functions as F
 
 from hadoop_20_warehouse_spark.catalog import load_table
 from hadoop_20_warehouse_spark.dedup import embedding as EMB
+from hadoop_20_warehouse_spark.dedup import semantic as SEM
+from hadoop_20_warehouse_spark.similarity import assign as ASSIGN
 from hadoop_20_warehouse_spark.similarity import ivf as IVF
-from hadoop_20_warehouse_spark.similarity.knn import brute_force_topk
+from hadoop_20_warehouse_spark.similarity import pq as PQ
+from hadoop_20_warehouse_spark.similarity.knn import (
+    _dot,
+    _norm,
+    _safe_div,
+    brute_force_topk,
+)
 
 
 @pytest.fixture(scope="module")
@@ -473,9 +481,95 @@ def test_embedding_group_centroid_matches_numpy(spark, emb):
 # ---------------------------------------------------------------------------
 # GEMM-batched centroid assignment (similarity/assign.py): bit-identity
 # with the HOF argmin is the load-bearing property — the DuckDB oracles
-# hash downstream results, so the two physical strategies must agree on
-# every row, including rounding-boundary ties, exact-duplicate vectors,
-# and NULL cosines (zero norms).
+# hash downstream results, so the production kernel must agree with the
+# reference on every row, including rounding-boundary ties,
+# exact-duplicate vectors, NULL cosines (zero norms) and NULL vectors.
+# The HOF argmin lives here as that reference: each equivalence test
+# runs the production function once as-is and once with assign_topn
+# swapped for hof_assign_topn.
+
+
+def hof_assign_topn(
+    corpus, cents, id_col="vec_id", vec_col="embedding", nprobe=1,
+    include_resid=False, include_vec=False,
+):
+    """``assign.assign_topn``'s contract as the row-local broadcast-HOF
+    argmin: the k centroids travel as ONE array row, each vector sorts
+    its k (negsim, cid[, cv]) scores and explodes the nprobe best."""
+    scored = corpus.select(
+        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("_vn")
+    ).crossJoin(F.broadcast(IVF._centroid_array(cents)))
+    scorer = IVF._scorer(F.col(vec_col), F.col("_vn"), include_cv=include_resid)
+    top = scored.select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.posexplode(
+            F.slice(F.array_sort(F.transform(F.col("cs"), scorer)), 1, nprobe)
+        ).alias("pos", "p"),
+    )
+    cols = [
+        F.col(id_col),
+        F.col("p")["cid"].alias("centroid_id"),
+        (F.col("pos") + 1).cast("int").alias("crank"),
+    ]
+    if include_vec:
+        cols.append(F.col(vec_col))
+    if include_resid:
+        cols.append(
+            F.zip_with(
+                F.col(vec_col), F.col("p")["cv"],
+                lambda x, y: x.cast("double") - y.cast("double"),
+            ).alias("resid")
+        )
+    return top.select(*cols)
+
+
+def join_pairs(tagged, id_col, vec_col, threshold):
+    """``semantic._pairs_grouped``'s contract as the cell-keyed
+    self-join with a per-pair HOF cosine — the reference the per-cell
+    GEMM form must equal, emitted rounded sims included."""
+
+    def side(i, v, n):
+        return tagged.select(
+            F.col(id_col).alias(i),
+            F.col("centroid_id").alias("cell_id"),
+            F.col(vec_col).alias(v),
+            F.col("nrm").alias(n),
+        )
+
+    return (
+        side("id_a", "va", "na")
+        .join(side("id_b", "vb", "nb"), on="cell_id")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select(
+            "cell_id",
+            "id_a",
+            "id_b",
+            F.round(
+                _safe_div(_dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")),
+                6,
+            ).alias("sim"),
+        )
+        .filter(F.col("sim") >= threshold)
+    )
+
+
+def gemm_and_hof(monkeypatch, build, key=tuple):
+    """Sorted rows of ``build()`` with the production assign, then with
+    the HOF reference swapped in."""
+    gemm = sorted(map(key, build().collect()))
+    monkeypatch.setattr(ASSIGN, "assign_topn", hof_assign_topn)
+    return gemm, sorted(map(key, build().collect()))
+
+
+def grouped_and_join(monkeypatch, df, **kw):
+    """Sorted SemDeDup removed sets with the production pair stage,
+    then with the self-join reference swapped in."""
+    grouped = sorted(map(tuple, SEM.semantic_dedup_removed(df, **kw).collect()))
+    monkeypatch.setattr(SEM, "_pairs_grouped", join_pairs)
+    return grouped, sorted(
+        map(tuple, SEM.semantic_dedup_removed(df, **kw).collect())
+    )
 
 
 @pytest.fixture(scope="module")
@@ -502,35 +596,103 @@ def adversarial_vecs(spark):
     ).cache()
 
 
+@pytest.fixture(scope="module")
+def null_vecs(spark, adversarial_vecs):
+    """``adversarial_vecs`` plus 20 NULL embeddings (ids -20..-1).  The
+    sampled centroid table holds none of them at 8 centroids, id -4 at
+    16 and 24 (then the smallest centroid id, which every all-NULL-
+    cosine row picks first), and -15/-10/-4 at 64."""
+    nulls = spark.range(-20, 0).select(
+        F.col("id").alias("vec_id"),
+        F.lit(None).cast("array<double>").alias("embedding"),
+    )
+    return adversarial_vecs.unionByName(nulls).cache()
+
+
 @pytest.mark.parametrize("k,nprobe", [(8, 1), (32, 2), (16, 5), (64, 3)])
-def test_gemm_assign_matches_hof_on_real_embeddings(spark, emb, k, nprobe):
-    h = IVF._cells(emb, "vec_id", "embedding", k, nprobe, method="hof")
-    g = IVF._cells(emb, "vec_id", "embedding", k, nprobe, method="gemm")
-    assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
+def test_gemm_assign_matches_hof_on_real_embeddings(
+    spark, emb, monkeypatch, k, nprobe
+):
+    g, h = gemm_and_hof(
+        monkeypatch, lambda: IVF._cells(emb, "vec_id", "embedding", k, nprobe)
+    )
+    assert g == h
 
 
 @pytest.mark.parametrize("k,nprobe", [(8, 1), (50, 2), (64, 4)])
-def test_gemm_assign_matches_hof_adversarial(spark, adversarial_vecs, k, nprobe):
-    h = IVF._cells(adversarial_vecs, "vec_id", "embedding", k, nprobe, method="hof")
-    g = IVF._cells(adversarial_vecs, "vec_id", "embedding", k, nprobe, method="gemm")
-    assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
+def test_gemm_assign_matches_hof_adversarial(
+    spark, adversarial_vecs, monkeypatch, k, nprobe
+):
+    g, h = gemm_and_hof(
+        monkeypatch,
+        lambda: IVF._cells(adversarial_vecs, "vec_id", "embedding", k, nprobe),
+    )
+    assert g == h
 
 
-def test_gemm_resid_matches_hof(spark, adversarial_vecs):
+@pytest.mark.parametrize("k,nprobe", [(8, 1), (24, 2), (64, 4)])
+def test_gemm_assign_matches_hof_null_vecs(spark, null_vecs, monkeypatch, k, nprobe):
+    """NULL vectors take the centroid-id-ordered cells; a NULL
+    centroid's cosine is NULL, so it ranks behind every finite one."""
+    g, h = gemm_and_hof(
+        monkeypatch,
+        lambda: IVF._cells(null_vecs, "vec_id", "embedding", k, nprobe, carry_vec=True),
+        key=lambda r: (r[0], r[1], r[2], None if r[3] is None else tuple(r[3]), r[4]),
+    )
+    assert g == h
+    assert len(g) == 420 * nprobe
+
+
+def _resid_key(r):
+    return (
+        r["vec_id"], r["cell_id"], None if r["resid"] is None else tuple(r["resid"])
+    )
+
+
+def test_gemm_resid_matches_hof(spark, adversarial_vecs, monkeypatch):
     """The IVF-PQ assignment+residual path: winner AND the exact
     (v − centroid) doubles must agree element-for-element."""
-    from hadoop_20_warehouse_spark.similarity import pq as PQ
-
     cents = IVF.centroids(adversarial_vecs, "vec_id", "embedding", 24)
-    h = PQ._assign_with_centroid(
-        adversarial_vecs, cents, "vec_id", "embedding", method="hof"
+    g, h = gemm_and_hof(
+        monkeypatch,
+        lambda: PQ._assign_with_centroid(
+            adversarial_vecs, cents, "vec_id", "embedding"
+        ),
+        key=_resid_key,
     )
-    g = PQ._assign_with_centroid(
-        adversarial_vecs, cents, "vec_id", "embedding", method="gemm"
+    assert g == h
+
+
+def test_gemm_resid_matches_hof_null_vecs(spark, null_vecs, monkeypatch):
+    """A NULL vector, or a vector whose winning centroid is NULL, has a
+    NULL residual."""
+    cents = IVF.centroids(null_vecs, "vec_id", "embedding", 24)
+    g, h = gemm_and_hof(
+        monkeypatch,
+        lambda: PQ._assign_with_centroid(null_vecs, cents, "vec_id", "embedding"),
+        key=_resid_key,
     )
-    hk = sorted((r["vec_id"], r["cell_id"], tuple(r["resid"])) for r in h.collect())
-    gk = sorted((r["vec_id"], r["cell_id"], tuple(r["resid"])) for r in g.collect())
-    assert hk == gk
+    assert g == h
+    null_resid = {r[0] for r in g if r[2] is None}
+    assert set(range(-20, 0)) < null_resid  # zero vectors pick NULL centroid -4
+
+
+def test_gemm_assign_rejects_bad_vectors(spark, adversarial_vecs):
+    """A vector of the wrong length fails its task naming the id; a
+    centroid table with no vector at all fails at plan build."""
+    short = spark.createDataFrame(
+        [(7, [1.0, 2.0, 3.0])], "vec_id bigint, embedding array<double>"
+    )
+    cents = IVF.centroids(adversarial_vecs, "vec_id", "embedding", 8)
+    with pytest.raises(Exception, match="vec_id=7 has length 3, centroids have length 64"):
+        ASSIGN.assign_topn(short, cents).collect()
+    all_null = cents.select(
+        "centroid_id",
+        F.lit(None).cast("array<double>").alias("cv"),
+        F.lit(None).cast("double").alias("cn"),
+    )
+    with pytest.raises(ValueError, match="every centroid vector is NULL"):
+        ASSIGN.assign_topn(adversarial_vecs, all_null)
 
 
 def test_round6_scaled_matches_spark_round(spark, emb):
@@ -566,42 +728,38 @@ def test_round6_scaled_matches_spark_round(spark, emb):
         assert got == round(want * 1e6), lit
 
 
-def test_train_centroids_gemm_matches_hof(spark, emb):
-    h = IVF.train_centroids(emb, k=16, iters=2, method="hof")
-    g = IVF.train_centroids(emb, k=16, iters=2, method="gemm")
-    hk = sorted((r["centroid_id"], tuple(r["cv"]), r["cn"]) for r in h.collect())
-    gk = sorted((r["centroid_id"], tuple(r["cv"]), r["cn"]) for r in g.collect())
-    assert hk == gk
+def test_train_centroids_gemm_matches_hof(spark, emb, monkeypatch):
+    g, h = gemm_and_hof(
+        monkeypatch,
+        lambda: IVF.train_centroids(emb, k=16, iters=2),
+        key=lambda r: (r["centroid_id"], tuple(r["cv"]), r["cn"]),
+    )
+    assert g == h
 
 
 @pytest.mark.parametrize("cells,tau", [(32, 0.35), (8, 0.2)])
-def test_semantic_pairs_grouped_matches_join(spark, emb, cells, tau):
+def test_semantic_pairs_grouped_matches_join(spark, emb, monkeypatch, cells, tau):
     """The per-cell-GEMM pairwise stage must reproduce the self-join
     form exactly — including the emitted rounded sim doubles, which
     the oracle hashes."""
-    from hadoop_20_warehouse_spark.dedup import semantic as SEM
-
-    j = SEM.semantic_dedup_removed(
-        emb, num_cells=cells, threshold=tau, pair_method="join"
-    )
-    g = SEM.semantic_dedup_removed(
-        emb, num_cells=cells, threshold=tau, pair_method="grouped"
-    )
-    assert sorted(map(tuple, j.collect())) == sorted(map(tuple, g.collect()))
+    g, j = grouped_and_join(monkeypatch, emb, num_cells=cells, threshold=tau)
+    assert g == j
 
 
 def test_semantic_pairs_grouped_matches_join_adversarial(
-    spark, adversarial_vecs
+    spark, adversarial_vecs, monkeypatch
 ):
-    from hadoop_20_warehouse_spark.dedup import semantic as SEM
+    g, j = grouped_and_join(
+        monkeypatch, adversarial_vecs, num_cells=24, threshold=0.3
+    )
+    assert g == j
 
-    j = SEM.semantic_dedup_removed(
-        adversarial_vecs, num_cells=24, threshold=0.3, pair_method="join"
-    )
-    g = SEM.semantic_dedup_removed(
-        adversarial_vecs, num_cells=24, threshold=0.3, pair_method="grouped"
-    )
-    assert sorted(map(tuple, j.collect())) == sorted(map(tuple, g.collect()))
+
+def test_semantic_pairs_grouped_matches_join_null_vecs(spark, null_vecs, monkeypatch):
+    """NULL-vector rows pair with nothing (their cosine is NULL)."""
+    g, j = grouped_and_join(monkeypatch, null_vecs, num_cells=24, threshold=0.3)
+    assert g == j
+    assert g and all(r[0] >= 0 and r[2] >= 0 for r in g)
 
 
 # ---------------------------------------------------------------------------
@@ -612,7 +770,7 @@ def test_plane_signs_matches_hof(spark, emb, adversarial_vecs):
     from hadoop_20_warehouse_spark.similarity import scores as SC
 
     for df in (emb, adversarial_vecs):
-        h = EMB.sign_buckets(df, "vec_id", "embedding", 4, 8, 64, method="hof")
+        h = EMB.sign_buckets(df, "vec_id", "embedding", 4, 8, 64)
         g = SC.plane_signs(df, "vec_id", "embedding", 4, 8, 64)
         assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
 
@@ -634,17 +792,24 @@ def test_pairs_threshold_gemm_matches_hof(spark, emb, adversarial_vecs):
     from hadoop_20_warehouse_spark.similarity import scores as SC
 
     for df, tau in ((emb, 0.3), (adversarial_vecs, 0.3)):
-        h = EMB.brute_force_pairs(df, threshold=tau, method="hof")
+        h = EMB.brute_force_pairs(df, threshold=tau)
         g = SC.pairs_threshold(df, "vec_id", "embedding", tau)
         assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
 
 
 def test_lsh_grouped_matches_join(spark, emb, adversarial_vecs):
-    from hadoop_20_warehouse_spark.similarity.knn import lsh_topk
+    from hadoop_20_warehouse_spark.similarity.knn import bucket_sig_column, lsh_topk
+    from hadoop_20_warehouse_spark.similarity.scores import lsh_grouped_topk
 
     for df, k in ((emb, 5), (adversarial_vecs, 4)):
-        j = lsh_topk(df, k=k, method="join")
-        g = lsh_topk(df, k=k, method="grouped")
+        j = lsh_topk(df, k=k)
+        vecs = df.select(
+            "vec_id",
+            "embedding",
+            _norm(F.col("embedding")).alias("nrm"),
+            bucket_sig_column("embedding", 8, 64).alias("bucket"),
+        )
+        g = lsh_grouped_topk(vecs, "vec_id", "embedding", k)
         assert sorted(map(tuple, j.collect())) == sorted(map(tuple, g.collect()))
 
 
