@@ -174,7 +174,6 @@ def minhash_lsh_pairs(
     n_hashes: int = DEFAULT_N_HASHES,
     bands: int = DEFAULT_BANDS,
     shingle_width: int = DEFAULT_SHINGLE,
-    persist_signatures: bool = True,
     with_jaccard: bool = True,
 ) -> DataFrame:
     """Full pipeline → (id_a, id_b, est_jaccard) where est_jaccard is
@@ -201,22 +200,19 @@ def minhash_lsh_pairs(
     function of the pair, so distinct() over (id_a, id_b, est) equals
     the old attach-after-distinct exactly.
 
-    ``persist_signatures`` (r19 optimization round, per r18 ADVICE)
-    now gates a generation-bounded persist of the BAND frame: the
-    band self-join consumes bands_df on both sides, whose
-    differently-aliased exchanges defeat stage reuse (the r18
-    explain showed two full text-scan → shingle → md5 → signature
-    pipelines, one per side), so without the persist the most
-    expensive map pass in the operator executes twice — once more in
-    the broadcast build when one side broadcasts."""
-    from hadoop_20_warehouse_spark.session import persist_generation
-
+    The band self-join consumes the band frame on both sides, and
+    differently-aliased sides defeat exchange reuse (the r18 explain
+    showed two full text-scan → shingle → md5 → signature pipelines,
+    one per side).  So the band frame is hash-partitioned on the join
+    keys BEFORE it is aliased: both sides then read one exchange,
+    which Spark's exchange reuse computes once per call, and the join
+    adds no shuffle of its own.  A persist would share the frame too,
+    but through a cache that outlives the call (and, the plan being
+    equal, is read again by the next call)."""
     sig = minhash_signature_rowlocal(df, id_col, text_col, n_hashes, shingle_width)
     if not with_jaccard:
         bands_df = band_signatures(sig, id_col, n_hashes, bands)
-        if persist_signatures:
-            bands_df = persist_generation("minhash_bands", bands_df)
-        return candidate_pairs(bands_df, id_col)
+        return candidate_pairs(bands_df.repartition("band_idx", "band_hash"), id_col)
     rows_per_band = n_hashes // bands
     band_structs = [
         F.struct(
@@ -238,9 +234,7 @@ def minhash_lsh_pairs(
         F.col(id_col), *mcols, F.explode(F.array(*band_structs)).alias("blk")
     ).select(
         F.col(id_col), *mcols, F.col("blk.band_idx"), F.col("blk.band_hash")
-    )
-    if persist_signatures:
-        bands_df = persist_generation("minhash_bands", bands_df)
+    ).repartition("band_idx", "band_hash")
     a = bands_df.select(
         F.col(id_col).alias("id_a"), "band_idx", "band_hash",
         *[F.col(f"m{i}").alias(f"a{i}") for i in range(n_hashes)],

@@ -178,12 +178,20 @@ def scale_quant(table: np.ndarray, quality: int) -> np.ndarray:
 # were rebuilt per image (cProfile: ~30% of decode wall).  The cache
 # key is the exact (bits, values) content, so a nonstandard DHT simply
 # occupies its own slot; the cap bounds memory against adversarial
-# streams of distinct tables (on overflow the cache resets —
-# correctness is unaffected, the table is just rebuilt).
+# streams of distinct tables (when full, the oldest entry is evicted —
+# correctness is unaffected, an evicted table is just rebuilt).
 _TABLE_CACHE_MAX = 64
 _DECODE_TABLE_CACHE: dict[tuple, dict] = {}
 _ENCODE_TABLE_CACHE: dict[tuple, dict] = {}
 _DECODE_LUT_CACHE: dict[tuple, list] = {}
+
+
+def _memo_put(cache: dict, key, value) -> None:
+    """Store ``value`` in a capped table cache, evicting the oldest
+    entry (dicts keep insertion order) when the cache is full."""
+    if len(cache) >= _TABLE_CACHE_MAX:
+        del cache[next(iter(cache))]
+    cache[key] = value
 
 
 def _build_decode_table(bits, values) -> dict[tuple[int, int], int]:
@@ -201,9 +209,7 @@ def _build_decode_table(bits, values) -> dict[tuple[int, int], int]:
             code += 1
             k += 1
         code <<= 1
-    if len(_DECODE_TABLE_CACHE) >= _TABLE_CACHE_MAX:
-        _DECODE_TABLE_CACHE.clear()
-    _DECODE_TABLE_CACHE[key] = table
+    _memo_put(_DECODE_TABLE_CACHE, key, table)
     return table
 
 
@@ -215,16 +221,25 @@ def _build_decode_lut(bits, values) -> list:
     replaces the per-bit dict probes of ``_build_decode_table`` (the
     cProfile-dominant decode term after the r18 memoization).  Built
     with two numpy fills + one ``tolist`` and memoized per DHT
-    content under the same size cap as the dict tables."""
+    content under the same size cap as the dict tables.
+
+    A malformed DHT raises ``ValueError``: fewer than 16 code counts, a
+    value list shorter than ``sum(bits)``, or an over-full table (a
+    code reaching ``1 << length``, which would overlap LUT ranges and
+    decode a corrupt stream to a bogus symbol)."""
     key = (tuple(bits), tuple(values))
     cached = _DECODE_LUT_CACHE.get(key)
     if cached is not None:
         return cached
+    if len(bits) != 16 or len(values) < sum(bits):
+        raise ValueError("truncated DHT segment in JPEG")
     lut = np.zeros(1 << 16, dtype=np.int32)
     code = 0
     k = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
+            if code >= 1 << length:
+                raise ValueError("over-full Huffman table in JPEG DHT")
             lo = code << (16 - length)
             hi = (code + 1) << (16 - length)
             lut[lo:hi] = (length << 8) | values[k]
@@ -232,9 +247,7 @@ def _build_decode_lut(bits, values) -> list:
             k += 1
         code <<= 1
     out = lut.tolist()
-    if len(_DECODE_LUT_CACHE) >= _TABLE_CACHE_MAX:
-        _DECODE_LUT_CACHE.clear()
-    _DECODE_LUT_CACHE[key] = out
+    _memo_put(_DECODE_LUT_CACHE, key, out)
     return out
 
 
@@ -245,9 +258,7 @@ def _build_encode_table(bits, values) -> dict[int, tuple[int, int]]:
     if cached is not None:
         return cached
     table = {v: k for k, v in _build_decode_table(bits, values).items()}
-    if len(_ENCODE_TABLE_CACHE) >= _TABLE_CACHE_MAX:
-        _ENCODE_TABLE_CACHE.clear()
-    _ENCODE_TABLE_CACHE[key] = table
+    _memo_put(_ENCODE_TABLE_CACHE, key, table)
     return table
 
 

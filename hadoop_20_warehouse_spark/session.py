@@ -96,12 +96,36 @@ def get_session(
 
     At 100 TB the same code runs with ``master`` pointing at a cluster
     manager and ``shuffle_partitions`` sized ~2-3x total executor cores
-    (AQE coalesces down); nothing else here is local-mode specific.
+    (AQE coalesces down); only the Python worker daemon below is
+    local-mode specific.
+
+    Local masters (``local``, ``local[N]``) start Python workers from
+    ``hadoop_20_warehouse_spark.pydaemon`` instead of ``pyspark.daemon``,
+    and put this package's parent directory first on the workers'
+    ``PYTHONPATH`` (ahead of any ``spark.executorEnv.PYTHONPATH`` in
+    ``extra_conf``) so the daemon can be imported.  On CPython 3.11 and
+    3.12 each Python task's ``importlib.invalidate_caches()`` makes
+    every zip importer re-read its archive's directory -- most of them
+    over ``pyspark.zip`` -- which cost 0.2 s of CPU per task on a reused
+    worker (4-core host).  The daemon re-reads an archive only when it changed on
+    disk, which is what CPython 3.13 does by deferring the re-read to
+    the next lookup.  Other masters keep Spark's default daemon: an
+    executor there may not be able to import this package when it
+    starts its daemon, and a failed import would fail every Python task.
     """
     cpus = default_parallelism()
+    master = master or f"local[{cpus}]"
+    extra_conf = dict(extra_conf or {})
+    if master == "local" or master.startswith("local["):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        key = "spark.executorEnv.PYTHONPATH"
+        extra_conf[key] = os.pathsep.join(p for p in (root, extra_conf.get(key)) if p)
+        extra_conf.setdefault(
+            "spark.python.daemon.module", "hadoop_20_warehouse_spark.pydaemon"
+        )
     builder = (
         SparkSession.builder.appName(_APP_NAME)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         # AQE: runtime re-planning — partition coalescing, skew-join
         # splitting, broadcast-join conversion from runtime stats.
         .config("spark.sql.adaptive.enabled", "true")
@@ -131,9 +155,8 @@ def get_session(
         # convert to microsecond TimestampType (catalog.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
@@ -253,6 +276,11 @@ def persist_generation(tag: str, *dfs, keep: int = 2, warn_on_evict: bool = Fals
     loud: the caller learns the contract degraded to at-least-once
     instead of silently re-running the mapper (r7 ADVICE).
 
+    Spark's CacheManager keeps ONE entry per semantically equal plan,
+    so an evicted frame whose plan ``sameSemantics`` a live
+    generation's (any tag) is dropped from the registry without
+    ``unpersist()`` -- unpersisting it would uncache the live one.
+
     Returns the persisted frame (or tuple of frames)."""
     out = [df.persist() for df in dfs]
     with _PERSIST_LOCK:
@@ -260,6 +288,8 @@ def persist_generation(tag: str, *dfs, keep: int = 2, warn_on_evict: bool = Fals
         gens.append(list(out))
         n_drop = max(0, len(gens) - max(keep, 1))
         dropped, gens[:n_drop] = gens[:n_drop], []
+        live = [df for tag_gens in _PERSIST_GENERATIONS.values()
+                for gen in tag_gens for df in gen]
     if dropped and warn_on_evict:
         _LOG.warning(
             "persist_generation(%r): evicting %d generation(s) beyond "
@@ -273,7 +303,8 @@ def persist_generation(tag: str, *dfs, keep: int = 2, warn_on_evict: bool = Fals
     for gen in dropped:
         for old in gen:
             try:
-                old.unpersist()
+                if not any(old.sameSemantics(df) for df in live):
+                    old.unpersist()
             except Exception:  # session torn down, cache already gone
                 _LOG.debug(
                     "persist_generation(%r): unpersist of an evicted "

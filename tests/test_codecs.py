@@ -886,3 +886,79 @@ def test_ffmpeg_real_decode_parity():
     assert len(out) == 2
     for png, v in zip(out, (60, 62)):
         assert abs(int(decode_png(png).mean()) - v) <= 2
+
+
+def _replace_first_dht(payload: bytes, body: bytes) -> bytes:
+    """``payload`` with its first DHT segment's body replaced."""
+    import struct
+
+    i = payload.index(b"\xff\xc4")
+    (seg_len,) = struct.unpack_from(">H", payload, i + 2)
+    return (
+        payload[: i + 2]
+        + struct.pack(">H", len(body) + 2)
+        + body
+        + payload[i + 2 + seg_len :]
+    )
+
+
+def test_jpeg_malformed_dht_raises_value_error():
+    """An over-full canonical table (three 1-bit codes) and a value
+    list shorter than sum(bits) are rejected when the DHT is read,
+    directly and through decode_jpeg."""
+    import numpy as np
+
+    from hadoop_20_warehouse_spark.multimodal.jpeg import (
+        _build_decode_lut,
+        decode_jpeg,
+        encode_jpeg,
+    )
+
+    over_full = [3] + [0] * 15
+    with pytest.raises(ValueError, match="over-full"):
+        _build_decode_lut(over_full, [0, 1, 2])
+    short = [0, 3] + [0] * 14
+    with pytest.raises(ValueError, match="truncated DHT"):
+        _build_decode_lut(short, [0, 1])
+
+    good = encode_jpeg(np.full((8, 8), 128, dtype=np.uint8))
+    with pytest.raises(ValueError, match="over-full"):
+        decode_jpeg(_replace_first_dht(good, bytes([0x00, *over_full, 0, 1, 2])))
+    with pytest.raises(ValueError, match="truncated DHT"):
+        decode_jpeg(_replace_first_dht(good, bytes([0x00, *short, 0, 1])))
+
+
+def test_jpeg_decode_lut_matches_canonical_code_table():
+    """Every valid table's LUT holds (length << 8) | symbol over exactly
+    the 16-bit range each canonical code prefixes, and 0 elsewhere."""
+    from hadoop_20_warehouse_spark.multimodal import jpeg as J
+
+    tables = [
+        (J._DC_LUMA_BITS, J._DC_LUMA_VALS),
+        (J._AC_LUMA_BITS, J._AC_LUMA_VALS),
+        (J._DC_CHROMA_BITS, J._DC_CHROMA_VALS),
+        (J._AC_CHROMA_BITS, J._AC_CHROMA_VALS),
+        (J._AC_PROG_BITS, J._AC_PROG_VALS),
+        ([2] + [0] * 15, [7, 9]),  # a full 1-bit table
+    ]
+    for bits, vals in tables:
+        want = [0] * (1 << 16)
+        for (length, code), sym in J._build_decode_table(bits, vals).items():
+            lo = code << (16 - length)
+            want[lo : lo + (1 << (16 - length))] = [(length << 8) | sym] * (
+                1 << (16 - length)
+            )
+        assert J._build_decode_lut(list(bits), list(vals)) == want
+
+
+def test_jpeg_table_cache_evicts_oldest_at_cap(monkeypatch):
+    from hadoop_20_warehouse_spark.multimodal import jpeg as J
+
+    monkeypatch.setattr(J, "_DECODE_LUT_CACHE", {})
+    bits = [0, 2] + [0] * 14
+    keys = []
+    for sym in range(J._TABLE_CACHE_MAX + 5):
+        J._build_decode_lut(bits, [sym, 255])
+        keys.append((tuple(bits), (sym, 255)))
+    assert len(J._DECODE_LUT_CACHE) == J._TABLE_CACHE_MAX
+    assert list(J._DECODE_LUT_CACHE) == keys[5:]

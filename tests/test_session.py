@@ -257,6 +257,22 @@ def test_persist_generation_eviction_warns_when_asked(spark, caplog):
     spark.catalog.clearCache()
 
 
+def test_persist_generation_keeps_newest_cached_across_equal_plans(spark):
+    """Spark caches semantically equal plans under ONE entry, so
+    evicting an older generation of the same plan must not unpersist
+    it: the newest generation stays cached after every call."""
+    from hadoop_20_warehouse_spark.session import persist_generation
+
+    spark.catalog.clearCache()
+    for call in range(1, 5):
+        newest = persist_generation(
+            "same_plan_test", spark.range(7).selectExpr("id * 3 AS x"), keep=2
+        )
+        assert newest.storageLevel.useMemory or newest.storageLevel.useDisk, call
+        assert newest.count() == 7
+    spark.catalog.clearCache()
+
+
 def test_fresh_subdir_generations_are_unique_and_bounded(tmp_path):
     """_fresh_subdir must hand out a UNIQUE path per invocation (two
     concurrent tenants of the same staging query must not clobber each

@@ -1040,3 +1040,22 @@ def test_eval_sample_never_picks_two_near_dups(spark, tmp_path):
         assert row.n_members == 6
     # every pick is unique and ranks are dense from 1
     assert sorted(r.rk for r in got) == list(range(1, len(got) + 1))
+
+
+@pytest.mark.parametrize("with_jaccard", [True, False])
+def test_minhash_band_frame_computed_once_per_call(spark, sf_dir, with_jaccard):
+    """Both sides of the band self-join read ONE hash-partitioned band
+    frame: AQE's final plan reuses its exchange, and the signature
+    projection appears once (not once per side, and not through a
+    cache that outlives the call)."""
+    from hadoop_20_warehouse_spark.dedup.minhash import minhash_lsh_pairs
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = minhash_lsh_pairs(docs, "doc_id", "text", with_jaccard=with_jaccard)
+    pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "ReusedExchange" in final, final
+    assert "InMemoryTableScan" not in final, final
+    sig_projections = [ln for ln in final.splitlines() if "array_min(transform(" in ln]
+    assert len(sig_projections) == 1, final
