@@ -16,9 +16,10 @@ Scale notes:
 - ``max_iterations`` bounds the loop; every round is checkpointed so
   long chains don't blow up plan depth at scale — executor-local by
   default, reliable (``checkpoint_dir``) for fault-tolerant runs.
-- The DuckDB oracle (``connected_components_sql``) is a recursive CTE
-  doing the same propagation — labels only decrease and the state
-  space is finite, so the recursion's UNION-dedup terminates.
+- The registered queries' DuckDB oracles (e.g.
+  ``inventory_llm._components_oracle``) are recursive CTEs doing the
+  same propagation — labels only decrease and the state space is
+  finite, so the recursion's UNION-dedup terminates.
 
 The reference has no graph operator (SURVEY.md §1.5); this is part of
 the LLM-pipeline extension (exact/near dedup at corpus scale).
@@ -183,31 +184,6 @@ def connected_components(
         stats["rounds"] = rounds
         stats["steps"] = steps
     return labels
-
-
-def connected_components_sql(edges_cte: str, src: str = "id_a", dst: str = "id_b") -> str:
-    """DuckDB oracle: recursive min-label propagation over the same
-    edges. ``edges_cte`` must define a relation named ``edges``."""
-    return f"""
-WITH RECURSIVE
-{edges_cte},
-und AS (
-  SELECT {src} AS u, {dst} AS v FROM edges
-  UNION
-  SELECT {dst} AS u, {src} AS v FROM edges
-),
-walk(node, component) AS (
-  SELECT u, u FROM und
-  UNION
-  SELECT und.u, walk.component
-  FROM und JOIN walk ON walk.node = und.v
-  WHERE walk.component < und.u
-),
-best AS (
-  SELECT node, MIN(component) AS component FROM walk GROUP BY node
-)
-SELECT node, component FROM best
-""".strip()
 
 
 def dedup_groups_from_pairs(

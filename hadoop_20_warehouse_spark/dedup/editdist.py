@@ -154,140 +154,3 @@ def fuzzy_edit_pairs(
         .orderBy("id_a", "id_b")
     )
 
-
-def fuzzy_edit_pairs_chunked(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_dist: int = 12,
-    chunk_w: int = 16,
-) -> DataFrame:
-    """(id_a, id_b, dist) under the CHUNK-SIGNATURE candidate scheme —
-    the second blocking key :func:`fuzzy_edit_pairs`'s docstring names
-    as the 100 TB remedy for dense length bands (the PassJoin /
-    pigeonhole family: Li, Deng & Feng 2011, "PASS-JOIN: a
-    partition-based method for similarity joins").
-
-    Pigeonhole: T edits touch at most T of a doc's fixed-width chunks
-    (an edit inside chunk k modifies it; indels BEFORE a chunk only
-    SHIFT its occurrence, absorbed by the ±T match window), so if the
-    shorter doc has >= T+1 full ``chunk_w``-wide chunks, at least one
-    chunk appears VERBATIM in the longer doc within ±T of its home
-    position.  Candidates therefore come from an EQUI-join on
-    (chunk_index, chunk_string) between the shorter side's chunks and
-    the longer side's position-windowed substrings — no per-length-
-    band pair enumeration, so a corpus where every doc is ~300 chars
-    (the shape that degrades length blocking toward quadratic) stays
-    linear-ish: emissions are ~(len/w)·(2T+1) rows per doc and the
-    join is selective on 16-char position-locked content.
-
-    Docs too short for the pigeonhole (fewer than T+1 full chunks,
-    i.e. len < w·(T+1)) fall back to plain length blocking AMONG the
-    short population (any pair whose shorter member is short has both
-    lengths <= w·(T+1)+T, so the fallback pool covers it) — the
-    scheme degrades gracefully instead of silently losing pairs.
-
-    Same output contract as fuzzy_edit_pairs; completeness of the
-    union of both candidate sources is proven against the brute-force
-    reference by the hypothesis property test (which draws corpora
-    straddling the long/short threshold), and both schemes produce
-    IDENTICAL results on the sf0.1 corpus and a synthetic dense band
-    (cross-validated, PLANS.md).
-
-    When to prefer which (measured): the L1-filtered length blocking
-    has a quadratic-in-band-density pair count but a ~150-integer-op
-    per-pair cost, so it WINS up to surprisingly dense bands (a 5k-doc
-    single-length band: 1.1 s vs 2.3 s chunked — ~12.6M pairs die in
-    the L1 filter faster than 2.5M substring emissions join); the
-    chunk scheme's linear emission term wins when band-pair count ×
-    per-pair cost exceeds ~(len/w)·(2T+1) emissions per doc — on this
-    host beyond ~10^8 same-band pairs, i.e. ~10x denser than the
-    measured point.  At 100 TB pick per telemetry; both are complete."""
-    T = max_dist
-    w = chunk_w
-    need = w * (T + 1)  # minimum length for the pigeonhole to bind
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.lower(F.coalesce(F.col(text_col), F.lit(""))).alias("tx"),
-    ).withColumn("ln", F.length("tx"))
-
-    long_docs = base.filter(F.col("ln") >= need)
-    # chunk side (the SHORTER doc of a candidate pair): full chunks only
-    segs = long_docs.select(
-        F.col("doc_id").alias("id_r"),
-        F.col("ln").alias("ln_r"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, ln div {w} - 1), "
-                f"k -> substring(tx, k * {w} + 1, {w}))"
-            )
-        ).alias("k", "chunk"),
-    )
-    # substring side (the LONGER doc): every width-w substring within
-    # ±T of each chunk's home position, clamped to the doc
-    subs = long_docs.select(
-        F.col("doc_id").alias("id_s"),
-        F.col("ln").alias("ln_s"),
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(0, ln div {w} - 1), "
-                f"k -> transform("
-                f"sequence(greatest(0, k * {w} - {T}), "
-                f"least(ln - {w}, k * {w} + {T})), "
-                f"j -> struct(k AS k, substring(tx, j + 1, {w}) AS chunk))))"
-            )
-        ).alias("e"),
-    ).select("id_s", "ln_s", F.col("e.k").alias("k"), F.col("e.chunk").alias("chunk"))
-    long_cand = (
-        segs.join(subs, ["k", "chunk"])
-        .filter(
-            (F.col("id_r") != F.col("id_s"))
-            & (F.col("ln_r") <= F.col("ln_s"))
-            & (F.col("ln_s") - F.col("ln_r") <= T)
-        )
-        .select(
-            F.least("id_r", "id_s").alias("id_a"),
-            F.greatest("id_r", "id_s").alias("id_b"),
-        )
-    )
-    # short fallback: any pair whose shorter member lacks T+1 full
-    # chunks has BOTH lengths <= need + T; length-BUCKET that pool
-    # (the fuzzy_edit_pairs blocking, W = T with the +1 overlap row)
-    W = max(T, 1)
-    short_pool = base.filter(F.col("ln") <= need + T).select(
-        "doc_id",
-        "ln",
-        F.explode(
-            F.array(
-                F.floor(F.col("ln") / W), F.floor(F.col("ln") / W) + 1
-            )
-        ).alias("blk"),
-    )
-    sa = short_pool.select(
-        F.col("doc_id").alias("id_a"), F.col("ln").alias("ln_a"), "blk"
-    )
-    sb = short_pool.select(
-        F.col("doc_id").alias("id_b"), F.col("ln").alias("ln_b"), "blk"
-    )
-    short_cand = (
-        sa.join(sb, "blk")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.abs(F.col("ln_a") - F.col("ln_b")) <= T)
-        )
-        .select("id_a", "id_b")
-    )
-    cand = long_cand.unionByName(short_cand).distinct()
-    ta = base.select(F.col("doc_id").alias("id_a"), F.col("tx").alias("tx_a"))
-    tb = base.select(F.col("doc_id").alias("id_b"), F.col("tx").alias("tx_b"))
-    return (
-        cand.join(ta, "id_a")
-        .join(tb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.levenshtein("tx_a", "tx_b", T).cast("long").alias("dist"),
-        )
-        .filter(F.col("dist") >= 0)
-        .orderBy("id_a", "id_b")
-    )

@@ -178,9 +178,9 @@ def brute_force_pairs(
 ) -> DataFrame:
     """Exact all-pairs baseline (id_a < id_b, sim >= threshold) — test
     yardstick only; O(n²), never the production path.  The crossJoin
-    form is the executable specification at yardstick scale;
-    similarity/scores.pairs_threshold is its bit-identical
-    batch×broadcast matmul twin."""
+    form is the executable specification at yardstick scale and the
+    one all-pairs scorer: the tests compare the banded production
+    paths against it."""
     vecs = df.select(
         F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("nrm")
     )

@@ -308,9 +308,9 @@ def q_dedup_fuzzy_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     population is bounded by the corpus length distribution (a skewed
     bucket — e.g. all docs ~300 chars — degrades toward quadratic
     within that bucket in PAIR COUNT, each pair paying only ~150
-    codegen'd integer ops; the fix at 100 TB is a second blocking
-    key — a PassJoin chunk signature or rare-gram anchor — exactly
-    like MinHash banding adds rows to cut bucket width).
+    codegen'd integer ops).  That per-pair cost is why there is no
+    second blocking key: a PassJoin chunk-signature key lost even on a
+    dense 5k-doc single-length band, 2.3 s against 1.1 s (PLANS.md).
 
     Library form: dedup/editdist.fuzzy_edit_pairs (the hypothesis
     property test there proves candidate completeness against a

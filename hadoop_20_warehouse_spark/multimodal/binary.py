@@ -15,10 +15,11 @@ resize_image_real below).  Video (MP4) decode is NOT in this
 container (ffmpeg — re-checked every round), so for it
 ``decode_meta`` extracts real byte-level metadata (length, digest,
 magic sniff) and the ``*_stub`` paths derive deterministic fake
-dimensions from the digest — clearly marked; swap ``_fake_dims`` for
-an ffmpeg call in production. The Spark-side plumbing (schema,
-Arrow batching, partition-parallel UDF) is identical in both regimes
-and oracle-tested.
+dimensions from the digest (w = hex[:15] % 1024 + 1, h = hex[15:30]
+% 1024 + 1, computed inside each closure) — clearly marked; swap that
+computation for an ffmpeg call in production. The Spark-side plumbing
+(schema, Arrow batching, partition-parallel UDF) is identical in both
+regimes and oracle-tested.
 
 Scale notes: mapInPandas streams Arrow record batches; with binary
 payloads set ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a
@@ -47,15 +48,6 @@ except ImportError:
     HAVE_PIL = False
 
 
-def _fake_dims(digest_hex: str) -> tuple[int, int]:
-    """Deterministic stand-in dimensions derived from the content
-    digest (md5-hex → ints), so tests and the DuckDB oracle can check
-    the full pipeline without a codec."""
-    w = int(digest_hex[:15], 16) % 1024 + 1
-    h = int(digest_hex[15:30], 16) % 1024 + 1
-    return w, h
-
-
 def decode_image_real(payload: bytes) -> tuple[int, int]:
     """Real decode for the formats the container can parse
     (PPM/BMP/PNG/baseline JPEG — multimodal/codecs.py, jpeg.py);
@@ -71,8 +63,9 @@ def decode_image_real(payload: bytes) -> tuple[int, int]:
         return img.shape[1], img.shape[0]
     raise NotImplementedError(
         f"decoding '{fmt}' requires ffmpeg/PIL, not installed here; "
-        "decode_meta uses _fake_dims instead (ppm/bmp/png/jpeg/wav "
-        "decode IS real — see decode_image_meta/audio_features)"
+        "decode_meta uses digest-derived stand-in dims instead "
+        "(ppm/bmp/png/jpeg/wav decode IS real — see "
+        "decode_image_meta/audio_features)"
     )
 
 
@@ -135,7 +128,8 @@ def resize_stub(
     """Aspect-fit image resize plumbing: (id, width, height, out_width,
     out_height, resized_md5) via Arrow-batched mapInPandas.
 
-    Source dims come from the digest stub (``_fake_dims``); the fit
+    Source dims are the digest-derived stand-ins (module docstring),
+    so the DuckDB oracle can check the pipeline without a codec; the fit
     math is REAL and **integer-exact** (branch on tw·h ≤ th·w instead
     of comparing float scales, floor-divide for the scaled edge, never
     upscale) so the DuckDB oracle reproduces it bit-for-bit. The

@@ -153,11 +153,6 @@ for _k in range(8):
         )
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    """2-D inverse DCT of an 8x8 coefficient block (orthonormal)."""
-    return _DCT_C.T @ block @ _DCT_C
-
-
 def scale_quant(table: np.ndarray, quality: int) -> np.ndarray:
     """IJG quality scaling of a base quantization table (libjpeg's
     jpeg_quality_scaling): quality 50 returns the table verbatim —
@@ -505,9 +500,9 @@ def _decode_scan(
     # block's zigzag coefficients (a plain Python list from
     # _decode_block) into the progressive accumulator's layout, and
     # dequant + IDCT + upsample/color-convert run BATCHED over every
-    # block at once via _ProgressiveState.reconstruct — the einsum
-    # path whose bit-identity to the per-block _idct2 form is already
-    # pinned by the baseline-vs-progressive round-trip pytest.
+    # block at once via _ProgressiveState.reconstruct — the one
+    # einsum IDCT (C.T @ B @ C per block) that progressive scans use
+    # too, so both scan types reconstruct through the same code.
     data, rst_breaks, _ = _unstuff_scan(payload, pos)
     comps = frame["comps"]
     acc = _ProgressiveState(frame)

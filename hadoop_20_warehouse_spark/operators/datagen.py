@@ -9,8 +9,6 @@ without seeds-in-files:
   (examples/terasort/TeraGen.java:60).
 - ``random_text``: RandomTextWriter's word salad
   (examples/RandomTextWriter.java:82).
-- ``random_kv``: RandomWriter's random key/value bytes as hex strings
-  (examples/RandomWriter.java:85).
 """
 
 from __future__ import annotations
@@ -72,14 +70,3 @@ def random_text(
     ]
     return rng.select(F.concat_ws(" ", *picks).alias("line"))
 
-
-def random_kv(
-    spark: SparkSession, n_rows: int, key_len: int = 16, value_len: int = 64,
-    partitions: int | None = None,
-) -> DataFrame:
-    """(key, value) hex strings — RandomWriter shape."""
-    rng = spark.range(0, n_rows, numPartitions=partitions)
-    return rng.select(
-        _hex(F.col("id"), key_len).alias("key"),
-        _hex(F.col("id") + 777, value_len).alias("value"),
-    )

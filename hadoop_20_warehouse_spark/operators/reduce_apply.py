@@ -1,4 +1,4 @@
-"""Generic user reduce/map surfaces — the Mapper/Reducer class analog
+"""Generic user reduce surface — the Mapper/Reducer class analog
 (SURVEY.md §2.8).
 
 The reference's ultimate extension points were the ``Mapper`` and
@@ -9,14 +9,14 @@ MapRunnable, mapred/MapRunner.java).
 
 Spark-idiomatic equivalents, Arrow-batched (never row-at-a-time):
 
-- ``map_apply``   ≅ Mapper/MapRunnable: ``mapInPandas`` over the whole
-  partition iterator.
+- Mapper/MapRunnable ≅ Spark's own ``DataFrame.mapInPandas`` over the
+  whole partition iterator — no wrapper needed.
 - ``reduce_apply`` ≅ Reducer: ``groupBy().applyInPandas`` — the user
   function sees one full group as a pandas DataFrame, exactly like
   ``reduce(key, values)`` saw the sorted value iterator.
 
 Closure policy (see multimodal/binary.py): user functions passed in
-are cloudpickled; the wrappers here add nothing module-global, so a
+are cloudpickled; the wrapper here adds nothing module-global, so a
 self-contained user function ships by value and workers don't need
 this package importable.
 
@@ -28,20 +28,10 @@ batches and is safe at any size.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
-
-
-def map_apply(
-    df: DataFrame,
-    fn: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]],
-    schema: str,
-) -> DataFrame:
-    """Whole-partition map (MapRunnable semantics): ``fn`` consumes an
-    iterator of Arrow batches and yields output batches."""
-    return df.mapInPandas(fn, schema=schema)
 
 
 def reduce_apply(

@@ -2,11 +2,10 @@
 
 Two strategies:
 
-- ``brute_force_topk``: exact cosine top-k — cross join queries ×
-  corpus, dot/norm folded JVM-side (``aggregate``/``zip_with``), then
-  per-query top-k via window rank. The baseline; exact but
-  O(|Q|·|corpus|). Scales by keeping |Q| bounded per pass and
-  broadcasting the query set.
+- ``brute_force_topk``: exact cosine top-k — corpus batches scored
+  against the broadcast query matrix (similarity/scores.brute_topk),
+  then per-query top-k via window rank. The baseline; exact but
+  O(|Q|·|corpus|). Scales by keeping |Q| bounded per pass.
 - ``lsh_topk``: random-hyperplane (sign) LSH — b pseudo-random
   hyperplanes derived from md5 (deterministic, oracle-reproducible)
   give each vector a b-bit bucket; candidates = same-bucket pairs,
@@ -57,10 +56,6 @@ def _safe_div(num: Column, den: Column) -> Column:
     return num / F.nullif(den, F.lit(0.0))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _safe_div(_dot(a, b), _norm(a) * _norm(b))
-
-
 _DOT_SQL = "list_sum(list_transform(list_zip({a}, {b}), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
 
 
@@ -77,64 +72,26 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    method: str | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, sim, rank).
 
-    The query set is broadcast (bounded per pass); rank is over
-    (round(sim, 6) DESC, neighbor_id ASC) so ties — including exact
-    duplicate embeddings — resolve identically everywhere.
+    Rank is over (round(sim, 6) DESC, neighbor_id ASC) so ties —
+    including exact duplicate embeddings — resolve identically
+    everywhere; NULL sims (zero-norm or NULL vectors) rank last.
 
-    Two bit-identical strategies (property-tested): ``"gemm"``
-    (default) streams corpus batches against the broadcast query
-    matrix — one matmul per batch, per-query tie-band pruning, exact
-    rounded sims, then a window over O(partitions·|Q|·k) candidates
-    (similarity/scores.brute_topk; measured 2.5-3x at sf0.1 and the
-    gap grows with |Q|·N — this scorer prices every recall@k eval);
-    ``"hof"`` is the crossJoin + interpreted-fold executable
-    specification.
-
-    NOTE: the default gemm path COLLECTS the query set to the driver
-    before broadcasting (scores.brute_topk enforces a 1M-row cap and
-    raises above it); the hof path broadcasts without a driver-side
-    materialization — pick it (or chunk the queries into passes) when
-    the query frame is large.
+    The scorer (similarity/scores.brute_topk) streams corpus batches
+    against the broadcast query matrix — one matmul per batch,
+    per-query tie-band pruning, exact rounded sims, then a window over
+    O(partitions·|Q|·k) candidates (measured 2.5-3x over the crossJoin
+    fold at sf0.1, and the gap grows with |Q|·N — this scorer prices
+    every recall@k eval).  The query set is collected to the driver
+    before broadcasting, at most ``scores.MAX_QUERY_ROWS`` rows per
+    pass; a larger query set runs as several md5-sliced passes.
     """
     from hadoop_20_warehouse_spark.session import scatter
+    from hadoop_20_warehouse_spark.similarity.scores import brute_topk
 
-    corpus = scatter(corpus)
-    if method is None or method == "gemm":
-        from hadoop_20_warehouse_spark.similarity.scores import brute_topk
-
-        return brute_topk(corpus, queries, id_col, vec_col, k)
-    # norms precomputed once per row (not per pair — at |Q|·|corpus|
-    # pairs that's the difference between 1 and 3 vector folds per pair)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nv"),
-        _norm(F.col(vec_col)).alias("nn"),
-    )
-    sims = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _safe_div(_dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn")), 6
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return brute_topk(scatter(corpus), queries, id_col, vec_col, k)
 
 
 def brute_force_topk_sql(

@@ -23,22 +23,18 @@ emitted or compared) to:
   survivors with EXACT rounded sims (band + sequential recompute +
   Decimal rounding), and a final per-query window ranks the
   partition-pruned candidate set — TakeOrdered's shape, rows shuffled
-  = O(partitions · |Q| · k), never N·|Q|.
-- :func:`pairs_threshold` — the exact all-pairs threshold baseline
-  (``dedup.embedding.brute_force_pairs``): batch × broadcast-corpus
-  matmul as a candidate FILTER (≥ threshold − band), exact rounded
-  sims recomputed for the output-sized survivor set (the
-  ``dedup.semantic._pairs_grouped`` pattern without the cell
-  grouping; test-yardstick only, O(n²) by definition).
+  = O(partitions · |Q| · k), never N·|Q|.  A query set above
+  ``MAX_QUERY_ROWS`` splits itself into md5-sliced passes.
 
 Equality with the HOF forms is property-tested (including zero-norm
-NULL-cosine ordering and duplicate-vector rounding ties).  Only
-:func:`brute_topk` runs in production (``knn.brute_force_topk``'s
-default).  The r11 A/B kept the HOF sign fold and the bucket self-join
-for sign-LSH, and the all-pairs baseline is a test yardstick, so
-:func:`plane_signs`, :func:`pairs_threshold` and
-:func:`lsh_grouped_topk` are the second implementations the tests pin
-those forms against.
+NULL-cosine ordering, NULL vectors and duplicate-vector rounding
+ties); the HOF top-k lives on only as the test-side reference
+(tests/test_similarity_dedup.py ``hof_brute_topk``).  Only
+:func:`brute_topk` runs in production (``knn.brute_force_topk``).  The
+r11 A/B kept the HOF sign fold and the bucket self-join for sign-LSH,
+so :func:`plane_signs` and :func:`lsh_grouped_topk` are the second
+implementations the tests pin those forms against.  The exact
+all-pairs yardstick is ``dedup.embedding.brute_force_pairs`` alone.
 """
 
 from __future__ import annotations
@@ -62,12 +58,11 @@ from hadoop_20_warehouse_spark.similarity.assign import (
 # float64 unit roundoff; sign/tie bands scale it by the dot's magnitude
 _EPS = 2.3e-16
 
-# Driver-side collect caps (~0.5 GB of 64-dim float64 vectors each):
-# brute_topk collects the QUERY set, pairs_threshold the FULL corpus
-# (the documented O(n²) yardstick).  Module-level so the enforcement
-# is testable without materializing a million rows.
+# Driver-side collect cap for brute_topk's query set, per pass (~0.5 GB
+# of 64-dim float64 vectors).  Module-level so the pass split and the
+# per-pass enforcement are testable without materializing a million
+# rows.
 MAX_QUERY_ROWS = 1_000_000
-MAX_CORPUS_ROWS = 1_000_000
 
 
 def plane_signs(
@@ -148,18 +143,49 @@ def plane_signs(
     return sel.mapInPandas(gen, schema=schema)
 
 
-def _chunk_passes(side: DataFrame, id_col: str, cap: int, n_passes: int | None) -> int:
-    """Pass count for a chunked GEMM run: explicit, or derived from
-    one count() of the driver-collected side with 25% headroom under
-    the per-pass cap (md5 bucketing is even only in expectation; the
-    single-pass cap check still hard-guards a skewed bucket)."""
-    if n_passes is not None:
-        if n_passes < 1:
-            raise ValueError(f"n_passes must be >= 1, got {n_passes}")
-        return n_passes
-    total = side.count()
-    per_pass = max(1, (cap * 3) // 4)
+def _chunk_passes(queries: DataFrame) -> int:
+    """Pass count for a query set above ``MAX_QUERY_ROWS``: one count(),
+    with 25% headroom under the per-pass cap (md5 bucketing is even
+    only in expectation; each pass's own cap check still hard-guards a
+    skewed bucket)."""
+    total = queries.count()
+    per_pass = max(1, (MAX_QUERY_ROWS * 3) // 4)
     return max(1, -(-total // per_pass))
+
+
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
+    """The (id, vector) query rows, or None when there are more than
+    ``MAX_QUERY_ROWS`` — the collect stops at cap + 1 rows, so driver
+    memory stays bounded either way."""
+    qrows = (
+        queries.select(F.col(id_col), F.col(vec_col))
+        .limit(MAX_QUERY_ROWS + 1)
+        .collect()
+    )
+    return qrows if len(qrows) <= MAX_QUERY_ROWS else None
+
+
+def _vector_matrix(ids, vecs, dim, id_col: str):
+    """``vecs`` as a float64 matrix with ``dim`` columns.  A NULL vector
+    is a zero row, so every cosine it takes part in is NULL (the HOF
+    fold's NULL); a vector of another length raises.  ``dim=None``
+    (every query vector NULL) gives all-zero rows: every cosine is
+    NULL whatever the corpus holds."""
+    import numpy as np
+
+    M = np.zeros((len(vecs), max(dim or 0, 1)), dtype=np.float64)
+    if dim is None:
+        return M
+    for i, v in enumerate(vecs):
+        if v is None:
+            continue
+        if len(v) != dim:
+            raise ValueError(
+                f"brute_topk: vector {id_col}={ids[i]} has length "
+                f"{len(v)}, query vectors have length {dim}"
+            )
+        M[i, :dim] = v
+    return M
 
 
 def brute_topk(
@@ -168,73 +194,60 @@ def brute_topk(
     id_col: str,
     vec_col: str,
     k: int,
-    chunked: bool = False,
-    n_passes: int | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id, sim, rank) — exact cosine top-k,
-    bit-identical to ``knn.brute_force_topk``: per corpus batch one
+    bit-identical to the HOF crossJoin form: per corpus batch one
     matmul against the broadcast query matrix, batch-local top-(k +
     tie band) pruning with exact rounded sims, then a per-query window
     over the pruned candidates (rows = O(partitions·|Q|·k)).
 
-    NULL cosines (zero norms) rank LAST with neighbor-id tiebreaks and
-    are emitted only when a batch has fewer than k finite candidates —
-    matching the HOF form's NULLS-LAST ranking exactly.
+    NULL cosines (zero norms, NULL vectors) rank LAST with neighbor-id
+    tiebreaks and are emitted only when a batch has fewer than k finite
+    candidates — matching the HOF form's NULLS-LAST ranking exactly.  A
+    vector whose length differs from the query vectors' raises
+    ``ValueError`` naming its id.
 
-    The query set is COLLECTED TO THE DRIVER (then broadcast) — the
-    'bounded per pass' contract is enforced, not just documented:
-    above ``max_query_rows`` the collect raises instead of silently
-    pressuring driver memory; callers with larger query sets pass
-    ``chunked=True`` (or use knn.brute_force_topk(method='hof'),
-    whose broadcast crossJoin never materializes the query frame on
-    the driver).
+    The query set is COLLECTED TO THE DRIVER (then broadcast), at most
+    ``MAX_QUERY_ROWS`` rows per pass.  A larger query set is split into
+    md5-bucketed slices (pass count from one count(), see
+    :func:`_chunk_passes`); each pass scores its slice and the results
+    union — exact, because query slices are disjoint and each query's
+    top-k (rank included) depends only on its own slice's rows.  Cost
+    is one corpus scan per pass.  A slice that still exceeds the cap
+    raises rather than pressure driver memory."""
+    qrows = _collect_queries(queries, id_col, vec_col)
+    if qrows is not None:
+        return _brute_topk_pass(corpus, qrows, id_col, vec_col, k)
+    from functools import reduce
 
-    ``chunked=True`` is the multi-pass escape hatch (VERDICT r14 #6):
-    the query set is split into ``n_passes`` md5-bucketed slices
-    (derived from one count() when not given), each pass runs the
-    bounded single-pass form on its slice, and the results union —
-    exact, because query slices are disjoint and each query's top-k
-    (including its rank column) depends only on its own slice's rows.
-    Cost is one corpus scan per pass, the honest price of a >cap
-    query set on the GEMM path."""
+    from hadoop_20_warehouse_spark.functions.hashing import md5_bucket
+
+    passes = _chunk_passes(queries)
+    parts = []
+    for i in range(passes):
+        rows = _collect_queries(
+            queries.filter(md5_bucket(F.col(id_col).cast("string"), passes) == i),
+            id_col,
+            vec_col,
+        )
+        if rows is None:
+            raise ValueError(
+                f"brute_topk: query slice {i} of {passes} exceeds "
+                f"{MAX_QUERY_ROWS} rows — the GEMM scorer collects each "
+                "pass's queries to the driver; the md5 slices are "
+                "skewed (duplicate query ids?)"
+            )
+        parts.append(_brute_topk_pass(corpus, rows, id_col, vec_col, k))
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _brute_topk_pass(
+    corpus: DataFrame, qrows: list, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """One :func:`brute_topk` pass over the collected query rows."""
     import numpy as np
 
-    if chunked:
-        from functools import reduce
-
-        from hadoop_20_warehouse_spark.functions.hashing import md5_bucket
-
-        passes = _chunk_passes(queries, id_col, MAX_QUERY_ROWS, n_passes)
-        if passes == 1:
-            return brute_topk(corpus, queries, id_col, vec_col, k)
-        parts = [
-            brute_topk(
-                corpus,
-                queries.filter(
-                    md5_bucket(F.col(id_col).cast("string"), passes) == i
-                ),
-                id_col,
-                vec_col,
-                k,
-            )
-            for i in range(passes)
-        ]
-        return reduce(DataFrame.unionByName, parts)
-
     spark = corpus.sparkSession
-    max_query_rows = MAX_QUERY_ROWS
-    qrows = (
-        queries.select(F.col(id_col), F.col(vec_col))
-        .limit(max_query_rows + 1)
-        .collect()
-    )
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"brute_topk: query set exceeds {max_query_rows} rows — the "
-            "GEMM scorer collects queries to the driver (bounded per "
-            "pass by contract); chunk the query set into passes or use "
-            "brute_force_topk(method='hof')"
-        )
     if not qrows:
         # empty query set → empty result with the right schema (the
         # HOF crossJoin form degenerates the same way)
@@ -246,9 +259,11 @@ def brute_topk(
         )
         return sel0.filter(F.lit(False))
     qids = [r[id_col] for r in qrows]
-    Q = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in qrows])
-    qn = np.sqrt(np.cumsum(Q * Q, axis=1)[:, -1])
-    bc = spark.sparkContext.broadcast((qids, Q, qn))
+    qvecs = [r[vec_col] for r in qrows]
+    dim = next((len(v) for v in qvecs if v is not None), None)
+    Q = _vector_matrix(qids, qvecs, dim, id_col)
+    qn = np.sqrt(_seq_dot(Q, Q))
+    bc = spark.sparkContext.broadcast((qids, Q, qn, dim))
     sel = corpus.select(F.col(id_col), F.col(vec_col))
     id_type = sel.schema[0].dataType
     schema = StructType(
@@ -262,16 +277,14 @@ def brute_topk(
     def gen(batches):
         import pandas as pd
 
-        qids_, Q_, qn_ = bc.value
+        qids_, Q_, qn_, dim_ = bc.value
         nq = len(qids_)
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf[id_col].to_numpy()
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            vn = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
+            V = _vector_matrix(ids, list(pdf[vec_col]), dim_, id_col)
+            vn = np.sqrt(_seq_dot(V, V))
             S = V @ Q_.T  # (B, nq)
             denom = vn[:, None] * qn_[None, :]
             valid = denom > 0.0
@@ -326,148 +339,6 @@ def brute_topk(
     return cand.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= k
     )
-
-
-def pairs_threshold(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    chunked: bool = False,
-    n_passes: int | None = None,
-) -> DataFrame:
-    """(id_a, id_b, sim) — exact all-pairs ≥ threshold, bit-identical
-    to ``dedup.embedding.brute_force_pairs``: one matmul per corpus
-    batch against the broadcast full corpus (test-yardstick scale by
-    contract), GEMM values filter candidates, exact rounded sims
-    recomputed for the survivors.
-
-    The FULL corpus is COLLECTED TO THE DRIVER (then broadcast) —
-    like ``brute_topk``'s query collect, the bounded contract is
-    enforced, not just documented: above ``max_corpus_rows`` the
-    collect raises instead of silently pressuring driver memory.
-    This is the documented O(n²) yardstick (only tests call it); the
-    scale path for all-pairs similarity is the banded/bucketed family
-    (dedup.semantic, minhash LSH).
-
-    ``chunked=True`` is the multi-pass escape hatch (VERDICT r14 #6):
-    only the BROADCAST side is sliced into md5 buckets — each pass
-    scans the full frame against one collected slice, so the driver
-    holds ≤ one slice at a time.  The union is exact: the ordered
-    pair (a, b), a < b, is emitted exactly once, by the pass whose
-    slice contains b.  Cost is one full scan per pass — the honest
-    O(n²/passes) pricing of a >cap corpus on the yardstick path."""
-    if chunked:
-        from functools import reduce
-
-        from hadoop_20_warehouse_spark.functions.hashing import md5_bucket
-
-        passes = _chunk_passes(df, id_col, MAX_CORPUS_ROWS, n_passes)
-        if passes == 1:
-            return pairs_threshold(df, id_col, vec_col, threshold)
-        parts = [
-            _pairs_threshold_pass(
-                df,
-                df.filter(
-                    md5_bucket(F.col(id_col).cast("string"), passes) == i
-                ),
-                id_col,
-                vec_col,
-                threshold,
-            )
-            for i in range(passes)
-        ]
-        return reduce(DataFrame.unionByName, parts)
-    return _pairs_threshold_pass(df, df, id_col, vec_col, threshold)
-
-
-def _pairs_threshold_pass(
-    scan: DataFrame,
-    bcast: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-) -> DataFrame:
-    """One pass of :func:`pairs_threshold`: collect+broadcast ``bcast``
-    (cap-enforced), scan ``scan``, emit (id_a < id_b, sim) pairs whose
-    RIGHT member is in the broadcast slice."""
-    import numpy as np
-
-    spark = scan.sparkSession
-    df = scan
-    max_corpus_rows = MAX_CORPUS_ROWS
-    rows = (
-        bcast.select(F.col(id_col), F.col(vec_col))
-        .limit(max_corpus_rows + 1)
-        .collect()
-    )
-    if len(rows) > max_corpus_rows:
-        raise ValueError(
-            f"pairs_threshold: corpus exceeds {max_corpus_rows} rows — "
-            "the all-pairs GEMM yardstick collects and broadcasts the "
-            "full corpus (bounded by contract); use the banded scale "
-            "paths (dedup.semantic semantic_dedup_removed, minhash LSH) "
-            "for corpora beyond yardstick scale, or chunked=True "
-            "for the multi-pass escape hatch"
-        )
-    if not rows:
-        # empty broadcast slice (possible under chunked md5 bucketing)
-        sel0 = df.select(
-            F.col(id_col).alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.lit(None).cast("double").alias("sim"),
-        )
-        return sel0.filter(F.lit(False))
-    all_ids = np.array([r[id_col] for r in rows])
-    A = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-    an = np.sqrt(np.cumsum(A * A, axis=1)[:, -1])
-    bc = spark.sparkContext.broadcast((all_ids, A, an))
-    sel = df.select(F.col(id_col), F.col(vec_col))
-    id_type = sel.schema[0].dataType
-    schema = StructType(
-        [
-            StructField("id_a", id_type),
-            StructField("id_b", id_type),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        ids_, A_, an_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            vn = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
-            S = V @ A_.T
-            denom = vn[:, None] * an_[None, :]
-            valid = denom > 0.0
-            sims = np.where(valid, S / np.where(valid, denom, 1.0), -np.inf)
-            mask = (sims >= threshold - _band(A_.shape[1])) & (
-                ids[:, None] < ids_[None, :]
-            )
-            out_a, out_b, out_s = [], [], []
-            for i, j in zip(*np.nonzero(mask)):
-                exact = _seq_dot(V[i], A_[j])
-                sim6 = _round6_scaled(exact / denom[i, j]) / 1_000_000.0
-                if sim6 >= threshold:
-                    out_a.append(ids[i])
-                    out_b.append(ids_[j])
-                    out_s.append(sim6)
-            yield pd.DataFrame(
-                {
-                    "id_a": out_a,
-                    "id_b": out_b,
-                    "sim": np.array(out_s, dtype=np.float64),
-                }
-            )
-
-    return sel.mapInPandas(gen, schema=schema)
 
 
 def lsh_grouped_topk(

@@ -14,7 +14,8 @@ Parquet is the native table format (the TFile/SequenceFile successor —
 |                                        | files), write_named_outputs   |
 |                                        | (named multi-schema sinks)    |
 | MultiFile/CombineFileInputFormat       | maxPartitionBytes (built in)  |
-| NullOutputFormat                       | write_noop                    |
+| NullOutputFormat                       | Spark's ``noop`` sink:        |
+|                                        | df.write.format("noop")       |
 
 All readers return DataFrames and preserve Catalyst pushdown; the
 SequenceFile path goes through the RDD API (the format is K/V pairs by
@@ -293,12 +294,6 @@ def write_partitioned(
     ``col=value/`` directories — and unlike the reference, readers get
     partition *pruning* on those columns for free."""
     df.write.mode("overwrite").partitionBy(*partition_cols).format(fmt).save(path)
-
-
-def write_noop(df: DataFrame) -> None:
-    """NullOutputFormat (mapred/lib/NullOutputFormat.java): execute for
-    side effects/metrics, write nothing."""
-    df.write.format("noop").mode("overwrite").save()
 
 
 class NamedOutput:

@@ -574,63 +574,6 @@ def test_fuzzy_edit_pairs_complete_vs_bruteforce(spark, data, n_docs):
     assert got == want
 
 
-@settings(max_examples=8, deadline=None)
-@given(
-    data=st.data(),
-    n_docs=st.integers(min_value=2, max_value=6),
-)
-def test_fuzzy_edit_chunked_complete_vs_bruteforce(spark, data, n_docs):
-    """The chunk-signature (PassJoin-style) variant must also equal
-    the brute-force reference exactly — with chunk_w=2 and T=2 the
-    long/short threshold is 6 chars, so drawn corpora straddle it and
-    the test exercises the pigeonhole path, the short fallback, AND
-    mixed long/short pairs."""
-    from hadoop_20_warehouse_spark.dedup.editdist import (
-        fuzzy_edit_pairs_chunked,
-    )
-
-    T, W = 2, 2
-    alphabet = "abz "
-    base = data.draw(
-        st.lists(
-            st.text(alphabet=alphabet, min_size=0, max_size=20),
-            min_size=n_docs,
-            max_size=n_docs,
-        )
-    )
-    texts = list(base)
-    s = list(base[0])
-    for _ in range(data.draw(st.integers(min_value=0, max_value=T))):
-        op = data.draw(st.sampled_from(["sub", "ins", "del"]))
-        if op == "ins" or not s:
-            s.insert(
-                data.draw(st.integers(min_value=0, max_value=len(s))),
-                data.draw(st.sampled_from(alphabet)),
-            )
-        elif op == "del":
-            s.pop(data.draw(st.integers(min_value=0, max_value=len(s) - 1)))
-        else:
-            i = data.draw(st.integers(min_value=0, max_value=len(s) - 1))
-            s[i] = data.draw(st.sampled_from(alphabet))
-    texts.append("".join(s))
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = {
-        (r.id_a, r.id_b): r.dist
-        for r in fuzzy_edit_pairs_chunked(
-            docs, max_dist=T, chunk_w=W
-        ).collect()
-    }
-    want = {}
-    for i in range(len(texts)):
-        for j in range(i + 1, len(texts)):
-            d = _levenshtein_py(texts[i].lower(), texts[j].lower())
-            if d <= T:
-                want[(i, j)] = d
-    assert got == want
-
-
 def test_mixture_sample_tok_len_col_equals_text_counts(spark):
     """The tok_len_col hook (round 14, the release endgame's mixing
     stage): budgeting by a precomputed count column must place exactly

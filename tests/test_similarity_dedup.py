@@ -6,6 +6,7 @@ recall vs the exact baseline, no self/duplicate pairs)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hadoop_20_warehouse_spark.catalog import load_table
@@ -775,26 +776,69 @@ def test_plane_signs_matches_hof(spark, emb, adversarial_vecs):
         assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
 
 
-def test_brute_topk_gemm_matches_hof(spark, emb, adversarial_vecs):
+def hof_brute_topk(corpus, queries, id_col="vec_id", vec_col="embedding", k=10):
+    """``knn.brute_force_topk``'s contract as the crossJoin of the
+    corpus with the broadcast query set, cosine folded per pair by the
+    interpreted HOFs (norms once per row), ranked by a per-query
+    window — the reference the GEMM scorer must equal."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        _norm(F.col(vec_col)).alias("qn"),
+    )
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("nv"),
+        _norm(F.col(vec_col)).alias("nn"),
+    )
+    sims = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(
+                _safe_div(_dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn")), 6
+            ).alias("sim"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return sims.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )
+
+
+def test_brute_topk_gemm_matches_hof(spark, emb, adversarial_vecs, null_vecs):
     """Includes the NULL-cosine tail: the adversarial frame's zero
     vectors produce all-NULL queries whose top-k is the NULLS-LAST
-    neighbor-id order."""
-    from hadoop_20_warehouse_spark.similarity import scores as SC
-
-    for df in (emb, adversarial_vecs):
-        q = df.filter(F.expr("vec_id % 50 = 0"))
-        h = brute_force_topk(df, q, k=5, method="hof")
-        g = SC.brute_topk(df, q, "vec_id", "embedding", 5)
+    neighbor-id order, and ``null_vecs`` adds NULL embeddings on both
+    the query and the corpus side (they score as zero vectors), also
+    as a query set with no vector at all."""
+    for df, pred in (
+        (emb, "vec_id % 50 = 0"),
+        (adversarial_vecs, "vec_id % 50 = 0"),
+        (null_vecs, "vec_id % 50 = 0 OR vec_id IN (-14, -7)"),
+        (null_vecs, "vec_id IN (-14, -7)"),
+    ):
+        q = df.filter(pred)
+        h = hof_brute_topk(df, q, k=5)
+        g = brute_force_topk(df, q, k=5)
         assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
 
 
-def test_pairs_threshold_gemm_matches_hof(spark, emb, adversarial_vecs):
-    from hadoop_20_warehouse_spark.similarity import scores as SC
-
-    for df, tau in ((emb, 0.3), (adversarial_vecs, 0.3)):
-        h = EMB.brute_force_pairs(df, threshold=tau)
-        g = SC.pairs_threshold(df, "vec_id", "embedding", tau)
-        assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
+def test_brute_topk_rejects_wrong_length(spark):
+    """A corpus vector of another length than the queries' fails its
+    task naming the id and both lengths; a query set of mixed lengths
+    fails at plan build."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]), (7, [1.0, 2.0, 3.0])],
+        "vec_id bigint, embedding array<double>",
+    )
+    msg = "vec_id=7 has length 3, query vectors have length 4"
+    with pytest.raises(Exception, match=msg):
+        brute_force_topk(df, df.filter("vec_id = 1"), k=2).collect()
+    with pytest.raises(ValueError, match=msg):
+        brute_force_topk(df, df, k=2)
 
 
 def test_lsh_grouped_matches_join(spark, emb, adversarial_vecs):
@@ -862,69 +906,42 @@ def test_gemm_kernels_degenerate_inputs(spark, emb):
 
 
 def test_gemm_collect_caps_enforced(spark, emb, monkeypatch):
-    """Both driver-side collects in the GEMM yardsticks are bounded by
-    contract AND enforcement (VERDICT r12 finding 1): above the cap
-    the collect raises with an actionable message instead of silently
-    pressuring driver memory.  Caps are module constants precisely so
-    this is testable without materializing a million rows."""
+    """The driver-side query collect is bounded per pass by contract
+    AND enforcement: a query set above the cap splits into md5-sliced
+    passes instead of collecting it whole, and a slice that still
+    exceeds the cap raises instead of silently pressuring driver
+    memory.  The cap is a module constant precisely so this is
+    testable without materializing a million rows."""
     from hadoop_20_warehouse_spark.similarity import scores as SC
 
-    monkeypatch.setattr(SC, "MAX_QUERY_ROWS", 10)
-    monkeypatch.setattr(SC, "MAX_CORPUS_ROWS", 10)
     big_q = emb.limit(11)
-    with pytest.raises(ValueError, match="query set exceeds 10 rows"):
-        SC.brute_topk(emb, big_q, "vec_id", "embedding", 5)
-    with pytest.raises(ValueError, match="corpus exceeds 10 rows"):
-        SC.pairs_threshold(emb, "vec_id", "embedding", 0.3)
-    # at or below the cap both run normally
     monkeypatch.setattr(SC, "MAX_QUERY_ROWS", 10_000)
-    monkeypatch.setattr(SC, "MAX_CORPUS_ROWS", 10_000)
-    assert SC.brute_topk(emb, big_q, "vec_id", "embedding", 2).count() > 0
-    assert (
-        SC.pairs_threshold(emb.limit(20), "vec_id", "embedding", 0.99)
-        .count()
-        >= 0
-    )
+    single = sorted(map(tuple, SC.brute_topk(emb, big_q, "vec_id", "embedding", 2).collect()))
+    assert single
+    monkeypatch.setattr(SC, "MAX_QUERY_ROWS", 10)
+    split = SC.brute_topk(emb, big_q, "vec_id", "embedding", 2)
+    assert sorted(map(tuple, split.collect())) == single
+    # one query per pass: 11 md5 slices of 11 ids collide, so some
+    # slice holds two queries and its collect exceeds the cap
+    monkeypatch.setattr(SC, "MAX_QUERY_ROWS", 1)
+    with pytest.raises(ValueError, match="exceeds 1 rows"):
+        SC.brute_topk(emb, big_q, "vec_id", "embedding", 2)
 
 
 def test_gemm_chunked_passes_match_single(spark, emb, monkeypatch):
-    """VERDICT r14 #6: the chunked multi-pass escape hatch must equal
-    the single-pass GEMM form exactly — disjoint md5 query slices for
-    brute_topk, broadcast-side corpus slices for pairs_threshold (each
-    unordered pair emitted once, by the slice holding its right
-    member)."""
+    """A query set above the cap runs as disjoint md5 query slices,
+    one bounded pass each, and the union must equal the single-pass
+    GEMM form exactly."""
     from hadoop_20_warehouse_spark.similarity import scores as SC
 
     df = emb.limit(120)
     q = df.filter(F.expr("vec_id % 10 = 0"))
     single_t = SC.brute_topk(df, q, "vec_id", "embedding", 4)
-    multi_t = SC.brute_topk(
-        df, q, "vec_id", "embedding", 4, chunked=True, n_passes=3
-    )
+    monkeypatch.setattr(SC, "MAX_QUERY_ROWS", 8)
+    multi_t = SC.brute_topk(df, q, "vec_id", "embedding", 4)
     assert sorted(map(tuple, single_t.collect())) == sorted(
         map(tuple, multi_t.collect())
     )
-    single_p = SC.pairs_threshold(df, "vec_id", "embedding", 0.3)
-    multi_p = SC.pairs_threshold(
-        df, "vec_id", "embedding", 0.3, chunked=True, n_passes=3
-    )
-    assert sorted(map(tuple, single_p.collect())) == sorted(
-        map(tuple, multi_p.collect())
-    )
-    # derived pass count: a corpus above the (lowered) cap no longer
-    # raises on the chunked path — it splits into enough passes that
-    # each collect stays bounded — and still matches single-pass
-    monkeypatch.setattr(SC, "MAX_CORPUS_ROWS", 25)
-    auto_p = SC.pairs_threshold(
-        df, "vec_id", "embedding", 0.3, chunked=True
-    )
-    assert sorted(map(tuple, single_p.collect())) == sorted(
-        map(tuple, auto_p.collect())
-    )
-    with pytest.raises(ValueError, match="n_passes must be >= 1"):
-        SC.pairs_threshold(
-            df, "vec_id", "embedding", 0.3, chunked=True, n_passes=0
-        )
 
 
 def test_embedding_outlier_filter_flags_planted_and_keeps_quota(spark, tmp_path):
