@@ -220,14 +220,15 @@ _BPE_LARGE_MERGES: dict[str, list] = {}
 
 def _tokenize_bpe_large_apply(spark, sf_dir: str) -> DataFrame:
     """Merge-count-independent tokenization at 2048 merges — the
-    mapInPandas replay corpus pass (functions/bpe_scale.
-    tokenize_with_merges_large) over the deterministic md5-hex
+    mapInPandas replay corpus pass (functions/bpe.
+    tokenize_with_merges) over the deterministic md5-hex
     synthetic corpus.  The batched 2048-merge vocabulary trains ONCE
     per (process, sf_dir) outside the timed region (the settle run
     pays it — the registered tokenize_bpe_large query trains+applies
     and is driver-checked; timing it here would double-count the
     training rounds, the tokenize_bpe_apply precedent)."""
     from hadoop_20_warehouse_spark.functions import bpe_scale as BS
+    from hadoop_20_warehouse_spark.functions.bpe import tokenize_with_merges
     from hadoop_20_warehouse_spark.inventory_analytics import _bpe_synth_docs
 
     docs = _bpe_synth_docs(spark, sf_dir)
@@ -240,7 +241,7 @@ def _tokenize_bpe_large_apply(spark, sf_dir: str) -> DataFrame:
             )
         ]
         _BPE_LARGE_MERGES[sf_dir] = merges
-    return BS.tokenize_with_merges_large(docs, merges)
+    return tokenize_with_merges(docs, merges)
 
 
 def _embed_synth(spark, n: int) -> DataFrame:

@@ -812,8 +812,8 @@ def chunk_sliding_windows(
 
     ``tokens_expr``: optional Column producing the per-doc token ARRAY
     to chunk instead of whitespace words — the hook that chunks by the
-    counts the model will see (e.g. a BPE subword stream via
-    functions/bpe.bpe_tokens_expr).
+    counts the model will see (e.g. ``F.col("toks")`` over the subword
+    arrays of functions/bpe.token_arrays).
 
     ROW-LOCAL throughout: tokenize once, explode only the chunk
     ordinals (fan-out n/stride — the output size, not a join), slice

@@ -1,44 +1,31 @@
-"""Production-scale BPE: driver-local exact training, distributed
-batched training, and merge-count-independent application.
+"""Production-scale BPE: batched training, the full-depth validity
+package of the sequential trainer, the large-vocabulary symbol
+inventory, and the DuckDB oracles that pin the 2048-merge queries.
 
-Round 11 shipped the BPE family with a nested-replace apply and a
-one-Spark-round-trip-per-merge trainer — both corpus-size-safe but
-LINEAR IN MERGE COUNT (a 32k-merge production vocabulary is
-inexpressible as 32k nested replaces or 32k Spark jobs).  This module
-closes the merge-count axis with three scale paths:
+The trainer (functions/bpe.train_merges — exact sequential rounds on
+the driver over the capped word table) and the apply pass
+(functions/bpe.tokenize_with_merges / token_arrays — one Arrow-batched
+replay worker per input partition) are merge-count-flat already; this
+module adds what a production vocabulary needs beyond them:
 
-1. ``train_merges_local`` — the exact sequential (Sennrich et al.
-   2016) trainer run DRIVER-LOCALLY over the collected capped word
-   table.  The word table is bounded to ``max_words`` rows BY
-   CONSTRUCTION (functions/bpe.word_counts caps it — the
-   lib/aggregate/UniqValueCount.java:30 bounded-state idea), so the
-   collect is legitimate bounded metadata, and the incremental
-   pair-count index (the standard Sennrich implementation) makes N
-   merge rounds cost ZERO Spark jobs and O(total merge applications)
-   python time.  Semantics are bit-identical to the r11 Spark-round
-   trainer: position-weighted adjacent pair counts, argmax by
-   (count DESC, pa ASC, pb ASC), one left-to-right non-overlapping
-   merge pass per round.
-
-2. ``train_merges_batched`` — batched top-B BPE: R rounds each take
+1. ``train_merges_batched`` — batched top-B BPE: R rounds each take
    the TOP-B pairs of the current tokenization (not the top-1), so a
    32k-merge vocabulary costs R = 32k/B bounded Spark jobs over the
-   capped word table instead of 32k.  With B=1 this IS the exact
-   sequential trainer (the property the oracle generators exploit).
-   Batched merge selection is the standard scalable-BPE construction;
-   within a batch, merges apply in rank order with the same replay
-   semantics, so the procedure stays deterministic.
+   capped word table, which never has to fit on the driver.  With B=1
+   this IS the exact sequential trainer (the property the oracle
+   generators exploit).  Batched merge selection is the standard
+   scalable-BPE construction; within a batch, merges apply in rank
+   order with the same replay semantics, so the procedure stays
+   deterministic.  It is the trainer for word tables capped above
+   bpe.DRIVER_VOCAB_MAX.
 
-3. ``tokenize_with_merges_large`` — application via one Arrow-batched
-   ``mapInPandas`` pass with the merge table broadcast: per word, a
-   present-pair-set guarded REPLAY of the merge sequence (each merge
-   one left-to-right non-overlapping pass — EXACTLY the semantics of
-   the nested ``replace`` chain, including the corner where two
-   different merges produce the same token string, where rank-greedy
-   heaps diverge from replace chains).  Distinct words are memoized
-   per worker, so the cost is ~O(distinct words × applied merges) per
-   task, FLAT in merge count for the scan itself — one corpus pass,
-   no shuffle, any vocabulary size.
+2. ``train_large_invariants`` — the sequential trainer's full-depth
+   validity as exact integer facts (mass conservation, replay
+   equality, structural closure), for depths past the oracle prefix.
+
+3. ``vocab_after_merges_large`` — the post-merge symbol inventory
+   through the replay kernel, for merge tables too long for
+   bpe.vocab_after_merges' replace chain.
 
 Cross-engine verification (the repo's oracle discipline):
 
@@ -58,14 +45,14 @@ Cross-engine verification (the repo's oracle discipline):
   ``train_large_invariants_sql`` (exact integer mass conservation:
   every merge with count c removes exactly c frequency-weighted
   symbols; non-increasing counts; vocabulary closure; concat
-  integrity) plus the python-vs-Spark-trainer full-agreement test to
-  vocabulary exhaustion (tests/test_bpe_scale.py).
-- ``batched_tokenize_sql`` / ``batched_pack_sql`` verify the LARGE
-  APPLY path end-to-end: DuckDB derives the 2048-merge table, replays
-  it over every distinct corpus word (OOV words included — apply is
-  vocabulary-blind), reassembles per-document token streams in word
-  order, and hashes (bpe_len, md5 token digest) per document — the
-  exact values the mapInPandas worker emits.
+  integrity) plus the python-vs-Spark-round trainer full-agreement
+  test to vocabulary exhaustion (tests/test_bpe_scale.py).
+- ``batched_tokenize_sql`` / ``batched_pack_sql`` verify the apply
+  pass at 2048 merges end-to-end: DuckDB derives the merge table,
+  replays it over every distinct corpus word (OOV words included —
+  apply is vocabulary-blind), reassembles per-document token streams
+  in word order, and hashes (bpe_len, md5 token digest) per document —
+  the exact values the replay worker emits.
 
 The real ``documents`` table has only 31 distinct words (vocabulary
 exhausts at ~106 merges), so the large-scale queries synthesize a
@@ -90,229 +77,14 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from hadoop_20_warehouse_spark.functions.bpe import (
     _EOW,
-    _WORD_RE,
+    _MERGE_SCHEMA,
     DEFAULT_MAX_WORDS,
+    build_merge_index,
+    replay_word,
+    replay_word_indexed,
+    train_merges_local,
     word_counts,
 )
-
-# Above this merge count the nested-replace expression tree and the
-# per-round Spark jobs stop being sensible; train_merges/
-# tokenize_with_merges dispatch to the driver-local / mapInPandas
-# paths (functions/bpe.py keeps the small forms verbatim below it,
-# where the DuckDB oracle unrolls them).
-LARGE_MERGE_THRESHOLD = 64
-
-# Word-table size up to which the driver-local trainer is the
-# dispatch default (r18 optimization round): the collect is bounded by
-# max_words rows of short strings — a few MB at this bound, far under
-# spark.driver.maxResultSize — and the driver loop removes the
-# ~1-Spark-job-per-round cost of the aggregation form.  Vocabularies
-# capped above this train with the per-round Spark aggregation.
-DRIVER_VOCAB_MAX = 262_144
-
-import re as _re_mod  # noqa: E402
-
-# Worker-side normalization for the mapInPandas apply path.  The
-# whitespace split is an ASCII-explicit class, NOT python \s: the
-# small path and the trainer's word_counts split with Spark/Java
-# regex \s+, and Java \s is exactly [ \t\n\x0B\f\r] while python re
-# \s also matches U+00A0/U+1680/U+2028/... — on text carrying Unicode
-# whitespace the two sides of the LARGE_MERGE_THRESHOLD dispatch
-# would tokenize differently (ADVICE r12).  lower() is likewise
-# python-vs-JVM; the [a-z0-9]+ word filter confines the surviving
-# vocabulary to ASCII, and the documented contract is ASCII-text
-# corpora (non-ASCII WORDS are filtered identically on both sides
-# because neither engine's lower() maps non-ASCII into [a-z0-9]).
-# Module-level so the r13 perf adjudication could A/B the pattern
-# order-controlled (PLANS.md round 14).
-_WORD_APPLY_RE = _re_mod.compile(r"[a-z0-9]+\Z")
-_WS_APPLY_RE = _re_mod.compile(r"[ \t\n\x0b\f\r]+")
-
-_MERGE_SCHEMA = StructType(
-    [
-        StructField("step", LongType()),
-        StructField("pair_a", StringType()),
-        StructField("pair_b", StringType()),
-        StructField("merged", StringType()),
-        StructField("pair_count", LongType()),
-    ]
-)
-
-
-# ---------------------------------------------------------------------------
-# pure-python kernel (driver trainer + worker apply share it)
-# ---------------------------------------------------------------------------
-
-
-def _one_pass(toks: list, pa: str, pb: str, merged: str) -> list:
-    """One left-to-right NON-OVERLAPPING merge pass — exactly
-    ``replace(seq, '|pa||pb|', '|merged|')`` on the delimited
-    encoding (functions/bpe.py module docstring)."""
-    out: list = []
-    i, n = 0, len(toks)
-    while i < n:
-        if i + 1 < n and toks[i] == pa and toks[i + 1] == pb:
-            out.append(merged)
-            i += 2
-        else:
-            out.append(toks[i])
-            i += 1
-    return out
-
-
-def replay_word(word: str, merges3: list) -> list:
-    """Tokenize one word by REPLAYING the merge sequence in training
-    order (``merges3`` = [(pa, pb, merged), ...]): each merge that has
-    an adjacent occurrence gets one non-overlapping pass.  A
-    present-pair set makes skipping absent merges O(1), so the scan
-    over a 32k-merge table costs 32k set probes per DISTINCT word
-    (memoized per worker by the callers)."""
-    toks = list(word) + [_EOW]
-    if len(toks) < 2:
-        return toks
-    present = set(zip(toks, toks[1:]))
-    for pa, pb, merged in merges3:
-        if (pa, pb) not in present:
-            continue
-        toks = _one_pass(toks, pa, pb, merged)
-        if len(toks) < 2:
-            break
-        present = set(zip(toks, toks[1:]))
-    return toks
-
-
-def build_merge_index(merges3: list) -> dict:
-    """merged-string → list of (rank, pa, pb, merged) in rank order —
-    the apply-side prefilter: a merge can only ever fire on a word if
-    its MERGED string is a contiguous region of word+EOW (every token
-    is one), so a word's relevant merges are found by enumerating its
-    O(L²) substrings instead of scanning the whole table (32k probes →
-    ~L² lookups per distinct word; measured 18-63x at 32k merges,
-    PLANS.md r12).  Duplicate merged strings (two merges with
-    different splits producing the same token) keep ALL their entries,
-    preserving exact replay order."""
-    idx: dict = {}
-    for rank, (pa, pb, merged) in enumerate(merges3):
-        idx.setdefault(merged, []).append((rank, pa, pb, merged))
-    return idx
-
-
-def replay_word_indexed(word: str, merge_index: dict) -> list:
-    """:func:`replay_word` through the substring prefilter — identical
-    output (property-tested), O(L² + |relevant| log) per distinct
-    word instead of O(n_merges)."""
-    relevant: list = []
-    L = len(word)
-    seen: set = set()
-    for i in range(L):
-        for j in range(i + 1, L + 1):
-            s = word[i:j]
-            if s not in seen:
-                seen.add(s)
-                hit = merge_index.get(s)
-                if hit:
-                    relevant.extend(hit)
-        s = word[i:] + _EOW
-        hit = merge_index.get(s)
-        if hit:
-            relevant.extend(hit)
-    hit = merge_index.get(_EOW)
-    if hit:
-        relevant.extend(hit)
-    if not relevant:
-        return list(word) + [_EOW]
-    relevant.sort()
-    return replay_word(word, [(pa, pb, m) for _r, pa, pb, m in relevant])
-
-
-def train_merges_local(
-    wc_rows: list,
-    n_merges: int,
-    applied_out: list | None = None,
-    state_out: list | None = None,
-) -> list:
-    """The exact sequential BPE trainer over a COLLECTED word table
-    (``wc_rows`` = [(word, freq), ...], bounded by the word_counts
-    cap).  Incremental pair-count maintenance (only words containing
-    the merged pair are touched per round — the standard Sennrich
-    indexing), zero Spark jobs.  Returns [(step, pair_a, pair_b,
-    merged, pair_count), ...]; stops early when the vocabulary
-    exhausts — identical semantics to functions/bpe.train_merges'
-    per-round Spark aggregation, verified cross-engine to depth 128
-    by seq_prefix_sql and to exhaustion by the trainer-equivalence
-    test.
-
-    ``applied_out`` (optional list) receives the frequency-weighted
-    number of merges ACTUALLY APPLIED per round — distinct from the
-    selected pair_count when occurrences overlap (a run ``aaa`` counts
-    pair (a,a) at two positions but a non-overlapping pass merges only
-    one); the invariant package checks final mass against Σ applied.
-    ``state_out`` (optional list) receives the trainer's final
-    incrementally-evolved (tokens, freq) word states, for the
-    replay-equivalence invariant."""
-    import heapq
-    from collections import Counter, defaultdict
-
-    words: list = [
-        [list(w) + [_EOW], int(wf)] for w, wf in wc_rows
-    ]
-    counts: Counter = Counter()
-    where: defaultdict = defaultdict(set)
-    for idx, (toks, wf) in enumerate(words):
-        for a, b in zip(toks, toks[1:]):
-            counts[(a, b)] += wf
-            where[(a, b)].add(idx)
-    # lazy max-heap over (-cnt, pa, pb): entries go stale when counts
-    # change; pops validate against the live Counter.  The argmax was
-    # a full O(|pairs|) scan per round, which dominated a 32k-round
-    # run (490s → 21s on the 6k-word rehearsal, PLANS.md r12);
-    # heap order (cnt DESC, pa ASC, pb ASC) is exactly the scan's.
-    heap: list = [(-c, p[0], p[1]) for p, c in counts.items()]
-    heapq.heapify(heap)
-    merges: list = []
-    for step in range(1, n_merges + 1):
-        pa = None
-        while heap:
-            negc, a, b = heapq.heappop(heap)
-            if counts.get((a, b)) == -negc:
-                pa, pb, cnt = a, b, -negc
-                break
-        if pa is None:
-            break
-        merged = pa + pb
-        merges.append((step, pa, pb, merged, cnt))
-        touched = where.pop((pa, pb), set())
-        applied = 0
-        changed: set = set()
-        for idx in touched:
-            toks, wf = words[idx]
-            pairs_old = list(zip(toks, toks[1:]))
-            if (pa, pb) not in set(pairs_old):
-                continue  # stale index entry — word changed earlier
-            for a, b in pairs_old:
-                counts[(a, b)] -= wf
-                changed.add((a, b))
-                if counts[(a, b)] <= 0:
-                    del counts[(a, b)]
-            new = _one_pass(toks, pa, pb, merged)
-            applied += (len(toks) - len(new)) * wf
-            words[idx][0] = new
-            for a, b in zip(new, new[1:]):
-                counts[(a, b)] += wf
-                changed.add((a, b))
-                where[(a, b)].add(idx)
-        # re-arm the heap with every pair whose count changed this
-        # round (including DECREASES — a pair whose only heap entries
-        # carry stale higher counts would otherwise become unreachable)
-        for p in changed:
-            c = counts.get(p)
-            if c:
-                heapq.heappush(heap, (-c, p[0], p[1]))
-        if applied_out is not None:
-            applied_out.append(applied)
-    if state_out is not None:
-        state_out.extend((toks, wf) for toks, wf in words)
-    return merges
 
 
 def trainer_final_state(
@@ -324,91 +96,6 @@ def trainer_final_state(
     invariant checks; bounded input by construction."""
     merges3 = [(m[1], m[2], m[3]) for m in merges]
     return [(w, int(wf), replay_word(w, merges3)) for w, wf in wc_rows]
-
-
-# ---------------------------------------------------------------------------
-# Spark entry points
-# ---------------------------------------------------------------------------
-
-
-def train_merges_driver(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 2048,
-    max_words: int = DEFAULT_MAX_WORDS,
-) -> DataFrame:
-    """Driver-local exact sequential training: ONE corpus shuffle (the
-    capped word-count agg), one bounded collect (≤ max_words rows),
-    then pure-python rounds — merge count no longer multiplies Spark
-    jobs (the r11 trainer paid ~1 job per round)."""
-    spark = docs.sparkSession
-    wc = word_counts(docs, text_col, max_words).select("w", "wf").collect()
-    merges = train_merges_local([(r["w"], r["wf"]) for r in wc], n_merges)
-    return spark.createDataFrame(merges, schema=_MERGE_SCHEMA)
-
-
-def tokenize_with_merges_large(
-    docs: DataFrame,
-    merges: list,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, bpe_len, tok_digest) under an arbitrarily large merge
-    table: one Arrow-batched mapInPandas corpus pass, merge table
-    broadcast, per-worker distinct-word memoization.  Same output
-    contract as functions/bpe.tokenize_with_merges (md5 of the
-    space-joined token stream; NULL text → 0 tokens, md5(''));
-    normalization (lower, \\s+ split, [a-z0-9]+ filter) matches the
-    trainer's word-count stage."""
-    import hashlib
-
-    spark = docs.sparkSession
-    merges3 = [(m[1], m[2], m[3]) for m in merges]
-    bc = spark.sparkContext.broadcast(merges3)
-    sel = docs.select(F.col(id_col), F.col(text_col))
-    id_type = sel.schema[0].dataType
-    schema = StructType(
-        [
-            StructField(id_col, id_type),
-            StructField("bpe_len", LongType()),
-            StructField("tok_digest", StringType()),
-        ]
-    )
-    word_re = _WORD_APPLY_RE
-    ws_re = _WS_APPLY_RE
-
-    def gen(batches):
-        import pandas as pd
-
-        midx = build_merge_index(bc.value)
-        memo: dict = {}
-        for pdf in batches:
-            lens, digs = [], []
-            for txt in pdf[text_col]:
-                if txt is None:
-                    txt = ""
-                toks_all: list = []
-                for w in ws_re.split(str(txt).lower()):
-                    if not w or not word_re.match(w):
-                        continue
-                    t = memo.get(w)
-                    if t is None:
-                        t = replay_word_indexed(w, midx)
-                        memo[w] = t
-                    toks_all.extend(t)
-                lens.append(len(toks_all))
-                digs.append(
-                    hashlib.md5(" ".join(toks_all).encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "bpe_len": pd.array(lens, dtype="int64"),
-                    "tok_digest": digs,
-                }
-            )
-
-    return sel.mapInPandas(gen, schema=schema)
 
 
 def train_merges_batched(
@@ -625,8 +312,8 @@ def batched_tokenize_sql(
     batch: int = 256,
     max_words: int = DEFAULT_MAX_WORDS,
 ) -> str:
-    """DuckDB oracle for train_merges_batched → tokenize_with_merges_
-    large: derive the merge table, replay it over EVERY distinct
+    """DuckDB oracle for train_merges_batched → bpe.tokenize_with_merges:
+    derive the merge table, replay it over EVERY distinct
     corpus word (OOV included — apply is vocabulary-blind), reassemble
     per-document token streams in word order, hash (doc_id, bpe_len,
     tok_digest)."""

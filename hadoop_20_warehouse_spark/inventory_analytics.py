@@ -995,12 +995,12 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     word frequency → merge the argmax, lexicographic ties).  The corpus
     contributes ONE shuffle (the word-count partial agg, capped to the
     top-1000 words — the bound that makes every round corpus-size-
-    independent); each round is a vocab-sized agg + 1-row collect with
-    periodic lineage checkpoints (the train_centroids posture).  The
-    entire merge SEQUENCE — pairs, merged tokens, and integer counts —
-    is hash-checked against a DuckDB oracle that unrolls the rounds as
-    generated materialized CTE stages; all-integer, no floats, so the
-    reproduction is exact."""
+    independent), one bounded collect of that table, then the rounds
+    run on the driver with an incremental pair-count index (no Spark
+    job per round).  The entire merge SEQUENCE — pairs, merged
+    tokens, and integer counts — is hash-checked against a DuckDB
+    oracle that unrolls the rounds as generated materialized CTE
+    stages; all-integer, no floats, so the reproduction is exact."""
     docs = load_table(spark, sf_dir, "documents")
     return _bpe_mod().train_merges(
         docs, n_merges=_BPE_N_MERGES, max_words=_BPE_MAX_WORDS
@@ -1020,8 +1020,8 @@ def q_tokenize_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     with it — per doc the subword-token COUNT and an md5 digest of the
     full space-joined token stream, so the oracle hash-checks the
     exact token sequences, not just counts.  Application is one
-    row-local projection (the trained merges ride as nested replace
-    literals — bounded metadata, no UDF, no shuffle), so at 100 TB
+    Arrow-batched mapInPandas pass (the merge table broadcast, each
+    distinct word replayed once per worker — no shuffle), so at 100 TB
     tokenization costs exactly one corpus scan after the bounded
     training job."""
     B = _bpe_mod()
@@ -1120,10 +1120,11 @@ def _bpe_chunk_oracle() -> str:
 def q_doc_chunk_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window chunking over the BPE SUBWORD stream — the
     context-window layout cut by the counts the model actually sees:
-    train the 12-merge vocabulary, tokenize each document row-locally
-    (functions/bpe.bpe_tokens_expr as chunk_sliding_windows'
-    tokens_expr hook), then the established window/stride/integer-ceil
-    slice+digest rule over subwords instead of whitespace words.
+    train the 12-merge vocabulary, tokenize each document to its
+    subword array in the apply pass (functions/bpe.token_arrays, fed
+    to chunk_sliding_windows' tokens_expr hook), then the established
+    window/stride/integer-ceil slice+digest rule over subwords instead
+    of whitespace words.
     Map-only after the bounded training job; the oracle composes the
     tokenize chain with the chunk rule verbatim, hash-checking the
     exact chunk contents (digests), boundaries, and tail handling."""
@@ -1142,10 +1143,10 @@ def q_doc_chunk_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ]
     return chunk_sliding_windows(
-        docs,
+        B.token_arrays(docs, merges),
         window=_BPE_CHUNK_W,
         stride=_BPE_CHUNK_S,
-        tokens_expr=FF.expr(B.bpe_tokens_expr("text", merges)),
+        tokens_expr=FF.col("toks"),
     )
 
 
@@ -1211,7 +1212,7 @@ def _bpel_seq_prefix_oracle() -> str:
 @register("bpe_train_merges_large", oracle=_bpel_seq_prefix_oracle())
 def q_bpe_train_merges_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT sequential BPE training at a production merge count
-    (functions/bpe_scale.train_merges_driver): 2048 Sennrich rounds
+    (functions/bpe.train_merges): 2048 Sennrich rounds
     over the capped word table, run DRIVER-LOCALLY on the collected
     ≤1000-row table — one corpus shuffle + one bounded collect TOTAL
     (the r11 trainer paid ~1 Spark job per round; at 32k merges that
@@ -1224,9 +1225,8 @@ def q_bpe_train_merges_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     their full-depth validity is hash-checked by
     bpe_train_large_invariants, and tests pin python == Spark-round
     trainer to vocabulary exhaustion."""
-    BS = _bpes_mod()
     docs = _bpe_synth_docs(spark, sf_dir)
-    full = BS.train_merges_driver(
+    full = _bpe_mod().train_merges(
         docs, n_merges=_BPEL_SEQ_MERGES, max_words=_BPEL_MAX_WORDS
     )
     return full.filter(F.col("step") <= _BPEL_PREFIX)
@@ -1301,18 +1301,16 @@ def _bpel_tokenize_oracle() -> str:
 
 @register("tokenize_bpe_large", oracle=_bpel_tokenize_oracle())
 def q_tokenize_bpe_large(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge-count-independent tokenization (functions/bpe_scale.
-    tokenize_with_merges_large): train the 2048-merge batched
-    vocabulary, then tokenize every document in ONE Arrow-batched
-    mapInPandas corpus pass — merge table broadcast, per-word replay
-    with a present-pair-set guard, distinct words memoized per worker.
-    Emits the small form's exact contract (bpe_len + md5 digest of the
+    """Merge-count-independent tokenization (functions/bpe.
+    tokenize_with_merges, the same pass as tokenize_bpe): train the
+    2048-merge batched vocabulary, then tokenize every document in ONE
+    Arrow-batched mapInPandas corpus pass — merge table broadcast,
+    per-word replay through the substring prefilter, distinct words
+    memoized per worker.  Emits (bpe_len, md5 digest of the
     space-joined token stream), so the oracle — which derives the same
     merge table and replays it over every distinct corpus word, OOV
     words included — hash-checks the exact token sequences of all
-    15000 documents under a vocabulary 170× the r11 form's
-    demonstrated depth.  The r11 nested-replace expression remains the
-    dispatch target below LARGE_MERGE_THRESHOLD=64 merges."""
+    15000 documents under a vocabulary 170× tokenize_bpe's 12 merges."""
     BS = _bpes_mod()
     docs = _bpe_synth_docs(spark, sf_dir)
     merges = [
@@ -1327,7 +1325,7 @@ def q_tokenize_bpe_large(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         )
     ]
-    return BS.tokenize_with_merges_large(docs, merges)
+    return _bpe_mod().tokenize_with_merges(docs, merges)
 
 
 def _bpel_pack_oracle() -> str:
@@ -1345,7 +1343,7 @@ def _bpel_pack_oracle() -> str:
 def q_pack_token_bpe_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget packing under the PRODUCTION-SCALE tokenizer: the
     2048-merge batched vocabulary supplies per-doc subword counts via
-    the large apply path, then the established md5-shard
+    the apply pass, then the established md5-shard
     cumulative-sum placement (dedup/spans.pack_token_budget) packs by
     them — the large-vocabulary twin of pack_token_bpe, proving the
     scale path composes with the packing endgame.  The oracle chains
@@ -1366,7 +1364,7 @@ def q_pack_token_bpe_large(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         )
     ]
-    lens = BS.tokenize_with_merges_large(docs, merges).select(
+    lens = _bpe_mod().tokenize_with_merges(docs, merges).select(
         "doc_id", "bpe_len"
     )
     return pack_token_budget(
@@ -1580,7 +1578,7 @@ def q_tokenizer_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     art = BST.read_tokenizer(spark, store)  # latest == the one written
     reloaded = BST.load_merges(art)
     n_vocab = art["vocab"].count()
-    tok = BS.tokenize_with_merges_large(docs, reloaded)
+    tok = _bpe_mod().tokenize_with_merges(docs, reloaded)
     return tok.select(
         "doc_id",
         "bpe_len",
@@ -1697,8 +1695,9 @@ def q_tokenizer_version_pinning(spark: SparkSession, sf_dir: str) -> DataFrame:
     BST.write_tokenizer(merges_df, vocab_v2, store)    # auto -> 2
     pinned = BST.read_tokenizer(spark, store, version=1)
     latest = BST.read_tokenizer(spark, store)
-    tok1 = BS.tokenize_with_merges_large(docs, BST.load_merges(pinned))
-    tok2 = BS.tokenize_with_merges_large(docs, BST.load_merges(latest))
+    B = _bpe_mod()
+    tok1 = B.tokenize_with_merges(docs, BST.load_merges(pinned))
+    tok2 = B.tokenize_with_merges(docs, BST.load_merges(latest))
     return (
         tok1.select(
             "doc_id",

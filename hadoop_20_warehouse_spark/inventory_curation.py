@@ -2603,6 +2603,7 @@ def q_pipeline_release_endgame(spark: SparkSession, sf_dir: str) -> DataFrame:
         mixture_sample,
         pack_token_budget,
     )
+    from hadoop_20_warehouse_spark.functions import bpe as B
     from hadoop_20_warehouse_spark.functions import bpe_scale as BS
     from hadoop_20_warehouse_spark.functions import bpe_store as BST
     from hadoop_20_warehouse_spark.functions.hashing import md5_int64
@@ -2647,7 +2648,7 @@ def q_pipeline_release_endgame(spark: SparkSession, sf_dir: str) -> DataFrame:
     art = BST.read_tokenizer(spark, store)
     reloaded = BST.load_merges(art)
     n_vocab = art["vocab"].count()
-    tok = BS.tokenize_with_merges_large(trigram_stream(surv), reloaded)
+    tok = B.tokenize_with_merges(trigram_stream(surv), reloaded)
     survlen = (
         surv.select("doc_id", "source")
         .join(tok.select("doc_id", "bpe_len"), "doc_id", "left")
@@ -3189,6 +3190,7 @@ def q_pipeline_release_endgame_full(spark: SparkSession, sf_dir: str) -> DataFra
         mixture_with_epochs,
         pack_token_budget,
     )
+    from hadoop_20_warehouse_spark.functions import bpe as B
     from hadoop_20_warehouse_spark.functions import bpe_scale as BS
     from hadoop_20_warehouse_spark.functions import bpe_store as BST
     from hadoop_20_warehouse_spark.functions.hashing import md5_int64
@@ -3232,7 +3234,7 @@ def q_pipeline_release_endgame_full(spark: SparkSession, sf_dir: str) -> DataFra
     art = BST.read_tokenizer(spark, store)
     reloaded = BST.load_merges(art)
     n_vocab = art["vocab"].count()
-    tok = BS.tokenize_with_merges_large(
+    tok = B.tokenize_with_merges(
         trigram_stream(surv.select("doc_id", "text")), reloaded
     )
     survlen = (

@@ -233,10 +233,11 @@ def _stream_tok_oracle() -> str:
 
 @register("stream_tokenize_bpe", oracle=_stream_tok_oracle())
 def q_stream_tokenize_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming twin of tokenize_bpe
-    (streaming/windows.tokenize_stream): BPE vocab-apply tokenization
-    as a STATELESS stream projection — broadcast merge table, Arrow
-    mapInPandas replay, no watermark or state store — so ingest-time
+    """The streaming twin of tokenize_bpe (functions/bpe.
+    tokenize_with_merges on the stream frame): BPE vocab-apply
+    tokenization as a STATELESS stream projection — broadcast merge
+    table, Arrow mapInPandas replay, no watermark or state store — the
+    same pass the batch query runs, so ingest-time
     tokenization (the subword counts that admission/packing decisions
     consume on the stream path, e.g. budget_admit_stream) costs one
     map pass at any vocabulary size.  Registered on the batch table
@@ -261,7 +262,7 @@ def q_stream_tokenize_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         )
     ]
-    return W.tokenize_stream(docs, merges)
+    return B.tokenize_with_merges(docs, merges)
 
 
 def _stream_neardup_oracle() -> str:

@@ -209,6 +209,24 @@ def stream_job_scoped(
         mapped.unpersist()
 
 
+def _stderr_reporter_cols(sentinel: str):
+    """(is_err, err_body, parts, is_counter) over a wrapped pipe's
+    ``line`` column: the reference's stderr reporter parse
+    (PipeMapRed.java:425-514) on sentinel-marked lines only, so stdout
+    'reporter:' lines stay data; ``is_counter`` marks well-formed
+    3-field ``reporter:counter:`` lines."""
+    is_err = F.col("line").startswith(sentinel)
+    err_body = F.expr(f"substring(line, {len(sentinel) + 1})")
+    parts = F.split(
+        F.expr(f"substring(line, {len(sentinel) + len(COUNTER_PREFIX) + 1})"),
+        ",",
+    )
+    is_counter = (
+        is_err & err_body.startswith(COUNTER_PREFIX) & (F.size(parts) == 3)
+    )
+    return is_err, err_body, parts, is_counter
+
+
 def _stream_job_frames(
     df: DataFrame,
     mapper: str,
@@ -234,17 +252,9 @@ def _stream_job_frames(
         keep=4,
         warn_on_evict=True,
     )
-    is_err = F.col("line").startswith(sentinel)
-    # stderr side only: strip the sentinel, then the reference's
-    # reporter-prefix parse (stdout 'reporter:' lines stay data).
-    err_body = F.expr(f"substring(line, {len(sentinel) + 1})")
-    counter_payload = F.expr(
-        f"substring(line, {len(sentinel) + len(COUNTER_PREFIX) + 1})"
-    )
-    parts = F.split(counter_payload, ",")
+    is_err, _, parts, is_counter = _stderr_reporter_cols(sentinel)
     counters = (
-        mapped.filter(is_err)
-        .filter(err_body.startswith(COUNTER_PREFIX) & (F.size(parts) == 3))
+        mapped.filter(is_counter)
         .select(
             F.element_at(parts, 1).alias("group"),
             F.element_at(parts, 2).alias("name"),
@@ -295,15 +305,7 @@ def pipe_with_counters(
     """
     wrapped, sentinel = _wrap_stderr_append(cmd)
     merged = pipe_map(df, wrapped, separator)
-    is_err = F.col("line").startswith(sentinel)
-    err_body = F.expr(f"substring(line, {len(sentinel) + 1})")
-    counter_payload = F.expr(
-        f"substring(line, {len(sentinel) + len(COUNTER_PREFIX) + 1})"
-    )
-    parts = F.split(counter_payload, ",")
-    is_counter = (
-        is_err & err_body.startswith(COUNTER_PREFIX) & (F.size(parts) == 3)
-    )
+    is_err, err_body, parts, is_counter = _stderr_reporter_cols(sentinel)
     amount = F.element_at(parts, 3).cast("long")
     obs = Observation(observation_name)
     metrics = [

@@ -412,29 +412,6 @@ def classifier_gate_stream(
     )
 
 
-def tokenize_stream(
-    df: DataFrame,
-    merges: list,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Tokenization on the stream path — the streaming twin of the
-    BPE apply family: per arriving doc, the merge-count-independent
-    replay worker (functions/bpe_scale.tokenize_with_merges_large —
-    broadcast merge table, Arrow-batched mapInPandas, memoized
-    distinct words) emits (id, bpe_len, tok_digest).  STATELESS — a
-    pure projection over micro-batches with no watermark or state
-    store, so ingest-time tokenization (the counts packing/budgeting
-    decisions need) costs one map pass at any vocabulary size;
-    identical semantics to the batch form by construction (pinned by
-    tests/test_streaming.test_streaming_tokenize_matches_batch)."""
-    from hadoop_20_warehouse_spark.functions.bpe_scale import (
-        tokenize_with_merges_large,
-    )
-
-    return tokenize_with_merges_large(df, merges, id_col, text_col)
-
-
 def budget_admit_stream(
     df: DataFrame,
     budgets: dict[str, int],

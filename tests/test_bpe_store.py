@@ -11,7 +11,7 @@ import os
 import pytest
 
 from hadoop_20_warehouse_spark.functions import bpe_store as BST
-from hadoop_20_warehouse_spark.functions.bpe_scale import _MERGE_SCHEMA
+from hadoop_20_warehouse_spark.functions.bpe import _MERGE_SCHEMA
 
 
 def _merges_df(spark, rows):

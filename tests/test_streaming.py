@@ -624,25 +624,24 @@ def test_streaming_classifier_matches_batch(spark, tmp_path):
 
 
 def test_streaming_tokenize_matches_batch(spark, tmp_path):
-    """Stream-path tokenization: tokenize_stream over a file-source
-    replay of the documents table must equal the batch BPE apply
-    row-for-row (stateless broadcast-vocabulary projection, one
+    """Stream-path tokenization: tokenize_with_merges over a
+    file-source replay of the documents table must equal the batch BPE
+    apply row-for-row (stateless broadcast-vocabulary projection, one
     availableNow pass, merge-count-independent)."""
     from hadoop_20_warehouse_spark.catalog import load_table
     from hadoop_20_warehouse_spark.functions import bpe as B
-    from hadoop_20_warehouse_spark.streaming.windows import tokenize_stream
     from tests.conftest import SF_DIR
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     merges = [
-        tuple(r) for r in sorted(B._train_merges_rounds(docs, n_merges=12).collect())
+        tuple(r) for r in sorted(B.train_merges(docs, n_merges=12).collect())
     ]
     src = str(tmp_path / "docs_tok_stream")
     docs.repartition(3).write.parquet(src)
 
     stream = spark.readStream.schema(docs.schema).parquet(src)
     q = (
-        tokenize_stream(stream, merges)
+        B.tokenize_with_merges(stream, merges)
         .writeStream.format("memory")
         .queryName("tok_stream")
         .trigger(availableNow=True)

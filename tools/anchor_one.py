@@ -4,10 +4,13 @@ min-of-3 cache-cold at sf0.1; take the per-query median of the five.
 Usage: python tools/anchor_one.py <query_name>
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so an A/B run from a clone of
+# another commit times that clone's package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 

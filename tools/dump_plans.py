@@ -4,6 +4,9 @@ plans/r18/<name>_<suffix>.txt (default suffix: before).
 
 Usage: python tools/dump_plans.py [--suffix after] [--only a,b,c]
 
+``--only`` takes bench names and any other registered query name; a
+name that is neither exits non-zero before any plan is built.
+
 The optimization-round deliverable: the judge checks plan claims in
 OPTIMIZATION_r18.md against these files.  Queries whose construction
 runs eager jobs (checkpointed iterations, staged writes) still produce
@@ -33,15 +36,22 @@ def main() -> None:
 
     from bench import BENCH_QUERIES
     from hadoop_20_warehouse_spark.plans.explain import formatted_plan
+    from hadoop_20_warehouse_spark.registry import QUERIES
     from hadoop_20_warehouse_spark.session import get_session
 
-    only = {s for s in args.only.split(",") if s}
+    only = [s for s in args.only.split(",") if s]
+    unknown = [n for n in only if n not in BENCH_QUERIES and n not in QUERIES]
+    if unknown:
+        sys.exit("dump_plans: no bench or registered query named: "
+                 + ", ".join(unknown))
+    targets = (
+        {n: BENCH_QUERIES.get(n) or QUERIES[n] for n in only}
+        if only else BENCH_QUERIES
+    )
     outdir = args.outdir or os.path.join(REPO, "plans", args.round)
     os.makedirs(outdir, exist_ok=True)
     spark = get_session()
-    for name, fn in BENCH_QUERIES.items():
-        if only and name not in only:
-            continue
+    for name, fn in targets.items():
         path = os.path.join(outdir, f"{name}_{args.suffix}.txt")
         try:
             spark.sparkContext.setJobDescription(f"plan:{name}")

@@ -24,8 +24,9 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
@@ -43,6 +44,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     from hadoop_20_warehouse_spark.functions import bpe_scale as BS
+    from hadoop_20_warehouse_spark.functions.bpe import tokenize_with_merges
     from hadoop_20_warehouse_spark.inventory_analytics import (
         _BPEN_BATCH,
         _BPEN_MAX_WORDS,
@@ -90,10 +92,10 @@ def main() -> None:
         # corpus-pass data term, merge table held constant)
         merges = [tuple(r) for r in sorted(train(SF01).collect())]
         a_small = steady(
-            lambda: force(BS.tokenize_with_merges_large(trig(SF01), merges))
+            lambda: force(tokenize_with_merges(trig(SF01), merges))
         )
         a_large = steady(
-            lambda: force(BS.tokenize_with_merges_large(trig(sf1), merges))
+            lambda: force(tokenize_with_merges(trig(sf1), merges))
         )
         out["tokenize_bpe_natural_apply"] = {
             "small_s": a_small,
