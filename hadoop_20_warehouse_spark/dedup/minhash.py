@@ -97,7 +97,6 @@ def minhash_signature_rowlocal(
     text_col: str,
     n_hashes: int = DEFAULT_N_HASHES,
     width: int = DEFAULT_SHINGLE,
-    scatter_input: bool = True,
 ) -> DataFrame:
     """(id, m0..m{k-1}) computed entirely row-local — no explode, no
     shuffle: shingle positions, md5 hashes, and all k minima are
@@ -106,14 +105,12 @@ def minhash_signature_rowlocal(
     explode+groupBy form needs; signatures flow straight into banding
     partition-local. Identical output to ``minhash_signature_cols``.
 
-    ``scatter_input=False`` skips the CPU-spread repartition — for
-    STREAMING inputs (a pure projection composes with readStream;
-    the batch-only scatter does not) and for callers that already
-    control partitioning."""
-    if scatter_input:
-        from hadoop_20_warehouse_spark.session import scatter
+    A narrow batch input is scattered first; ``scatter`` passes a
+    STREAMING input (the projection composes with readStream) or one
+    a caller already repartitioned through untouched."""
+    from hadoop_20_warehouse_spark.session import scatter
 
-        df = scatter(df)
+    df = scatter(df)
     p = MERSENNE_P
     hs = F.expr(
         f"transform(sequence(1, greatest(length({text_col}) - {width - 1}, 1)), "

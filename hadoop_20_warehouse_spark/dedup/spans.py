@@ -55,7 +55,6 @@ def exact_span_dedup(
     text_col: str = "text",
     chunk_w: int = 4,
     keep_text: bool = False,
-    scatter_input: bool = True,
 ) -> DataFrame:
     """Keep only the GLOBALLY first occurrence (ordered by id, then
     position) of every distinct ``chunk_w``-token chunk; report per-doc
@@ -76,16 +75,14 @@ def exact_span_dedup(
     skew escape).  Then one chunk-keyed equi-join marks keepers and one
     id-keyed agg reassembles.  All shuffles keyed; no all-pairs.
 
-    ``scatter_input`` (r18 optimization round): spread a narrow input
-    before the CPU-dense tokenize+chunk map — a single-file scan plans
-    ONE task (the text_repetition_stats / minhash precedent); a
-    well-split production scan passes through unshuffled.  Callers
-    that already scattered (the curation chain) pass False."""
-    if scatter_input:
-        from hadoop_20_warehouse_spark.session import scatter
+    The input is scattered (r18 optimization round) before the
+    CPU-dense tokenize+chunk map — a single-file scan plans ONE task
+    (the text_repetition_stats / minhash precedent); a well-split
+    production scan, or one a caller already spread (the curation
+    chain), passes through unshuffled."""
+    from hadoop_20_warehouse_spark.session import scatter
 
-        docs = scatter(docs)
-    chunked = _chunked(docs, id_col, text_col, chunk_w)
+    chunked = _chunked(scatter(docs), id_col, text_col, chunk_w)
     firsts = chunked.groupBy("chunk").agg(
         F.min(F.struct(id_col, "pos")).alias("first_occ")
     )

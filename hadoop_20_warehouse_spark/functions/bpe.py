@@ -87,7 +87,10 @@ DRIVER_VOCAB_MAX = 262_144
 # with [a-z0-9]+ word characters.
 _EOW = "</w>"
 
-_WORD_RE = "^[a-z0-9]+$"
+# \z, not $: Java's $ also matches before a final line terminator
+# (U+2028, U+0085, ...), which RE2 (the DuckDB oracles) and the
+# replay apply's \Z do not.  Both Java rlike and RE2 accept \z.
+_WORD_RE = r"^[a-z0-9]+\z"
 
 # Worker-side normalization for the replay apply.  The whitespace
 # split is an ASCII-explicit class, NOT python \s: the trainer's

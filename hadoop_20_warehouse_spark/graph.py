@@ -303,7 +303,6 @@ def label_propagation(
     rounds: int,
     src: str = "a",
     dst: str = "b",
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """(node, label) after ``rounds`` SYNCHRONOUS label-propagation
     rounds over an undirected simple graph given as distinct
@@ -325,8 +324,7 @@ def label_propagation(
     Scale shape, per round: one neighbor-keyed join of the label
     frame against the bidirected edge list + one (node, label)
     partial-aggregable count + one struct-min election — all keyed
-    shuffles, no window, no driver data.  ``checkpoint_every``
-    truncates lineage as in pagerank_integer."""
+    shuffles, no window, no driver data."""
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     und = fwd.unionByName(
         fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -334,7 +332,7 @@ def label_propagation(
     labels = und.select(F.col("u").alias("node")).distinct().withColumn(
         "label", F.col("node").cast("long")
     )
-    for i in range(rounds):
+    for _ in range(rounds):
         counted = (
             und.join(labels.withColumnRenamed("node", "v"), on="v")
             .groupBy(F.col("u").alias("node"), "label")
@@ -346,8 +344,6 @@ def label_propagation(
                          F.col("label").alias("lb"))
             ).alias("_w")
         ).select("node", F.col("_w.lb").cast("long").alias("label"))
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=True)
     return labels
 
 

@@ -2790,8 +2790,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round one neighbor-keyed join + one (node, label)
     partial agg + one struct-min election — all keyed shuffles; at
     100 TB the per-round cost is O(E) with map-side combine on the
-    label counts, and checkpoint_every bounds lineage for deep
-    runs."""
+    label counts."""
     from hadoop_20_warehouse_spark.graph import label_propagation
 
     li = load_table(spark, sf_dir, "lineitem").select(

@@ -1130,14 +1130,13 @@ def _curated_gated(spark: SparkSession, sf_dir: str, keep_stats: bool = False) -
 
     # r18 optimization round: scatter ahead of the redact regex chain
     # so the whole CPU-dense curation head parallelizes (single-file
-    # scans plan one task); exact_span_dedup's own scatter is then
-    # skipped — the input is already spread.  Measured curate_pack
-    # 2.35 → 1.72 s / export 3.60 → 2.79 s at sf0.1, hash-identical.
+    # scans plan one task); exact_span_dedup's own scatter then sees
+    # the repartition under the projection and passes the input
+    # through.  Measured curate_pack 2.35 → 1.72 s / export 3.60 →
+    # 2.79 s at sf0.1, hash-identical.
     docs = scatter(load_table(spark, sf_dir, "documents"))
     red = docs.select("doc_id", T.redact_pii(_pii_augment()).alias("text"))
-    deduped = exact_span_dedup(
-        red, chunk_w=_PARA_W, keep_text=True, scatter_input=False
-    )
+    deduped = exact_span_dedup(red, chunk_w=_PARA_W, keep_text=True)
     gated = deduped.filter(
         (T.token_count(F.col("kept_text")) >= _CURATE_MIN_TOKENS)
         & (F.col("n_removed") * 2 < F.col("n_chunks"))

@@ -2100,7 +2100,7 @@ def q_multimodal_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame({"id": pdf["id"], "payload": payloads})
 
     imgs = _scatter(orders).mapInPandas(enc, "id long, payload binary")
-    return decode_image_meta(imgs, "id", "payload", scatter_input=False)
+    return decode_image_meta(imgs, "id", "payload")
 
 
 # gradient pixels c(x,y) = c0 + x + y with c0 < 200, x < 32, y < 18 —
@@ -2182,7 +2182,7 @@ def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame({"id": pdf["id"], "payload": payloads})
 
     imgs = _scatter(orders).mapInPandas(enc, "id long, payload binary")
-    return decode_image_meta(imgs, "id", "payload", scatter_input=False)
+    return decode_image_meta(imgs, "id", "payload")
 
 
 # even-gray JPEG exactness: a uniform block's only nonzero DCT
@@ -2261,7 +2261,7 @@ def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame({"id": pdf["id"], "payload": payloads})
 
     imgs = _scatter(orders).mapInPandas(enc, "id long, payload binary")
-    return decode_image_meta(imgs, "id", "payload", scatter_input=False)
+    return decode_image_meta(imgs, "id", "payload")
 
 
 # two-color vertical stripes with EVEN width: each row holds exactly
@@ -2329,7 +2329,7 @@ def q_multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame({"id": pdf["id"], "payload": payloads})
 
     imgs = _scatter(orders).mapInPandas(enc, "id long, payload binary")
-    return decode_image_meta(imgs, "id", "payload", scatter_input=False)
+    return decode_image_meta(imgs, "id", "payload")
 
 
 _MP4_META_SQL = """
@@ -2399,7 +2399,7 @@ def q_multimodal_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame({"id": pdf["id"], "payload": payloads})
 
     vids = _scatter(orders).mapInPandas(enc, "id long, payload binary")
-    return video_container_meta(vids, "id", "payload", scatter_input=False)
+    return video_container_meta(vids, "id", "payload")
 
 
 # per-frame gray value 2·((custkey + 7·i) % 127) is EVEN → the
@@ -2501,7 +2501,7 @@ def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame({"id": pdf["id"], "payload": payloads})
 
     vids = _scatter(orders).mapInPandas(enc, "id long, payload binary")
-    return decode_video_frames(vids, "id", "payload", step=2, scatter_input=False)
+    return decode_video_frames(vids, "id", "payload", step=2)
 
 
 _SSF_SQL = """
@@ -2648,7 +2648,7 @@ def q_multimodal_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame({"id": pdf["id"], "payload": payloads})
 
     vids = _scatter(orders).mapInPandas(enc, "id long, payload binary")
-    frames = decode_video_frames(vids, "id", "payload", step=1, scatter_input=False)
+    frames = decode_video_frames(vids, "id", "payload", step=1)
     return (
         frames.select(
             "id",
@@ -2708,7 +2708,7 @@ def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame({"id": pdf["id"], "payload": payloads})
 
     wavs = _scatter(cust).mapInPandas(enc, "id long, payload binary")
-    return audio_features(wavs, "id", "payload", scatter_input=False)
+    return audio_features(wavs, "id", "payload")
 
 
 _RESIZE_REAL_SQL = """
@@ -2762,9 +2762,7 @@ def q_multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame({"id": pdf["id"], "payload": payloads})
 
     imgs = _scatter(docs).mapInPandas(enc, "id long, payload binary")
-    return resize_image_real(
-        imgs, "id", "payload", box_w=64, box_h=48, scatter_input=False
-    ).drop(
+    return resize_image_real(imgs, "id", "payload", box_w=64, box_h=48).drop(
         "resized_ppm"
     )
 

@@ -1069,11 +1069,13 @@ def q_knn_ivfpq_trained_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IDX_JACCARD_MIN_AGREE = 4  # est_jaccard >= 4/8 — the verify threshold
 
 
-def _minhash_index_delta_oracle() -> str:
-    """Cross-corpus twin of minhash_lsh_pairs_sql: base (doc_id%10!=0)
-    and delta (doc_id%10==0) signatures derived from scratch, banded,
-    bucket-joined ACROSS the corpora, verified on integer signature
-    agreement, best base match elected per delta doc."""
+def _minhash_delta_pairs_ctes(delta_id: str) -> tuple[str, str]:
+    """The shared head of the delta-vs-base MinHash oracles: base
+    (doc_id%10!=0) and delta (doc_id%10==0) signatures derived from
+    scratch, banded, and bucket-joined ACROSS the corpora into
+    ``cand`` (``delta_id``, base_id).  Returns the WITH clause through
+    ``cand`` and the integer signature-agreement expression over
+    ``sd``/``sb``."""
     from hadoop_20_warehouse_spark.functions.hashing import md5_int64_sql
 
     k = MH.DEFAULT_N_HASHES
@@ -1103,7 +1105,7 @@ def _minhash_index_delta_oracle() -> str:
     agree = " + ".join(
         f"(CASE WHEN sd.m{i} = sb.m{i} THEN 1 ELSE 0 END)" for i in range(k)
     )
-    return f"""
+    ctes = f"""
 WITH sh AS (
   SELECT doc_id AS id, (doc_id % 10 = 0) AS is_delta,
          substring(text, pos, {w}) AS shingle
@@ -1128,10 +1130,21 @@ bands_d AS (
 {band_rows('sig_d')}
 ),
 cand AS (
-  SELECT DISTINCT d.id AS delta_id, b.id AS base_id
+  SELECT DISTINCT d.id AS {delta_id}, b.id AS base_id
   FROM bands_d d JOIN bands_b b
     ON d.band_idx = b.band_idx AND d.band_hash = b.band_hash
-),
+)"""
+    return ctes, agree
+
+
+def _minhash_index_delta_oracle() -> str:
+    """Cross-corpus twin of minhash_lsh_pairs_sql: the shared
+    delta-vs-base candidate pairs (``_minhash_delta_pairs_ctes``),
+    verified on integer signature agreement, best base match elected
+    per delta doc."""
+    ctes, agree = _minhash_delta_pairs_ctes("delta_id")
+    k = MH.DEFAULT_N_HASHES
+    return f"""{ctes},
 verified AS (
   SELECT c.delta_id, c.base_id, {agree} AS agree
   FROM cand c

@@ -267,68 +267,17 @@ def q_stream_tokenize_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stream_neardup_oracle() -> str:
     """Verified delta-vs-index pairs — the pair-level prefix of
-    inventory_llm's _minhash_index_delta_oracle (same corpus split,
-    same signature/band derivation, same >= 4/8 verify), emitted as
-    (doc_id, base_id, est_jaccard) alerts."""
+    inventory_llm's _minhash_index_delta_oracle (the same candidate
+    pairs from _minhash_delta_pairs_ctes, same >= 4/8 verify), emitted
+    as (doc_id, base_id, est_jaccard) alerts."""
     from hadoop_20_warehouse_spark.dedup import minhash as MH
-    from hadoop_20_warehouse_spark.functions.hashing import md5_int64_sql
+    from hadoop_20_warehouse_spark.inventory_llm import (
+        _minhash_delta_pairs_ctes,
+    )
 
+    ctes, agree = _minhash_delta_pairs_ctes("doc_id")
     k = MH.DEFAULT_N_HASHES
-    bands = MH.DEFAULT_BANDS
-    rpb = k // bands
-    w = MH.DEFAULT_SHINGLE
-    p = MH.MERSENNE_P
-    h = f"({md5_int64_sql('shingle')} % {p})"
-    min_cols = ",\n         ".join(
-        f"MIN(({MH.HASH_A[i]} * h + {MH.HASH_B[i]}) % {p}) AS m{i}"
-        for i in range(k)
-    )
-
-    def band_rows(src: str) -> str:
-        return "\n  UNION ALL\n".join(
-            "  SELECT id, {b} AS band_idx, md5({concat}) AS band_hash FROM {src}".format(
-                b=b,
-                src=src,
-                concat=" || ',' || ".join(
-                    f"CAST(m{i} AS VARCHAR)"
-                    for i in range(b * rpb, (b + 1) * rpb)
-                ),
-            )
-            for b in range(bands)
-        )
-
-    agree = " + ".join(
-        f"(CASE WHEN sd.m{i} = sb.m{i} THEN 1 ELSE 0 END)" for i in range(k)
-    )
-    return f"""
-WITH sh AS (
-  SELECT doc_id AS id, (doc_id % 10 = 0) AS is_delta,
-         substring(text, pos, {w}) AS shingle
-  FROM (
-    SELECT doc_id, text,
-           unnest(generate_series(1, greatest(len(text) - {w - 1}, 1))) AS pos
-    FROM documents
-  )
-),
-hashed AS (SELECT id, is_delta, {h} AS h FROM sh),
-sig AS (
-  SELECT id, BOOL_OR(is_delta) AS is_delta,
-         {min_cols}
-  FROM hashed GROUP BY id
-),
-sig_b AS (SELECT * FROM sig WHERE NOT is_delta),
-sig_d AS (SELECT * FROM sig WHERE is_delta),
-bands_b AS (
-{band_rows('sig_b')}
-),
-bands_d AS (
-{band_rows('sig_d')}
-),
-cand AS (
-  SELECT DISTINCT d.id AS doc_id, b.id AS base_id
-  FROM bands_d d JOIN bands_b b
-    ON d.band_idx = b.band_idx AND d.band_hash = b.band_hash
-)
+    return f"""{ctes}
 SELECT c.doc_id, c.base_id,
        CAST({agree} AS DOUBLE) / {k} AS est_jaccard
 FROM cand c

@@ -69,9 +69,7 @@ def decode_image_real(payload: bytes) -> tuple[int, int]:
     )
 
 
-def decode_meta(
-    df: DataFrame, id_col: str, bin_col: str, scatter_input: bool = True
-) -> DataFrame:
+def decode_meta(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
     """(id, byte_len, content_md5, width, height) per binary payload
     via Arrow-batched mapInPandas.
 
@@ -109,8 +107,7 @@ def decode_meta(
 
     from hadoop_20_warehouse_spark.session import scatter
 
-    sel = df.select(F.col(id_col), F.col(bin_col))
-    return (scatter(sel) if scatter_input else sel).mapInPandas(
+    return scatter(df.select(F.col(id_col), F.col(bin_col))).mapInPandas(
         run, schema=DECODE_META_SCHEMA
     )
 
@@ -122,8 +119,7 @@ RESIZE_SCHEMA = (
 
 
 def resize_stub(
-    df: DataFrame, id_col: str, bin_col: str, box_w: int = 256, box_h: int = 256,
-    scatter_input: bool = True,
+    df: DataFrame, id_col: str, bin_col: str, box_w: int = 256, box_h: int = 256
 ) -> DataFrame:
     """Aspect-fit image resize plumbing: (id, width, height, out_width,
     out_height, resized_md5) via Arrow-batched mapInPandas.
@@ -175,8 +171,7 @@ def resize_stub(
 
     from hadoop_20_warehouse_spark.session import scatter
 
-    sel = df.select(F.col(id_col), F.col(bin_col))
-    return (scatter(sel) if scatter_input else sel).mapInPandas(
+    return scatter(df.select(F.col(id_col), F.col(bin_col))).mapInPandas(
         run, schema=RESIZE_SCHEMA
     )
 
@@ -216,8 +211,7 @@ FRAME_SAMPLE_SCHEMA = "id long, n_frames long, frame_idx long, frame_md5 string"
 
 
 def frame_sample_stub(
-    df: DataFrame, id_col: str, bin_col: str, step: int = 10, max_frames: int = 120,
-    scatter_input: bool = True,
+    df: DataFrame, id_col: str, bin_col: str, step: int = 10, max_frames: int = 120
 ) -> DataFrame:
     """Video frame-sampling plumbing: one output row per sampled frame
     (every ``step``-th), a UDTF-shaped mapInPandas (1 row in → many
@@ -255,8 +249,7 @@ def frame_sample_stub(
 
     from hadoop_20_warehouse_spark.session import scatter
 
-    sel = df.select(F.col(id_col), F.col(bin_col))
-    return (scatter(sel) if scatter_input else sel).mapInPandas(
+    return scatter(df.select(F.col(id_col), F.col(bin_col))).mapInPandas(
         run, schema=FRAME_SAMPLE_SCHEMA
     )
 
@@ -295,9 +288,7 @@ IMAGE_META_SCHEMA = (
 )
 
 
-def decode_image_meta(
-    df: DataFrame, id_col: str, bin_col: str, scatter_input: bool = True
-) -> DataFrame:
+def decode_image_meta(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
     """REAL image decode over Arrow batches: sniff the container magic,
     parse PPM/BMP/PNG/JPEG pixels with numpy (PNG: zlib inflate +
     scanline unfiltering; JPEG: baseline Huffman + IDCT), and emit
@@ -336,8 +327,7 @@ def decode_image_meta(
 
     from hadoop_20_warehouse_spark.session import scatter
 
-    sel = df.select(F.col(id_col), F.col(bin_col))
-    return (scatter(sel) if scatter_input else sel).mapInPandas(
+    return scatter(df.select(F.col(id_col), F.col(bin_col))).mapInPandas(
         run, schema=IMAGE_META_SCHEMA
     )
 
@@ -348,9 +338,7 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def audio_features(
-    df: DataFrame, id_col: str, bin_col: str, scatter_input: bool = True
-) -> DataFrame:
+def audio_features(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
     """REAL audio feature extraction: PCM WAV parsed with stdlib
     ``wave``, sample statistics (peak, RMS) computed with numpy over
     the actual int16 samples."""
@@ -377,8 +365,7 @@ def audio_features(
 
     from hadoop_20_warehouse_spark.session import scatter
 
-    sel = df.select(F.col(id_col), F.col(bin_col))
-    return (scatter(sel) if scatter_input else sel).mapInPandas(
+    return scatter(df.select(F.col(id_col), F.col(bin_col))).mapInPandas(
         run, schema=AUDIO_FEATURES_SCHEMA
     )
 
@@ -389,9 +376,7 @@ VIDEO_META_SCHEMA = (
 )
 
 
-def video_container_meta(
-    df: DataFrame, id_col: str, bin_col: str, scatter_input: bool = True
-) -> DataFrame:
+def video_container_meta(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
     """REAL ISO-BMFF container metadata over Arrow batches
     (multimodal/mp4.parse_mp4_meta): duration, track inventory, video
     dimensions, sample counts — the catalog/validate stage of a video
@@ -423,8 +408,7 @@ def video_container_meta(
 
     from hadoop_20_warehouse_spark.session import scatter
 
-    sel = df.select(F.col(id_col), F.col(bin_col))
-    return (scatter(sel) if scatter_input else sel).mapInPandas(
+    return scatter(df.select(F.col(id_col), F.col(bin_col))).mapInPandas(
         run, schema=VIDEO_META_SCHEMA
     )
 
@@ -436,8 +420,7 @@ RESIZE_REAL_SCHEMA = (
 
 
 def resize_image_real(
-    df: DataFrame, id_col: str, bin_col: str, box_w: int = 256, box_h: int = 256,
-    scatter_input: bool = True,
+    df: DataFrame, id_col: str, bin_col: str, box_w: int = 256, box_h: int = 256
 ) -> DataFrame:
     """REAL aspect-fit resize: decode (PPM/BMP), integer-exact fit-box
     (same math as resize_stub and its SQL twin), numpy nearest-neighbor
@@ -480,7 +463,6 @@ def resize_image_real(
 
     from hadoop_20_warehouse_spark.session import scatter
 
-    sel = df.select(F.col(id_col), F.col(bin_col))
-    return (scatter(sel) if scatter_input else sel).mapInPandas(
+    return scatter(df.select(F.col(id_col), F.col(bin_col))).mapInPandas(
         run, schema=RESIZE_REAL_SCHEMA
     )

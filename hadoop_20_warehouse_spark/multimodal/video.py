@@ -565,8 +565,7 @@ VIDEO_FRAME_SCHEMA = (
 
 
 def decode_video_frames(
-    df: DataFrame, id_col: str, bin_col: str, step: int = 1,
-    scatter_input: bool = True,
+    df: DataFrame, id_col: str, bin_col: str, step: int = 1
 ) -> DataFrame:
     """REAL video frame decode over Arrow batches: demux the container
     (AVI or ISO-BMFF), decode every ``step``-th JPEG frame with the
@@ -615,7 +614,6 @@ def decode_video_frames(
 
     from hadoop_20_warehouse_spark.session import scatter
 
-    sel = df.select(F.col(id_col), F.col(bin_col))
-    return (scatter(sel) if scatter_input else sel).mapInPandas(
+    return scatter(df.select(F.col(id_col), F.col(bin_col))).mapInPandas(
         run, schema=VIDEO_FRAME_SCHEMA
     )

@@ -316,6 +316,15 @@ def persist_generation(tag: str, *dfs, keep: int = 2, warn_on_evict: bool = Fals
     return tuple(out) if len(out) > 1 else out[0]
 
 
+# Single-child plan nodes that keep their child's partitioning: a
+# repartition below a chain of these still decides how the frame is
+# spread.
+_KEEPS_PARTITIONING = frozenset({
+    "Project", "Filter", "Generate", "MapInPandas", "MapInArrow",
+    "ArrowEvalPython", "BatchEvalPython",
+})
+
+
 def scatter(df, min_partitions: int | None = None):
     """Spread a narrow input across the cluster before CPU-dense
     per-row work (hashing, LSH signatures, decode UDFs).
@@ -326,9 +335,20 @@ def scatter(df, min_partitions: int | None = None):
     — the same problem the reference solved with NLineInputFormat
     (mapred/lib/NLineInputFormat.java:59: force N records per split so
     CPU-bound mappers parallelize). ``scatter`` is that operator in
-    Spark terms: a round-robin repartition applied ONLY when the frame
-    would plan fewer tasks than the target, so well-partitioned
-    production inputs pass through unchanged (no shuffle).
+    Spark terms, and it alone decides whether to spread, in order:
+
+    1. A streaming frame passes through untouched, with no probe (a
+       streaming plan cannot be optimized outside ``writeStream``).
+    2. A frame already spread upstream passes through: a
+       ``Repartition`` or ``RepartitionByExpression`` reached from the
+       optimized plan's root through single-child nodes that keep
+       their child's partitioning (``_KEEPS_PARTITIONING``: projections,
+       filters, generators, mapInPandas/mapInArrow and Python UDF
+       evaluation) is the caller's choice, and it is honoured.
+    3. Otherwise a round-robin repartition is applied ONLY when the
+       frame would plan fewer tasks than the target, so
+       well-partitioned production inputs pass through unchanged (no
+       shuffle).
 
     The few-tasks probe reads Catalyst's optimized-plan size stats
     (file-source sizes propagate through projections) — never
@@ -338,11 +358,16 @@ def scatter(df, min_partitions: int | None = None):
     Long.Max) are treated as large and pass through untouched; if the
     stats probe itself fails (py4j API drift), the frame likewise
     passes through, with a loud warning."""
+    if df.isStreaming:
+        return df
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
-        if plan.nodeName() in ("Repartition", "RepartitionByExpression"):
+        node = plan
+        while node.nodeName() in _KEEPS_PARTITIONING:
+            node = node.children().apply(0)
+        if node.nodeName() in ("Repartition", "RepartitionByExpression"):
             return df  # caller already chose a partitioning — honor it
         size = int(plan.stats().sizeInBytes())
         max_pb = int(

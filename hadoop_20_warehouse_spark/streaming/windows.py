@@ -724,9 +724,10 @@ def neardup_alert_stream(
 ) -> DataFrame:
     """Ingest-time near-dup alerts against a PERSISTED MinHash index —
     the streaming twin of dedup_minhash_index_delta's probe: each
-    arriving doc is signed ROW-LOCALLY (minhash_signature_rowlocal,
-    scatter_input=False — a pure projection, streaming-legal), its
-    band digests exploded WITH the signature carried on every band row
+    arriving doc is signed ROW-LOCALLY (minhash_signature_rowlocal —
+    a pure projection, streaming-legal; its scatter passes a streaming
+    frame through and spreads only a narrow batch one), its band
+    digests exploded WITH the signature carried on every band row
     (so verification needs no re-join against the stream side — a
     stream self-join would be a stream-stream join), then ONE
     stream-static equi-join on (band_idx, band_hash) against the
@@ -749,9 +750,7 @@ def neardup_alert_stream(
     k = MH.DEFAULT_N_HASHES
     bands = MH.DEFAULT_BANDS
     rpb = k // bands
-    sig = MH.minhash_signature_rowlocal(
-        df, id_col, text_col, scatter_input=False
-    )
+    sig = MH.minhash_signature_rowlocal(df, id_col, text_col)
     band_structs = [
         F.struct(
             F.lit(b).alias("band_idx"),

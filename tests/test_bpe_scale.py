@@ -74,10 +74,12 @@ def _nested_replace_tokenize(docs, merges, id_col="doc_id", text_col="text"):
     chain = B._seq0_spark("w")
     for _, pa, pb, merged, _ in merges:
         chain = f"replace({chain}, '|{pa}||{pb}|', '|{merged}|')"
+    # a SQL string literal unescapes backslashes, so double them
+    word_re = B._WORD_RE.replace("\\", "\\\\")
     flat = (
         f"flatten(transform("
         f"filter(filter(split(lower(coalesce({text_col}, '')), '\\\\s+'), "
-        f"x -> x != ''), x -> x rlike '{B._WORD_RE}'), "
+        f"x -> x != ''), x -> x rlike '{word_re}'), "
         f"w -> filter(split({chain}, '\\\\|\\\\|'), x -> x != '')))"
     )
     return docs.select(
@@ -145,6 +147,18 @@ def test_local_trainer_exhaustion_parity(spark):
     )
     assert [tuple(m) for m in local] == spark_rows
     assert len(local) == 2  # (a,b) -> ab, (ab,</w>) -> ab</w>, then done
+
+
+def test_word_counts_drops_words_ending_in_a_line_terminator(spark):
+    """The [a-z0-9]+ word filter anchors at the true end of the word:
+    Java's ``$`` also matches before a final U+2028, which would keep
+    'ab\\u2028' in the trainer's vocabulary while the DuckDB oracles
+    (RE2) and the replay apply drop it."""
+    docs = spark.createDataFrame(
+        [(1, "ab\u2028 cd ab\u2028 ab")], ["doc_id", "text"]
+    )
+    wc = B.word_counts(docs)
+    assert {r["w"]: r["wf"] for r in wc.collect()} == {"ab": 1, "cd": 1}
 
 
 def test_local_trainer_exhausts_cleanly_at_depth(spark, sf_dir):

@@ -32,6 +32,45 @@ def test_scatter_honors_explicit_repartition(spark):
     assert scatter(docs, min_partitions=8) is docs
 
 
+def test_scatter_passes_streaming_frame_through_silently(spark, caplog):
+    """A streaming plan cannot be optimized outside writeStream, so
+    scatter must not probe it: same frame back, nothing logged."""
+    stream = spark.readStream.format("rate").load()
+    with caplog.at_level(logging.DEBUG, "hadoop_20_warehouse_spark.session"):
+        out = scatter(stream, min_partitions=8)
+    assert out is stream
+    assert not caplog.records, caplog.text
+
+
+def _round_robin_exchanges(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("RoundRobinPartitioning")
+
+
+def test_scatter_honors_spread_below_narrow_nodes(spark):
+    """A frame spread upstream stays spread through projections and
+    mapInPandas: a second scatter returns its input, so the plan keeps
+    exactly one round-robin exchange."""
+    docs = load_table(spark, SF_DIR, "documents")
+    up = scatter(docs, min_partitions=8)
+    assert _round_robin_exchanges(up) == 1
+    for nxt in (
+        up.select("doc_id", F.upper("text").alias("text")),
+        up.mapInPandas(lambda batches: batches, schema=docs.schema),
+    ):
+        out = scatter(nxt, min_partitions=8)
+        assert out is nxt
+        assert _round_robin_exchanges(out) == 1
+
+
+def test_scatter_honors_hash_repartition_under_projection(spark):
+    docs = load_table(spark, SF_DIR, "documents")
+    keyed = docs.repartition(8, "doc_id").select(
+        "doc_id", F.upper("text").alias("text")
+    )
+    assert scatter(keyed, min_partitions=16) is keyed
+
+
 def test_scatter_stats_path_no_fallback(spark, caplog):
     """Scan, projection, filter, AND post-shuffle aggregate frames must
     all resolve through the plan-stats probe — zero fallback warnings.

@@ -31,7 +31,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
@@ -208,7 +209,7 @@ def main() -> None:
     result = {"scaling_100x": out, "super_linear": sorted(flagged)}
     print("RESULT " + json.dumps(result))
     if write:
-        path = "/root/repo/BENCH_DETAIL.json"
+        path = os.path.join(REPO, "BENCH_DETAIL.json")
         detail = json.load(open(path)) if os.path.exists(path) else {}
         # merge, don't clobber — an --only rerun must not erase the
         # other probes' recorded points

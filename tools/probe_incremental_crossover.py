@@ -20,12 +20,14 @@ Usage: python tools/probe_incremental_crossover.py [--quick]
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 

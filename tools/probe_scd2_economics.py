@@ -27,10 +27,12 @@ Prints one RESULT json line; the PLANS.md row quotes it.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 

@@ -30,7 +30,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -116,7 +117,7 @@ def main() -> None:
 
     print("RESULT " + json.dumps(out))
     if write:
-        path = "/root/repo/BENCH_DETAIL.json"
+        path = os.path.join(REPO, "BENCH_DETAIL.json")
         detail = json.load(open(path)) if os.path.exists(path) else {}
         detail["teragen_decomposition"] = out
         json.dump(detail, open(path, "w"), indent=1, sort_keys=True)

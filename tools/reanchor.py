@@ -13,11 +13,14 @@ in place (prose untouched).
 from __future__ import annotations
 
 import json
+import os
 import re
 import statistics
 import sys
 
-BASELINE = "/root/repo/BASELINE.md"
+BASELINE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BASELINE.md"
+)
 
 
 def main() -> None:
