@@ -19,7 +19,13 @@ nothing) so timings measure the whole plan, not an action shortcut.
 
 Measurement methodology (post r2/r3 phantom-regression postmortems):
   * steady-state warmup — every timed query runs once at the smallest
-    SF first, absorbing JIT/codegen/Python-worker-fork one-time costs;
+    SF first, absorbing JIT/codegen/Python-worker-fork one-time costs.
+    The warm-up generates 929 distinct classes, and the session's
+    codegen cache (4096 entries, session.py) keeps them all, so a timed
+    query compiles only the classes its plan at the target SF adds (48
+    for the whole set at sf0.01, measured on a 4-core host).  At
+    Spark's default of 100 entries the warm-up's classes were evicted
+    long before their timed runs, which compiled 1153 classes again;
   * ``spark.catalog.clearCache()`` before EVERY timed rep — queries
     that ``persist()`` internally would otherwise (a) hand reps 2-3 a
     partially-cached plan (Spark cache lookup is by analyzed plan) and
@@ -48,8 +54,12 @@ Measurement methodology (post r2/r3 phantom-regression postmortems):
     (BENCH_r16: knn_pq_rerank 3.68 s in-session vs 1.47 s isolated) —
     and the driver's binding "within 2x" gate reads the RAW artifact,
     not the guard's exonerations.  stop() kills the Python worker
-    daemons and shuffle state; the static codegen cache survives in
-    the gateway JVM, so the per-family re-warm is cheap.
+    daemons and shuffle state.  The codegen cache is static to the
+    gateway JVM, but it keys each class by the class loader it was
+    compiled under, and a new SparkContext's executor brings a new
+    one, so the per-family re-warm recompiles whatever its queries'
+    tasks compile: re-warming all 58 queries after a restart compiled
+    595 of their 929 classes (1168 at Spark's default 100 entries).
   * watch tier — queries between WATCH_RATIO (1.5x) and the 2.0x
     regression bar get the same isolated re-run, reported under
     ``"watch"`` (not ``"regressions"``). The r4 postmortem found
@@ -1233,11 +1243,13 @@ def main() -> None:
     _force(QUERIES["join_broadcast_dims"](spark, SF_DIR))
     # Steady-state warmup: run EVERY timed query once at the smallest
     # available scale factor. This compiles each query's whole-stage /
-    # higher-order-function generated classes, forks the Python worker
-    # pool for mapInPandas paths, and touches parquet footers — all the
-    # one-time costs that would otherwise be charged to whichever timed
-    # query happened to hit them first. Timed runs then measure
-    # per-plan throughput at SF_DIR, which is the number that scales.
+    # higher-order-function generated classes (929 for the set, all
+    # kept by the session's 4096-entry codegen cache), forks the Python
+    # worker pool for mapInPandas paths, and touches parquet footers —
+    # all the one-time costs that would otherwise be charged to
+    # whichever timed query happened to hit them first. Timed runs then
+    # measure per-plan throughput at SF_DIR, which is the number that
+    # scales.
     warm_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001")
     if not os.path.isdir(warm_dir):
         warm_dir = SF_DIR
@@ -1522,9 +1534,12 @@ def main() -> None:
     # the timed set now runs in FAMILIES of SPARK_GRAFT_BENCH_FAMILY
     # queries, each family in a fresh SparkContext: stop() tears down
     # the block manager, shuffle files, and the Python worker daemons
-    # (SparkEnv-owned), while the static whole-stage-codegen cache
-    # survives in the shared gateway JVM, so the per-family re-warm
-    # only pays worker forks + parquet footers, not recompilation.
+    # (SparkEnv-owned).  The static codegen cache survives in the
+    # shared gateway JVM, but classes compiled in tasks are keyed by
+    # the executor's class loader, which the new context replaces, so
+    # the re-warm below also recompiles most of its queries' classes
+    # (595 of 929 for all 58 queries) -- off the clock, like the rest
+    # of the warm-up.
     def recycle_session(upcoming: list[str]):
         nonlocal spark
         spark.catalog.clearCache()

@@ -190,6 +190,42 @@ def test_broadcast_hint_probe_failure_is_loud(spark, caplog):
     ]
 
 
+# --- generated-code cache ----------------------------------------------------
+
+# perfbench's warehouse workload, listed here so this test does not
+# depend on the benchmark's files.
+_WAREHOUSE_QUERIES = (
+    "pricing_summary",
+    "scan_filter_sample",
+    "wordcount",
+    "monster_query",
+    "grep_topk",
+    "join_inner",
+    "join_override",
+    "aggregate_report",
+    "value_histogram",
+    "secondary_sort",
+)
+
+
+def test_codegen_cache_holds_a_warehouse_pass(spark):
+    """A warehouse pass generates 125 classes; with Spark's default
+    codegen cache of 100 entries the next pass compiled nearly all of
+    them again.  The session's cache must hold them all, so a second pass
+    compiles nothing."""
+    import hadoop_20_warehouse_spark.inventory  # noqa: F401
+    from hadoop_20_warehouse_spark.registry import QUERIES
+
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for _ in range(2):
+        before = metric.METRIC_COMPILATION_TIME().getCount()
+        for name in _WAREHOUSE_QUERIES:
+            QUERIES[name](spark, SF_DIR).toPandas()
+        compiles.append(metric.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiles[1] == 0, f"compiles per round: {compiles}"
+
+
 # --- fair-scheduler pools (FB FairScheduler analog, SURVEY §4.2) -----------
 
 
