@@ -35,7 +35,6 @@ from hadoop_20_warehouse_spark.similarity.knn import (
     _dot,
     _norm,
     _safe_div,
-    bucket_sig_column,
     bucket_sig_sql,
     cosine_sql,
 )
@@ -74,11 +73,10 @@ def sign_buckets(
     (knn.plane_dots_expr, JVM-side); per-table buckets are sign/shift
     arithmetic over the dots array.  Unlike the centroid assign and the
     brute scorer, the order-controlled r11 A/B found NO advantage for
-    the Arrow-batched plane matmul (similarity/scores.plane_signs) at
-    N=2k or 20k — the single-traversal fold already amortizes the
-    32-plane work — so this form is the production kernel and
-    plane_signs is the second implementation the tests pin it
-    against."""
+    an Arrow-batched plane matmul at N=2k or 20k — the single-traversal
+    fold already amortizes the 32-plane work — so this form is the one
+    kernel; tests pin it to the per-plane fold of
+    ``knn.bucket_sig_column``, the oracle-shared math."""
     from hadoop_20_warehouse_spark.session import scatter
     from hadoop_20_warehouse_spark.similarity.knn import plane_dots_expr
 

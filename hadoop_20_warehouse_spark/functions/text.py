@@ -192,24 +192,24 @@ CLS_DIM = 256  # feature-hash buckets (a real model ships ~2M; shape identical)
 CLS_SALT = "qw"  # weight-derivation salt
 
 
-def hashed_weight_array(dim: int = CLS_DIM, salt: str = CLS_SALT) -> Column:
+def hashed_weight_array() -> Column:
     """ONE array<bigint> of milli-unit weights, w[i] =
-    md5_int64(salt||i) % 2001 − 1000 ∈ [−1000, 1000] — a deterministic
-    stand-in for a trained weight vector.  A real fastText / logistic
-    quality model drops in by replacing this derivation with the
-    model's weights (same broadcast-array shape, same scorer); the
-    md5 derivation is what keeps the DuckDB oracle bit-identical."""
+    md5_int64(CLS_SALT||i) % 2001 − 1000 ∈ [−1000, 1000] — a
+    deterministic stand-in for a trained weight vector.  A real
+    fastText / logistic quality model drops in by replacing this
+    derivation with the model's weights (same broadcast-array shape,
+    same scorer); the md5 derivation is what keeps the DuckDB oracle
+    bit-identical."""
     return F.expr(
-        f"transform(sequence(0, {dim - 1}), i -> "
-        f"cast(conv(substring(md5(concat('{salt}', cast(i as string))), 1, 15), "
+        f"transform(sequence(0, {CLS_DIM - 1}), i -> "
+        f"cast(conv(substring(md5(concat('{CLS_SALT}', cast(i as string))), 1, 15), "
         f"16, 10) as bigint) % 2001 - 1000)"
     )
 
 
-def hashed_classifier_raw_milli(
-    toks_col: str, w_col: str = "w", dim: int = CLS_DIM
-) -> Column:
-    """Integer milli-unit raw score: Σ over tokens of w[md5(t) % dim].
+def hashed_classifier_raw_milli(toks_col: str) -> Column:
+    """Integer milli-unit raw score: Σ over tokens of w[md5(t) % CLS_DIM],
+    read from the weight column ``w``.
     One JVM-side HOF fold — token hashing and the weight lookup are
     both row-local against the broadcast weight array, and integer
     adds are order-independent (the repo's cross-engine sum
@@ -219,9 +219,53 @@ def hashed_classifier_raw_milli(
     and the per-token constant is md5 + one array index."""
     idx = (
         f"cast(cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint) "
-        f"% {dim} as int) + 1"
+        f"% {CLS_DIM} as int) + 1"
     )
     return F.expr(
         f"aggregate({toks_col}, cast(0 as bigint), "
-        f"(acc, t) -> acc + element_at({w_col}, {idx}))"
+        f"(acc, t) -> acc + element_at(w, {idx}))"
+    )
+
+
+def classifier_scores(df: DataFrame, *cols: str) -> DataFrame:
+    """``cols`` plus (n_tokens, raw_milli, score, keep) for every row of
+    ``df`` whose ``text`` has at least one token: the fastText-shaped
+    hashed bag-of-words logistic score, score = sigmoid(raw_milli /
+    (1000·n_tokens)) rounded to 6, and keep = score ≥ 0.5 on the
+    ROUNDED value so the cut is engine-stable.
+
+    The one scorer for the batch query, the pipeline gates and the
+    stream path.  The weights are built ONCE, in a one-row frame that
+    is broadcast and cross-joined, so the md5 derivation never enters
+    the per-row projection or the per-token fold (a ``withColumn``
+    weight array is not constant-folded: column pruning inlines it
+    into the fold).  Zero wide shuffle; a ``readStream`` frame joins
+    the static weight row as a stream-static join, so the same plan
+    runs per micro-batch with no watermark or state.  Does not
+    scatter; callers spread a single-task input themselves."""
+    wrow = df.sparkSession.range(1).select(hashed_weight_array().alias("w"))
+    scored = (
+        df.crossJoin(F.broadcast(wrow))
+        .withColumn("_toks", tokens(F.col("text")))
+        .select(
+            *cols,
+            F.size("_toks").cast("long").alias("n_tokens"),
+            hashed_classifier_raw_milli("_toks").alias("raw_milli"),
+        )
+        .filter(F.col("n_tokens") > 0)
+    )
+    score = F.round(
+        F.lit(1.0)
+        / (
+            F.lit(1.0)
+            + F.exp(-(F.col("raw_milli").cast("double") / (F.col("n_tokens") * 1000.0)))
+        ),
+        6,
+    )
+    return scored.select(
+        *cols,
+        "n_tokens",
+        "raw_milli",
+        score.alias("score"),
+        (score >= 0.5).alias("keep"),
     )

@@ -693,45 +693,23 @@ def q_text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigmoid(raw / (1000·n_tokens)) rounded to 6; keep = score ≥ 0.5
     computed on the ROUNDED value so the cut is engine-stable.
 
-    The weight vector here is md5-derived (functions/text.py
-    hashed_weight_array) so the oracle can reproduce it; a TRAINED
-    model drops in as the same one-row broadcast array.  Scale shape:
-    zero WIDE shuffle — tokenize, hash, and sum are one projection
-    against the broadcast weights; at 100 TB this is the cheapest
-    possible classifier inference (no Python, no explode, no join —
-    the explode+join twin is what the oracle runs).  r19 optimization
+    The scorer is functions/text.classifier_scores, shared with the
+    pipeline gates and the stream path.  The weight vector here is
+    md5-derived (functions/text.py hashed_weight_array) so the oracle
+    can reproduce it; a TRAINED model drops in as the same one-row
+    broadcast array.  Scale shape: zero WIDE shuffle — tokenize, hash,
+    and sum are one projection against the broadcast weight row; at
+    100 TB this is the cheapest possible classifier inference (no
+    Python, no explode, no feature join — the explode+join twin is
+    what the oracle runs).  r19 optimization
     round (guide §2.5): the projection is CPU-dense (one md5 per
     token, interpreted HOFs) and a single-row-group scan plans ONE
     task, so the input is scattered first (no-op on well-split
     production scans; interleaved A/B at sf0.1: 0.63 → 0.37 s)."""
     from hadoop_20_warehouse_spark.session import scatter
 
-    docs = scatter(load_table(spark, sf_dir, "documents"))
-    wrow = spark.range(1).select(T.hashed_weight_array().alias("w"))
-    scored = (
-        docs.crossJoin(F.broadcast(wrow))
-        .withColumn("_toks", T.tokens(F.col("text")))
-        .select(
-            "doc_id",
-            F.size("_toks").cast("long").alias("n_tokens"),
-            T.hashed_classifier_raw_milli("_toks").alias("raw_milli"),
-        )
-        .filter(F.col("n_tokens") > 0)
-    )
-    score = F.round(
-        F.lit(1.0)
-        / (
-            F.lit(1.0)
-            + F.exp(-(F.col("raw_milli").cast("double") / (F.col("n_tokens") * 1000.0)))
-        ),
-        6,
-    )
-    return scored.select(
-        "doc_id",
-        "n_tokens",
-        "raw_milli",
-        score.alias("score"),
-        (score >= 0.5).alias("keep"),
+    return T.classifier_scores(
+        scatter(load_table(spark, sf_dir, "documents")), "doc_id"
     )
 
 
@@ -1286,38 +1264,13 @@ def _chunk_sliding_oracle() -> str:
 
 
 def _classifier_gate(docs: DataFrame, *cols: str) -> DataFrame:
-    """The fastText-shaped quality-classifier gate as a reusable
-    stage: keep docs whose rounded sigmoid score >= 0.5, computed
-    INLINE on the scan (broadcast 1-row weight seed, row-local token
-    hashing — the zero-shuffle inference shape of
-    q_text_quality_classifier).  Returns ``docs`` filtered to keepers,
+    """The quality-classifier gate as a reusable stage: ``docs`` kept
+    where functions/text.classifier_scores says keep (the scorer of
+    q_text_quality_classifier, inline on the scan with zero shuffle),
     projected to ``cols``.  Shared by the classifier->SemDeDup->chunk
-    pipeline and the release endgame so both compositions pin the
+    pipeline and the release endgames so every composition pins the
     SAME gate."""
-    wrow = docs.sparkSession.range(1).select(
-        T.hashed_weight_array().alias("w")
-    )
-    return (
-        docs.crossJoin(F.broadcast(wrow))
-        .withColumn("_toks", T.tokens(F.col("text")))
-        .withColumn("_n", F.size("_toks").cast("long"))
-        .filter(F.col("_n") > 0)
-        .withColumn("_raw", T.hashed_classifier_raw_milli("_toks"))
-        .filter(
-            F.round(
-                F.lit(1.0)
-                / (
-                    F.lit(1.0)
-                    + F.exp(
-                        -(F.col("_raw").cast("double") / (F.col("_n") * 1000.0))
-                    )
-                ),
-                6,
-            )
-            >= 0.5
-        )
-        .select(*cols)
-    )
+    return T.classifier_scores(docs, *cols).filter("keep").select(*cols)
 
 
 def _cls_sem_chunk_oracle() -> str:

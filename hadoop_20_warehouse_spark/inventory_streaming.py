@@ -2,8 +2,9 @@
 reference counterpart; the reference is batch-only).
 
 Each entry runs the SAME function a streaming job would use
-(streaming/windows.py, unified batch/stream API) on the batch events
-table, so the DuckDB oracle can check the event-time semantics; the
+(streaming/windows.py, or functions/text.classifier_scores for the
+classifier gate; unified batch/stream API) on the batch tables, so
+the DuckDB oracle can check the event-time semantics; the
 incremental/watermark path of the identical plans is exercised by
 tests/test_streaming.py with a real readStream → writeStream run.
 """
@@ -14,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_20_warehouse_spark.catalog import load_table
+from hadoop_20_warehouse_spark.functions import text as T
 from hadoop_20_warehouse_spark.registry import register
 from hadoop_20_warehouse_spark.streaming import windows as W
 
@@ -208,19 +210,20 @@ def _stream_cls_oracle() -> str:
 
 @register("stream_classifier_gate", oracle=_stream_cls_oracle())
 def q_stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming twin of text_quality_classifier
-    (streaming/windows.classifier_gate_stream): hashed bag-of-words
-    logistic gating as a STATELESS stream projection — broadcast
-    constant-foldable weights, no join, no watermark, no state store,
-    so ingest-time quality admission costs a map over micro-batches.
-    Registered on the batch table via the unified batch/stream API
-    (this module's convention); the real readStream → writeStream
-    replay is pinned stream == batch by
+    """Ingest-time quality admission with text_quality_classifier's own
+    scorer (functions/text.classifier_scores): hashed bag-of-words
+    logistic gating as a STATELESS stream plan — the documents join
+    the one-row broadcast weight frame (a stream-static join on a
+    readStream frame), tokens fold against it row-locally, and there
+    is no watermark and no state store, so admission costs a map over
+    micro-batches.  Registered on the batch table via the unified
+    batch/stream API (this module's convention); the real readStream →
+    writeStream replay is pinned stream == batch by
     tests/test_streaming.test_streaming_classifier_matches_batch.
-    Same oracle as the batch query — the twin must reproduce it
-    bit-for-bit."""
+    Same oracle as the batch query.  Unlike the batch query it does
+    not scatter its input."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return W.classifier_gate_stream(docs)
+    return T.classifier_scores(docs, "doc_id")
 
 
 def _stream_tok_oracle() -> str:

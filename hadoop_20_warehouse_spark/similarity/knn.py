@@ -231,10 +231,10 @@ def lsh_topk(
     same bucket. The scale path: bucket equi-join replaces the cross
     join; recall < 1 by construction.
 
-    Scorer: the bucket self-join + per-pair cosine + per-query window.
-    The r11 order-controlled A/B against the per-bucket cosine matmul
-    inside applyInPandas (similarity/scores.lsh_grouped_topk,
-    bit-identical; the tests pin one against the other) kept the JOIN:
+    Scorer: the bucket self-join + per-pair cosine + per-query window;
+    tests pin it to the DuckDB twin ``lsh_topk_sql``.  The r11
+    order-controlled A/B against a bit-identical per-bucket cosine
+    matmul inside applyInPandas kept the JOIN:
     sign-LSH's own design holds buckets SMALL (2^b buckets, ~n/2^b rows
     each), so per-bucket matmuls are tiny while per-group pandas
     overhead is not (join wins ~1.7x at n=2k, ties at 20k), and a

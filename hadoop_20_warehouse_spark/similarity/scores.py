@@ -1,39 +1,26 @@
-"""Batched exact-cosine scoring kernels — the GEMM twins of the
-remaining interpreted-HOF hot paths in the vector family.
+"""Batched exact-cosine scoring: the GEMM top-k of the vector family.
 
 ``similarity.assign`` batched the centroid-assign stage; this module
 applies the same bit-identity discipline (numpy matmul for the bulk,
 exact sequential-fold recompute inside a numerically-justified tie
 band, HALF_UP shortest-decimal rounding where a rounded value is
-emitted or compared) to:
+emitted or compared) to :func:`brute_topk`, the exact |Q|×N cosine
+top-k (``knn.brute_force_topk``'s scorer, which also prices every
+recall@k evaluation): corpus batches score against the broadcast
+query matrix, each batch emits only its per-query top-(k + ties)
+survivors with EXACT rounded sims (band + sequential recompute +
+Decimal rounding), and a final per-query window ranks the
+partition-pruned candidate set — TakeOrdered's shape, rows shuffled
+= O(partitions · |Q| · k), never N·|Q|.  A query set above
+``MAX_QUERY_ROWS`` splits itself into md5-sliced passes.
 
-- :func:`plane_signs` — the sign-LSH signature stage
-  (``dedup.embedding.sign_buckets`` / ``knn.lsh_topk``'s bucketing):
-  all n_tables × n_planes plane dots as ONE matmul against the
-  broadcast plane matrix, signs packed to per-table bucket ints.
-  Sign-flip risk exists only where |dot| falls inside the
-  reassociation error bound (plane components are ±1000 integers, so
-  float32×int products are exact in float64 and the bound is
-  d·eps·1000·‖v‖₁); banded entries are recomputed with the exact
-  sequential fold, so every emitted bucket bit equals the HOF fold's.
-- :func:`brute_topk` — the exact |Q|×N cosine top-k
-  (``knn.brute_force_topk``'s scorer, which also prices every
-  recall@k evaluation): corpus batches score against the broadcast
-  query matrix, each batch emits only its per-query top-(k + ties)
-  survivors with EXACT rounded sims (band + sequential recompute +
-  Decimal rounding), and a final per-query window ranks the
-  partition-pruned candidate set — TakeOrdered's shape, rows shuffled
-  = O(partitions · |Q| · k), never N·|Q|.  A query set above
-  ``MAX_QUERY_ROWS`` splits itself into md5-sliced passes.
-
-Equality with the HOF forms is property-tested (including zero-norm
+Equality with the HOF form is property-tested (including zero-norm
 NULL-cosine ordering, NULL vectors and duplicate-vector rounding
 ties); the HOF top-k lives on only as the test-side reference
-(tests/test_similarity_dedup.py ``hof_brute_topk``).  Only
-:func:`brute_topk` runs in production (``knn.brute_force_topk``).  The
-r11 A/B kept the HOF sign fold and the bucket self-join for sign-LSH,
-so :func:`plane_signs` and :func:`lsh_grouped_topk` are the second
-implementations the tests pin those forms against.  The exact
+(tests/test_similarity_dedup.py ``hof_brute_topk``).  Sign-LSH keeps
+one kernel per stage: the r11 A/B kept the HOF sign fold
+(``dedup.embedding.sign_buckets``) and the bucket self-join
+(``knn.lsh_topk``), and neither has a batched twin.  The exact
 all-pairs yardstick is ``dedup.embedding.brute_force_pairs`` alone.
 """
 
@@ -41,13 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from hadoop_20_warehouse_spark.similarity.assign import (
     _band,
@@ -55,92 +36,11 @@ from hadoop_20_warehouse_spark.similarity.assign import (
     _seq_dot,
 )
 
-# float64 unit roundoff; sign/tie bands scale it by the dot's magnitude
-_EPS = 2.3e-16
-
 # Driver-side collect cap for brute_topk's query set, per pass (~0.5 GB
 # of 64-dim float64 vectors).  Module-level so the pass split and the
 # per-pass enforcement are testable without materializing a million
 # rows.
 MAX_QUERY_ROWS = 1_000_000
-
-
-def plane_signs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_tables: int,
-    n_planes: int,
-    dim: int,
-) -> DataFrame:
-    """(id, table_idx, bucket) — sign-LSH buckets via one plane-matrix
-    GEMM per Arrow batch; bit-identical to the HOF fold (see module
-    docstring for the sign-band argument)."""
-    import numpy as np
-
-    from hadoop_20_warehouse_spark.similarity.knn import _plane_component_py
-
-    spark = df.sparkSession
-    n_all = n_tables * n_planes
-    P = np.array(
-        [
-            [_plane_component_py(p, d) for d in range(dim)]
-            for p in range(n_all)
-        ],
-        dtype=np.float64,
-    )
-    bc = spark.sparkContext.broadcast(P)
-    sel = df.select(F.col(id_col), F.col(vec_col))
-    id_type = sel.schema[0].dataType
-    schema = StructType(
-        [
-            StructField(id_col, id_type),
-            StructField("table_idx", IntegerType()),
-            StructField("bucket", LongType()),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        P_ = bc.value
-        Pt = P_.T
-        w2 = np.arange(n_planes, dtype=np.int64)
-        weights = (1 << w2).astype(np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            S = V @ Pt  # (B, n_all) — products are exact (int × f32)
-            # sign-flip band: |dot| within the reassociation bound
-            bound = (
-                4.0 * dim * _EPS * 1000.0 * np.abs(V).sum(axis=1)
-            )  # per row
-            risky = np.abs(S) <= bound[:, None]
-            for i, j in zip(*np.nonzero(risky)):
-                S[i, j] = _seq_dot(V[i], P_[j])
-            signs = S > 0.0
-            B = V.shape[0]
-            out_id = np.repeat(ids, n_tables)
-            out_t = np.tile(
-                np.arange(n_tables, dtype=np.int32), B
-            )
-            buckets = (
-                signs.reshape(B, n_tables, n_planes).astype(np.int64)
-                * weights[None, None, :]
-            ).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    id_col: out_id,
-                    "table_idx": out_t,
-                    "bucket": buckets.reshape(-1),
-                }
-            )
-
-    return sel.mapInPandas(gen, schema=schema)
 
 
 def _chunk_passes(queries: DataFrame) -> int:
@@ -339,97 +239,3 @@ def _brute_topk_pass(
     return cand.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= k
     )
-
-
-def lsh_grouped_topk(
-    vecs: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
-    """(query_id, neighbor_id, sim, rank) — per-bucket exact top-k for
-    sign-LSH search (the grouped twin of ``knn.lsh_topk``'s bucket
-    self-join): ``vecs`` carries (id, vec, nrm, bucket); each vector's
-    candidate set is exactly its own bucket (ONE signature per vector), so the per-query top-k is
-    computable ENTIRELY inside the bucket group — one bucket-keyed
-    exchange, one cosine matmul per bucket (row-chunked), tie-band
-    exact rounded sims, ranks emitted in-group with the HOF form's
-    (rounded sim DESC, neighbor ASC, NULLS LAST) ordering.  No pair
-    rows, no second shuffle, no window — vs the self-join form's
-    two-sided exchange plus a corpus-pair-sized window input.
-    Bit-identity with the join form is property-tested."""
-    import numpy as np
-
-    sel = vecs.select(F.col(id_col), F.col(vec_col), F.col("nrm"), F.col("bucket"))
-    id_type = sel.schema[0].dataType
-    schema = StructType(
-        [
-            StructField("query_id", id_type),
-            StructField("neighbor_id", id_type),
-            StructField("sim", DoubleType()),
-            StructField("rank", LongType()),
-        ]
-    )
-
-    def fn(pdf):
-        import pandas as pd
-
-        n = len(pdf)
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "sim": [], "rank": []}
-        ).astype({"sim": "float64", "rank": "int64"})
-        if n < 2:
-            return empty
-        ids = pdf[id_col].to_numpy()
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        vn = pdf["nrm"].to_numpy(dtype=np.float64)
-        out_q, out_n, out_s, out_r = [], [], [], []
-        chunk = max(1, (1 << 24) // n)
-        for lo in range(0, n, chunk):
-            hi = min(n, lo + chunk)
-            S = V[lo:hi] @ V.T
-            denom = vn[lo:hi, None] * vn[None, :]
-            valid = denom > 0.0
-            sims = np.where(valid, S / np.where(valid, denom, 1.0), -np.inf)
-            for r in range(hi - lo):
-                i = lo + r
-                col = sims[r].copy()
-                col[i] = -np.inf  # no self-pair
-                self_mask = np.zeros(n, dtype=bool)
-                self_mask[i] = True
-                finite = np.isfinite(col)
-                n_fin = int(finite.sum())
-                kk = min(k, n_fin)
-                keyed = []
-                if kk:
-                    t = np.partition(col, n - kk)[n - kk]
-                    cand = np.nonzero(col >= t - _band(V.shape[1]))[0]
-                    for j in cand:
-                        exact = _seq_dot(V[i], V[j])
-                        sim6 = (
-                            _round6_scaled(exact / denom[r, j]) / 1_000_000.0
-                        )
-                        keyed.append((-sim6, ids[j], sim6))
-                    keyed.sort(key=lambda x: (x[0], x[1]))
-                    keyed = keyed[:k]
-                if n_fin < k:
-                    nulls = np.sort(ids[(~np.isfinite(col)) & (~self_mask)])
-                    for nid in nulls[: k - n_fin]:
-                        keyed.append((None, nid, None))
-                for rank, (_, nid, sim6) in enumerate(keyed, start=1):
-                    out_q.append(ids[i])
-                    out_n.append(nid)
-                    out_s.append(sim6)
-                    out_r.append(rank)
-        if not out_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": out_q,
-                "neighbor_id": out_n,
-                "sim": pd.array(out_s, dtype="float64"),
-                "rank": np.array(out_r, dtype=np.int64),
-            }
-        )
-
-    return sel.groupBy("bucket").applyInPandas(fn, schema=schema)

@@ -360,58 +360,6 @@ def redact_stream(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def classifier_gate_stream(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Model-based quality gating on the stream path — the streaming
-    twin of inventory_curation.q_text_quality_classifier (fastText-
-    shaped hashed bag-of-words logistic score; the classifier filter
-    of GPT-3/LLaMA data work, applied at ingest time): per arriving
-    doc, tokens hash into the broadcast milli-unit weight vector, the
-    integer raw score sums order-independently, and keep = rounded
-    sigmoid ≥ threshold.  STATELESS (weights are a constant-foldable
-    broadcast array — no join, no watermark, no state store), so the
-    operator is a pure projection over micro-batches with identical
-    semantics to the batch form by construction; docs with no tokens
-    are dropped exactly as the batch query drops them.
-
-    Emits the batch query's exact columns (id, n_tokens, raw_milli,
-    score, keep) so replay equality is hash-comparable — pinned by
-    tests/test_streaming.test_streaming_classifier_matches_batch."""
-    from hadoop_20_warehouse_spark.functions import text as T
-
-    scored = (
-        df.withColumn("w", T.hashed_weight_array())
-        .withColumn("_toks", T.tokens(F.col(text_col)))
-        .select(
-            F.col(id_col),
-            F.size("_toks").cast("long").alias("n_tokens"),
-            T.hashed_classifier_raw_milli("_toks").alias("raw_milli"),
-        )
-        .filter(F.col("n_tokens") > 0)
-    )
-    score = F.round(
-        F.lit(1.0)
-        / (
-            F.lit(1.0)
-            + F.exp(
-                -(F.col("raw_milli").cast("double") / (F.col("n_tokens") * 1000.0))
-            )
-        ),
-        6,
-    )
-    return scored.select(
-        F.col(id_col),
-        "n_tokens",
-        "raw_milli",
-        score.alias("score"),
-        (score >= threshold).alias("keep"),
-    )
-
-
 def budget_admit_stream(
     df: DataFrame,
     budgets: dict[str, int],

@@ -404,6 +404,36 @@ def test_hashed_classifier_weights_and_score_contract(spark, sf_dir):
     )
 
 
+@pytest.mark.parametrize("form", ["stream_query", "pruned_sum"])
+def test_classifier_weights_built_once_outside_token_fold(spark, sf_dir, form):
+    """The classifier's weight vector is a one-row relation joined to the
+    documents, so its md5 derivation appears ONCE in the optimized plan,
+    below the join and outside the per-token ``aggregate`` fold.  A
+    weight array added with ``withColumn`` is not constant-folded: it is
+    rebuilt per row, and under a consumer that prunes columns Catalyst
+    inlines it into the fold, rebuilding it per token.  ``stream_query``
+    is the registered stream gate; ``pruned_sum`` sums raw_milli, so
+    only the fold's output survives pruning."""
+    if form == "stream_query":
+        from hadoop_20_warehouse_spark.inventory_streaming import (
+            q_stream_classifier_gate,
+        )
+
+        df = q_stream_classifier_gate(spark, sf_dir)
+    else:
+        from hadoop_20_warehouse_spark.functions.text import classifier_scores
+
+        docs = load_table(spark, sf_dir, "documents")
+        df = classifier_scores(docs, "doc_id").agg(F.sum("raw_milli"))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    lines = plan.splitlines()
+    assert any(ln.lstrip(":+- ").startswith("Join ") for ln in lines), plan
+    assert any("Range (0, 1," in ln for ln in lines), plan
+    weight = [ln for ln in lines if "concat(qw" in ln]
+    assert len(weight) == 1 and plan.count("concat(qw") == 1, plan
+    assert "aggregate(" not in weight[0] and " AS w#" in weight[0], weight[0]
+
+
 def test_chunk_sliding_windows_python_model(spark):
     """Sliding chunking against a literal python model on edge shapes:
     empty (dropped), 1 token, exactly window, window+1, window+stride,

@@ -1,13 +1,14 @@
 """No package function goes unreferenced.
 
-A module-level, undecorated, non-dunder function in the package that
-no code in the repo's Python sources (package, tests, tools,
-perfbench, bench.py, __spark_entry__.py) refers to has no caller:
-delete it rather than carry it.  A reference is a name or attribute
-load, an import, or a string constant that is exactly the name (a
-``getattr`` or registry lookup); a word in a docstring, comment or
-error message is not.  Decorated functions are skipped because the
-decorator (``@register``, ``@udf``, ...) is their reference."""
+A module-level, non-dunder function in the package that no code in
+the repo's Python sources (package, tests, tools, perfbench, bench.py,
+__spark_entry__.py) refers to has no caller: delete it rather than
+carry it.  A reference is a name or attribute load, an import, or a
+string constant that is exactly the name (a ``getattr`` or registry
+lookup); a word in a docstring, comment or error message is not.
+Functions decorated with ``@register`` are skipped because the
+registry is their reference; any other decorator (``@contextmanager``
+and the like) only wraps the function, so it still needs a caller."""
 
 from __future__ import annotations
 
@@ -41,6 +42,17 @@ def _references(tree: ast.AST):
             yield node.value
 
 
+def _registered(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> bool:
+    for dec in fn.decorator_list:
+        target = dec.func if isinstance(dec, ast.Call) else dec
+        name = target.attr if isinstance(target, ast.Attribute) else getattr(
+            target, "id", None
+        )
+        if name == "register":
+            return True
+    return False
+
+
 def unreferenced_functions() -> list[str]:
     refs: Counter = Counter()
     for root in SEARCHED:
@@ -51,7 +63,7 @@ def unreferenced_functions() -> list[str]:
         for node in ast.parse(path.read_text()).body:
             if (
                 isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-                and not node.decorator_list
+                and not _registered(node)
                 and not (node.name.startswith("__") and node.name.endswith("__"))
                 and not refs[node.name]
             ):

@@ -85,17 +85,16 @@ def test_ivf_covers_all_queries(spark, emb):
     assert per_q.agg(F.max("count")).first()[0] <= 5
 
 
-def test_single_pass_buckets_equal_per_plane_folds(spark, emb):
+def test_single_pass_buckets_equal_per_plane_folds(spark, emb, adversarial_vecs):
     """sign_buckets' one-traversal plane dots must be bit-identical to
     the per-plane fold construction (same addition order per plane) —
-    pins the fast path to the oracle-shared math."""
+    pins the fast path to the oracle-shared math, also on the
+    adversarial frame's zero vectors, exact duplicates and ±1e-9
+    perturbations (dots at the sign boundary)."""
     from pyspark.sql import functions as F
 
     from hadoop_20_warehouse_spark.similarity.knn import bucket_sig_column
 
-    fast = EMB.sign_buckets(emb, "vec_id", "embedding", 4, 8).orderBy(
-        "vec_id", "table_idx"
-    )
     slow_rows = [
         F.struct(
             F.lit(t).alias("table_idx"),
@@ -103,12 +102,18 @@ def test_single_pass_buckets_equal_per_plane_folds(spark, emb):
         )
         for t in range(4)
     ]
-    slow = (
-        emb.select(F.col("vec_id"), F.explode(F.array(*slow_rows)).alias("tb"))
-        .select("vec_id", "tb.table_idx", "tb.bucket")
-        .orderBy("vec_id", "table_idx")
-    )
-    assert [tuple(r) for r in fast.collect()] == [tuple(r) for r in slow.collect()]
+    for df in (emb, adversarial_vecs):
+        fast = EMB.sign_buckets(df, "vec_id", "embedding", 4, 8).orderBy(
+            "vec_id", "table_idx"
+        )
+        slow = (
+            df.select(F.col("vec_id"), F.explode(F.array(*slow_rows)).alias("tb"))
+            .select("vec_id", "tb.table_idx", "tb.bucket")
+            .orderBy("vec_id", "table_idx")
+        )
+        assert [tuple(r) for r in fast.collect()] == [
+            tuple(r) for r in slow.collect()
+        ]
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
@@ -764,16 +769,8 @@ def test_semantic_pairs_grouped_matches_join_null_vecs(spark, null_vecs, monkeyp
 
 
 # ---------------------------------------------------------------------------
-# Batched scoring kernels (similarity/scores.py) vs their HOF forms
-
-
-def test_plane_signs_matches_hof(spark, emb, adversarial_vecs):
-    from hadoop_20_warehouse_spark.similarity import scores as SC
-
-    for df in (emb, adversarial_vecs):
-        h = EMB.sign_buckets(df, "vec_id", "embedding", 4, 8, 64)
-        g = SC.plane_signs(df, "vec_id", "embedding", 4, 8, 64)
-        assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
+# Batched scoring kernel (similarity/scores.py) vs its HOF form; sign-LSH
+# top-k vs its DuckDB twin
 
 
 def hof_brute_topk(corpus, queries, id_col="vec_id", vec_col="embedding", k=10):
@@ -841,20 +838,24 @@ def test_brute_topk_rejects_wrong_length(spark):
         brute_force_topk(df, df, k=2)
 
 
-def test_lsh_grouped_matches_join(spark, emb, adversarial_vecs):
-    from hadoop_20_warehouse_spark.similarity.knn import bucket_sig_column, lsh_topk
-    from hadoop_20_warehouse_spark.similarity.scores import lsh_grouped_topk
+@pytest.mark.parametrize("k", [4, 5])
+def test_lsh_topk_matches_duckdb_twin(spark, emb, adversarial_vecs, tmp_path, k):
+    """``knn.lsh_topk`` (bucket self-join, per-pair HOF cosine, window)
+    equals its DuckDB twin ``lsh_topk_sql`` on the real embeddings and
+    on the adversarial frame (zero vectors → NULL sims ranked last,
+    duplicate vectors → rounded-cosine ties broken by neighbor id)."""
+    import duckdb
 
-    for df, k in ((emb, 5), (adversarial_vecs, 4)):
-        j = lsh_topk(df, k=k)
-        vecs = df.select(
-            "vec_id",
-            "embedding",
-            _norm(F.col("embedding")).alias("nrm"),
-            bucket_sig_column("embedding", 8, 64).alias("bucket"),
-        )
-        g = lsh_grouped_topk(vecs, "vec_id", "embedding", k)
-        assert sorted(map(tuple, j.collect())) == sorted(map(tuple, g.collect()))
+    from hadoop_20_warehouse_spark.similarity.knn import lsh_topk, lsh_topk_sql
+    from tests.conftest import assert_matches_oracle
+
+    con = duckdb.connect()
+    for name, df in (("emb", emb), ("adv", adversarial_vecs)):
+        path = str(tmp_path / name)
+        df.select("vec_id", "embedding").write.parquet(path)
+        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{path}/*.parquet'")
+        assert_matches_oracle(lsh_topk(df, k=k), con, lsh_topk_sql(name, k=k))
+    con.close()
 
 
 def test_pq_trained_codebook_improves_quantization(spark, emb):

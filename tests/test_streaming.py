@@ -585,7 +585,7 @@ def test_streaming_heavy_hitters_bounds_under_eviction(spark, tmp_path):
 
 
 def test_streaming_classifier_matches_batch(spark, tmp_path):
-    """Stream-path quality gating: classifier_gate_stream over a
+    """Stream-path quality gating: classifier_scores over a
     file-source replay of the documents table must equal the batch
     text_quality_classifier query row-for-row — stateless broadcast-
     weights inference, no watermark, no state store (the query
@@ -594,9 +594,7 @@ def test_streaming_classifier_matches_batch(spark, tmp_path):
     from hadoop_20_warehouse_spark.inventory_curation import (
         q_text_quality_classifier,
     )
-    from hadoop_20_warehouse_spark.streaming.windows import (
-        classifier_gate_stream,
-    )
+    from hadoop_20_warehouse_spark.functions.text import classifier_scores
     from tests.conftest import SF_DIR
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
@@ -605,7 +603,7 @@ def test_streaming_classifier_matches_batch(spark, tmp_path):
 
     stream = spark.readStream.schema(docs.schema).parquet(src)
     q = (
-        classifier_gate_stream(stream)
+        classifier_scores(stream, "doc_id")
         .writeStream.format("memory")
         .queryName("cls_gate")
         .trigger(availableNow=True)
