@@ -4,22 +4,20 @@ Pipeline (Broder '97 resemblance sketches + banding, the standard
 web-dedup construction — see PAPERS.md similarity-search entries):
 
   shingle → ONE md5 per shingle → k affine universal hashes
-  (a_i·h + b_i mod p, integer-only) → per-doc min in a single
-  aggregation pass → band digests → bucket self-join → candidate
-  pairs (+ estimated Jaccard from signature agreement).
+  (a_i·h + b_i mod p, integer-only) → per-doc min → band digests →
+  bucket self-join → candidate pairs (+ estimated Jaccard from
+  signature agreement).
 
-Design for 100 TB (and measured locally — this shape is ~8× faster
-than the naive per-seed-md5 version):
-- Exactly one md5 per distinct shingle; the k hash family is integer
+Design for 100 TB:
+- Exactly one md5 per shingle; the k hash family is integer
   arithmetic on that digest (h reduced mod p=2^31−1 first so a·h fits
   int64 under ANSI overflow checks).
-- All k minima are computed in ONE groupBy(doc) pass as k aggregate
-  columns — no seed explosion, shuffle volume is |docs| rows × k ints
-  (map-side partial mins shrink it further).
-- The signature frame is persisted: banding and the pair-verification
-  join both reuse it, so the shingle scan runs once, not three times.
+- Signatures are row-local: one Arrow-batched ``mapInArrow`` worker
+  hashes each document's shingles and takes all k minima in numpy —
+  no seed explosion, no aggregation shuffle, nothing persisted.
 - Banding turns all-pairs into an equi-join on (band_idx, band_hash);
-  skewed buckets (boilerplate text) are split by AQE skew-join.
+  skewed buckets (boilerplate text) are split by AQE skew-join. Each
+  pair is kept only at its first shared band, so no pair ``distinct``.
 - md5 keeps every stage bit-identical in the DuckDB oracle.
 
 The reference has no near-dup operator; the closest ancestors are its
@@ -30,10 +28,10 @@ index contrib's doc→term pipeline (contrib/index/.../IndexUpdateMapper)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_20_warehouse_spark.functions.hashing import md5_int64, md5_int64_sql
+from hadoop_20_warehouse_spark.functions.hashing import md5_int64_sql
 
 DEFAULT_N_HASHES = 8
 DEFAULT_BANDS = 4
@@ -73,24 +71,6 @@ def shingles(
     return out.distinct() if distinct else out
 
 
-def _shingle_hash(shingle: Column) -> Column:
-    """One md5 per shingle, reduced mod p."""
-    return md5_int64(shingle) % MERSENNE_P
-
-
-def minhash_signature_cols(
-    sh: DataFrame, id_col: str, n_hashes: int = DEFAULT_N_HASHES
-) -> DataFrame:
-    """(id, m0..m{k-1}): all k minima in one aggregation pass."""
-    h = _shingle_hash(F.col("shingle")).alias("h")
-    hashed = sh.select(F.col(id_col), h)
-    mins = [
-        F.min((F.lit(HASH_A[i]) * F.col("h") + F.lit(HASH_B[i])) % MERSENNE_P).alias(f"m{i}")
-        for i in range(n_hashes)
-    ]
-    return hashed.groupBy(id_col).agg(*mins)
-
-
 def minhash_signature_rowlocal(
     df: DataFrame,
     id_col: str,
@@ -98,31 +78,99 @@ def minhash_signature_rowlocal(
     n_hashes: int = DEFAULT_N_HASHES,
     width: int = DEFAULT_SHINGLE,
 ) -> DataFrame:
-    """(id, m0..m{k-1}) computed entirely row-local — no explode, no
-    shuffle: shingle positions, md5 hashes, and all k minima are
-    higher-order-function expressions inside one whole-stage-codegen
-    projection. At 100 TB this removes the aggregation exchange the
-    explode+groupBy form needs; signatures flow straight into banding
-    partition-local. Identical output to ``minhash_signature_cols``.
+    """(id, m0..m{k-1}) computed row-local in ONE Arrow-batched
+    ``mapInArrow`` worker — no explode, no shuffle, no interpreted
+    higher-order functions. Per document: one md5 per character
+    shingle (characters, not bytes: ``text[i:i+width]`` encoded as
+    UTF-8), reduced to ``int(hex[:15], 16) % p`` exactly as
+    ``md5_int64``, then the k affine minima vectorised in numpy int64
+    (``a·h + b < 2^41``, so nothing overflows). The id column passes
+    through with its own type; a NULL text gives NULL minima.
 
     A narrow batch input is scattered first; ``scatter`` passes a
-    STREAMING input (the projection composes with readStream) or one
-    a caller already repartitioned through untouched."""
+    STREAMING input (mapInArrow composes with readStream) or one a
+    caller already repartitioned through untouched.
+
+    The closure is self-contained (local imports, captured constants
+    only), so cloudpickle ships it by value and Python workers need
+    no package import."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from hadoop_20_warehouse_spark.session import scatter
 
-    df = scatter(df)
-    p = MERSENNE_P
-    hs = F.expr(
-        f"transform(sequence(1, greatest(length({text_col}) - {width - 1}, 1)), "
-        f"pos -> cast(conv(substring(md5(substring({text_col}, pos, {width})), 1, 15), 16, 10) as bigint) % {p})"
-    ).alias("_hs")
-    mins = [
-        F.array_min(
-            F.expr(f"transform(_hs, h -> ({HASH_A[i]} * h + {HASH_B[i]}) % {p})")
-        ).alias(f"m{i}")
-        for i in range(n_hashes)
-    ]
-    return df.select(F.col(id_col), hs).select(F.col(id_col), *mins)
+    schema = StructType(
+        [df.schema[id_col]]
+        + [StructField(f"m{i}", LongType()) for i in range(n_hashes)]
+    )
+    names = schema.names
+    a, b, p = HASH_A[:n_hashes], HASH_B[:n_hashes], MERSENNE_P
+    flush = 1 << 16  # shingles hashed per numpy reduction
+
+    def sign(batches):
+        import hashlib
+
+        import numpy as np
+        import pyarrow as pa
+
+        md5 = hashlib.md5
+        A = np.array(a, dtype=np.int64)[:, None]
+        B = np.array(b, dtype=np.int64)[:, None]
+
+        def minima(digests, starts):
+            # first 8 digest bytes big-endian >> 4 == the 15-hex prefix
+            h = (np.frombuffer(b"".join(digests), dtype=">u8")[::2] >> 4)
+            h = h.astype(np.int64) % p
+            return np.minimum.reduceat((A * h + B) % p, starts, axis=1)
+
+        for batch in batches:
+            texts = batch.column(1).to_pylist()
+            mins = np.empty((len(a), len(texts)), dtype=np.int64)
+            digests, starts, first = [], [], 0
+            for r, t in enumerate(texts):
+                starts.append(len(digests))
+                if t is None:
+                    digests.append(bytes(16))  # placeholder, masked below
+                else:
+                    digests.extend(
+                        md5(t[i:i + width].encode()).digest()
+                        for i in range(max(len(t) - width + 1, 1))
+                    )
+                if len(digests) >= flush or r == len(texts) - 1:
+                    mins[:, first:r + 1] = minima(digests, starts)
+                    digests, starts, first = [], [], r + 1
+            null = batch.column(1).is_null().to_numpy(zero_copy_only=False)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0)] + [pa.array(m, mask=null) for m in mins],
+                names=names,
+            )
+
+    return scatter(df).select(id_col, text_col).mapInArrow(sign, schema)
+
+
+def _band_digest_sql(band: int, rows_per_band: int) -> str:
+    """SQL text of one band's digest: md5 of its minhash slice,
+    comma-joined in seed order (the same text the oracle hashes)."""
+    cols = ", ".join(
+        f"cast(m{i} as string)"
+        for i in range(band * rows_per_band, (band + 1) * rows_per_band)
+    )
+    return f"md5(concat_ws(',', {cols}))"
+
+
+def band_rows(
+    sig: DataFrame, n_hashes: int = DEFAULT_N_HASHES, bands: int = DEFAULT_BANDS
+) -> DataFrame:
+    """(sig's columns, h0..h{bands-1}, band_idx, band_hash): one row per
+    band, each carrying the signature and every band's digest ``h_j``
+    (so a consumer can tell which shared band is a pair's first), with
+    ``band_hash = h_{band_idx}``."""
+    rows_per_band = n_hashes // bands
+    hs = [f"h{j}" for j in range(bands)]
+    digests = sig.selectExpr(
+        "*", *[f"{_band_digest_sql(j, rows_per_band)} AS {h}" for j, h in enumerate(hs)]
+    )
+    stack = ", ".join(f"{j}, {h}" for j, h in enumerate(hs))
+    return digests.selectExpr("*", f"stack({bands}, {stack}) AS (band_idx, band_hash)")
 
 
 def band_signatures(
@@ -130,25 +178,7 @@ def band_signatures(
 ) -> DataFrame:
     """(id, band_idx, band_hash): md5 digest of each band's minhash
     slice (comma-joined in seed order)."""
-    rows_per_band = n_hashes // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"m{i}").cast("string")
-                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                )
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("blk")
-    ).select(F.col(id_col), F.col("blk.band_idx"), F.col("blk.band_hash"))
+    return band_rows(sig, n_hashes, bands).select(id_col, "band_idx", "band_hash")
 
 
 def candidate_pairs(bands_df: DataFrame, id_col: str) -> DataFrame:
@@ -175,7 +205,8 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Full pipeline → (id_a, id_b, est_jaccard) where est_jaccard is
     the fraction of agreeing minhash components (signature estimate of
-    the true Jaccard resemblance).
+    the true Jaccard resemblance). Ids must be unique: a pair is one
+    (id_a, id_b), as the oracle's ``GROUP BY id`` assumes.
 
     ``with_jaccard=False`` (r18 optimization round) returns just the
     candidate pair set (id_a, id_b) and SKIPS signature verification —
@@ -186,16 +217,15 @@ def minhash_lsh_pairs(
     per id), so every candidate row paid join work for columns nobody
     read (guide §2.4).  The candidate set is identical either way.
 
-    ``with_jaccard=True`` (r18 optimization round) CARRIES the k
-    minhash columns through the band self-join instead of re-joining
-    the signature frame per candidate pair: the band shuffle grows by
-    k ints per row (8 bigints against a 32-char band digest — under
-    2x), and the two post-candidate signature joins disappear.  At
-    100 TB those were corpus-scale shuffles (the signature frame is
-    corpus-sized, so they could never broadcast); locally measured
-    1.47 → 1.17 s at sf0.1, hash-identical.  est_jaccard is a pure
-    function of the pair, so distinct() over (id_a, id_b, est) equals
-    the old attach-after-distinct exactly.
+    ``with_jaccard=True`` CARRIES the k minhash columns through the
+    band self-join instead of re-joining the signature frame per
+    candidate pair (r18: the two post-candidate signature joins were
+    corpus-scale shuffles at 100 TB).  It also carries every band's
+    digest, and keeps a joined pair only at its FIRST shared band
+    (no earlier band's digests agree), so each pair is emitted exactly
+    once without a ``distinct`` and its second shuffle.  The predicate
+    compares the same md5 digests the join does, so the pair set is
+    the candidate set.
 
     The band self-join consumes the band frame on both sides, and
     differently-aliased sides defeat exchange reuse (the r18 explain
@@ -210,48 +240,29 @@ def minhash_lsh_pairs(
     if not with_jaccard:
         bands_df = band_signatures(sig, id_col, n_hashes, bands)
         return candidate_pairs(bands_df.repartition("band_idx", "band_hash"), id_col)
-    rows_per_band = n_hashes // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"m{i}").cast("string")
-                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                )
-            ).alias("band_hash"),
+    bands_df = band_rows(sig, n_hashes, bands).repartition("band_idx", "band_hash")
+
+    def side(s: str) -> DataFrame:
+        return bands_df.selectExpr(
+            f"{id_col} AS id_{s}", "band_idx", "band_hash",
+            *[f"m{i} AS {s}{i}" for i in range(n_hashes)],
+            *[f"h{j} AS h{s}{j}" for j in range(bands - 1)],
         )
-        for b in range(bands)
-    ]
-    mcols = [f"m{i}" for i in range(n_hashes)]
-    bands_df = sig.select(
-        F.col(id_col), *mcols, F.explode(F.array(*band_structs)).alias("blk")
-    ).select(
-        F.col(id_col), *mcols, F.col("blk.band_idx"), F.col("blk.band_hash")
-    ).repartition("band_idx", "band_hash")
-    a = bands_df.select(
-        F.col(id_col).alias("id_a"), "band_idx", "band_hash",
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(n_hashes)],
+
+    # first shared band: no earlier band's digests agree
+    keep = " AND ".join(
+        ["id_a < id_b"]
+        + [f"(band_idx <= {j} OR ha{j} <> hb{j})" for j in range(bands - 1)]
     )
-    b = bands_df.select(
-        F.col(id_col).alias("id_b"), "band_idx", "band_hash",
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(n_hashes)],
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(n_hashes)
+    agree = " + ".join(
+        f"CASE WHEN a{i} = b{i} THEN 1 ELSE 0 END" for i in range(n_hashes)
     )
     return (
-        a.join(b, on=["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (agree.cast("double") / n_hashes).alias("est_jaccard"),
+        side("a").join(side("b"), on=["band_idx", "band_hash"])
+        .filter(keep)
+        .selectExpr(
+            "id_a", "id_b", f"CAST({agree} AS double) / {n_hashes} AS est_jaccard"
         )
-        .distinct()
     )
 
 

@@ -1197,7 +1197,7 @@ def q_dedup_minhash_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the persisted index round-tripped losslessly AND the
     delta-vs-index join equals the from-scratch derivation.
 
-    Scale shape: delta signing is the row-local HOF projection (zero
+    Scale shape: delta signing is the row-local Arrow worker (zero
     shuffle); the probe is one equi-join on (band_idx, band_hash)
     against a parquet-backed index (AQE skew-split on hot buckets)
     plus one signature equi-join for the verify — all costs

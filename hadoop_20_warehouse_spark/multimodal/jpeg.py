@@ -767,11 +767,9 @@ class _ProgressiveState:
             by, bx = zz.shape[0], zz.shape[1]
             blocks = nat.reshape(by, bx, 8, 8).astype(np.float64)
             blocks *= qt[c["tq"]]
-            # batched orthonormal IDCT: C.T @ B @ C per block
-            px = np.einsum(
-                "ki,yxij,jl->yxkl", _DCT_C.T, blocks, _DCT_C,
-                optimize=True,
-            ) + 128.0
+            # batched orthonormal IDCT: C.T @ B @ C per block, matmul
+            # broadcasting over the block grid (no per-call path search)
+            px = _DCT_C.T @ blocks @ _DCT_C + 128.0
             planes.append(
                 px.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
             )

@@ -673,9 +673,9 @@ def neardup_alert_stream(
     """Ingest-time near-dup alerts against a PERSISTED MinHash index —
     the streaming twin of dedup_minhash_index_delta's probe: each
     arriving doc is signed ROW-LOCALLY (minhash_signature_rowlocal —
-    a pure projection, streaming-legal; its scatter passes a streaming
-    frame through and spreads only a narrow batch one), its band
-    digests exploded WITH the signature carried on every band row
+    one Arrow-batched mapInArrow worker, streaming-legal; its scatter
+    passes a streaming frame through and spreads only a narrow batch
+    one), its band rows (band_rows) carry the signature on every row
     (so verification needs no re-join against the stream side — a
     stream self-join would be a stream-stream join), then ONE
     stream-static equi-join on (band_idx, band_hash) against the
@@ -696,34 +696,8 @@ def neardup_alert_stream(
     from hadoop_20_warehouse_spark.dedup import minhash as MH
 
     k = MH.DEFAULT_N_HASHES
-    bands = MH.DEFAULT_BANDS
-    rpb = k // bands
     sig = MH.minhash_signature_rowlocal(df, id_col, text_col)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"m{i}").cast("string")
-                        for i in range(b * rpb, (b + 1) * rpb)
-                    ],
-                )
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select(
-        F.col(id_col),
-        *[F.col(f"m{i}") for i in range(k)],
-        F.explode(F.array(*band_structs)).alias("blk"),
-    ).select(
-        F.col(id_col),
-        F.col("blk.band_idx").alias("band_idx"),
-        F.col("blk.band_hash").alias("band_hash"),
-        *[F.col(f"m{i}") for i in range(k)],
-    )
+    banded = MH.band_rows(sig)
     agree = sum(
         F.when(F.col(f"m{i}") == F.col(f"b{i}"), 1).otherwise(0)
         for i in range(k)

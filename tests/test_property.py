@@ -138,25 +138,57 @@ def test_override_join_random_cross_check(spark):
         assert got == want, f"trial {trial}: {got ^ want}"
 
 
+def minhash_signature_cols(sh, id_col, n_hashes):
+    """(id, m0..m{k-1}) from a shingle frame by explode + groupBy: one
+    md5 per shingle (its top 60 bits, as ``md5_int64``) reduced mod p,
+    then all k affine minima in one aggregation pass — the relational
+    reference the row-local worker is pinned against. A NULL shingle
+    (NULL text) hashes to NULL, so its minima are NULL."""
+    from pyspark.sql import functions as F
+
+    from hadoop_20_warehouse_spark.dedup import minhash as MH
+
+    p = MH.MERSENNE_P
+    h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("bigint") % p
+    hashed = sh.select(F.col(id_col), h.alias("h"))
+    mins = [
+        F.min((F.lit(MH.HASH_A[i]) * F.col("h") + F.lit(MH.HASH_B[i])) % p).alias(f"m{i}")
+        for i in range(n_hashes)
+    ]
+    return hashed.groupBy(id_col).agg(*mins)
+
+
 def test_minhash_rowlocal_equals_explode_form(spark):
-    """The row-local HOF signature (minhash_signature_rowlocal) must be
-    bit-identical to the explode+groupBy construction on random text —
-    the two paths share only the math, so equality pins both."""
+    """The row-local signature worker (minhash_signature_rowlocal) must
+    be bit-identical to the explode+groupBy construction on random
+    text — the two paths share only the math, so equality pins both.
+    The alphabet holds two- and three-byte characters and an astral
+    emoji, so shingles must be sliced by character, not by UTF-8 byte;
+    NULL, empty and shorter-than-one-shingle texts, and a string id
+    column, pin the edge rows and the id pass-through."""
     import random as _r
 
     from hadoop_20_warehouse_spark.dedup import minhash as MH
 
     rng = _r.Random(7)
-    alpha = "ab cd"
-    rows = [
-        Row(id=i, txt="".join(rng.choice(alpha) for _ in range(rng.randint(1, 60))))
-        for i in range(80)
+    alpha = "ab cdé中\U0001F600\t"
+    w = MH.DEFAULT_SHINGLE
+    texts = [None, "", "é中\U0001F600", "a" * (w - 1), "中" * w] + [
+        "".join(rng.choice(alpha) for _ in range(rng.randint(1, 60)))
+        for _ in range(80)
     ]
-    df = spark.createDataFrame(rows)
-    a = MH.minhash_signature_rowlocal(df, "id", "txt").orderBy("id").collect()
-    sh = MH.shingles(df, "id", "txt", MH.DEFAULT_SHINGLE, distinct=False)
-    b = MH.minhash_signature_cols(sh, "id").orderBy("id").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    k = MH.DEFAULT_N_HASHES
+    for id_type, ids in (("long", range(len(texts))),
+                         ("string", [f"d{i}" for i in range(len(texts))])):
+        df = spark.createDataFrame(list(zip(ids, texts)), f"id {id_type}, txt string")
+        a = MH.minhash_signature_rowlocal(df, "id", "txt")
+        assert a.schema["id"].dataType == df.schema["id"].dataType
+        sh = MH.shingles(df, "id", "txt", w, distinct=False)
+        b = minhash_signature_cols(sh, "id", k)
+        got = {r["id"]: tuple(r) for r in a.collect()}
+        want = {r["id"]: tuple(r) for r in b.collect()}
+        assert got == want
+        assert got[ids[0]][1:] == (None,) * k  # NULL text → NULL minima
 
 
 # --- keyfield substring extraction vs the reference byte logic ------------

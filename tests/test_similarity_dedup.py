@@ -1064,8 +1064,8 @@ def test_eval_sample_never_picks_two_near_dups(spark, tmp_path):
 def test_minhash_band_frame_computed_once_per_call(spark, sf_dir, with_jaccard):
     """Both sides of the band self-join read ONE hash-partitioned band
     frame: AQE's final plan reuses its exchange, and the signature
-    projection appears once (not once per side, and not through a
-    cache that outlives the call)."""
+    worker (``MapInArrow``) appears once (not once per side, and not
+    through a cache that outlives the call)."""
     from hadoop_20_warehouse_spark.dedup.minhash import minhash_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1075,5 +1075,78 @@ def test_minhash_band_frame_computed_once_per_call(spark, sf_dir, with_jaccard):
     final = plan.split("== Initial Plan ==")[0]
     assert "ReusedExchange" in final, final
     assert "InMemoryTableScan" not in final, final
-    sig_projections = [ln for ln in final.splitlines() if "array_min(transform(" in ln]
-    assert len(sig_projections) == 1, final
+    sig_workers = [ln for ln in final.splitlines() if "MapInArrow" in ln]
+    assert len(sig_workers) == 1, final
+
+
+def _last_band_only_pair(seed: int = 11):
+    """Two texts whose MinHash signatures share band 3 and no earlier
+    band, found by a seeded search over random edits of a random
+    text. The signature is recomputed here in plain Python (one md5
+    per character shingle, the k affine minima), independent of the
+    Spark worker."""
+    import hashlib
+    import random
+
+    from hadoop_20_warehouse_spark.dedup import minhash as MH
+
+    w, p = MH.DEFAULT_SHINGLE, MH.MERSENNE_P
+    rpb = MH.DEFAULT_N_HASHES // MH.DEFAULT_BANDS
+
+    def sig(t):
+        hs = [
+            int(hashlib.md5(t[i:i + w].encode()).hexdigest()[:15], 16) % p
+            for i in range(max(len(t) - w + 1, 1))
+        ]
+        return [min((a * h + b) % p for h in hs) for a, b in zip(MH.HASH_A, MH.HASH_B)]
+
+    rng = random.Random(seed)
+    for _ in range(5000):
+        base = "".join(rng.choice("abcdefgh ") for _ in range(60))
+        edited = list(base)
+        for _ in range(rng.randint(1, 12)):
+            edited[rng.randrange(len(edited))] = rng.choice("abcdefgh ")
+        edited = "".join(edited)
+        sa, sb = sig(base), sig(edited)
+        shared = [
+            sa[j * rpb:(j + 1) * rpb] == sb[j * rpb:(j + 1) * rpb]
+            for j in range(MH.DEFAULT_BANDS)
+        ]
+        if shared == [False] * (MH.DEFAULT_BANDS - 1) + [True]:
+            return base, edited
+    raise AssertionError("no last-band-only pair in the search")
+
+
+def test_minhash_pairs_emitted_once_at_first_shared_band(spark, tmp_path):
+    """Each candidate pair is emitted exactly once with no aggregate
+    above the band join: two identical texts share all four bands, a
+    searched pair shares only the last one, and the result still
+    equals the DuckDB oracle (which dedups with DISTINCT)."""
+    import duckdb
+
+    from hadoop_20_warehouse_spark.dedup.minhash import (
+        minhash_lsh_pairs,
+        minhash_lsh_pairs_sql,
+    )
+    from tests.conftest import assert_matches_oracle
+
+    same = "the same text twice, every band agrees"
+    last_a, last_b = _last_band_only_pair()
+    texts = [same, same, last_a, last_b] + [
+        f"filler document {i} about topic {i * 7} with words w{i} x{i}"
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    path = str(tmp_path / "docs")
+    df.write.parquet(path)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW docs AS SELECT * FROM '{path}/*.parquet'")
+
+    pairs = minhash_lsh_pairs(df, "doc_id", "text")
+    rows = pairs.collect()
+    keys = [(r.id_a, r.id_b) for r in rows]
+    assert len(keys) == len(set(keys)), sorted(keys)
+    assert {(0, 1), (2, 3)} <= set(keys)
+    assert "Aggregate" not in pairs._jdf.queryExecution().executedPlan().toString()
+    assert_matches_oracle(pairs, con, minhash_lsh_pairs_sql("docs", "doc_id", "text"))
+    con.close()
