@@ -149,12 +149,15 @@ def minhash_signature_rowlocal(
 
 def _band_digest_sql(band: int, rows_per_band: int) -> str:
     """SQL text of one band's digest: md5 of its minhash slice,
-    comma-joined in seed order (the same text the oracle hashes)."""
-    cols = ", ".join(
+    comma-joined in seed order (the same text the oracle hashes).
+    ``concat`` keeps a NULL-text row's NULL minima NULL, so its band
+    digests are NULL and join nothing (``concat_ws`` would skip them
+    and pair every NULL-text row on ``md5('')``)."""
+    cols = ", ',', ".join(
         f"cast(m{i} as string)"
         for i in range(band * rows_per_band, (band + 1) * rows_per_band)
     )
-    return f"md5(concat_ws(',', {cols}))"
+    return f"md5(concat({cols}))"
 
 
 def band_rows(

@@ -36,8 +36,12 @@ markers — the Hadoop AvroInputFormat discipline: each task seeks to
 its byte range, scans forward to the first sync, and owns every
 block whose preceding sync starts inside the range, so a single
 100 GB container fans out across the cluster without any task
-reading the whole file.  Per-partition writers make file count =
-write parallelism on the way out.
+reading the whole file.  Both read paths walk blocks with one
+iterator over a binary stream (an in-memory buffer for a whole file,
+the open file positioned at the first owned sync for a split), which
+also reads the header; a file torn anywhere but at a block boundary
+raises ValueError.  Per-partition writers make file count = write
+parallelism on the way out.
 """
 
 from __future__ import annotations
@@ -508,63 +512,89 @@ def encode_avro_file(
     return bytes(out)
 
 
-def _decode_header(blob: bytes) -> tuple[str, str, bytes, int]:
-    """Parse an OCF header → (schema JSON, codec, sync, header_end)."""
-    if blob[:4] != _MAGIC:
-        raise ValueError("not an Avro object container file")
-    pos = 4
-    meta: dict[str, bytes] = {}
+def _read_exact(fh, n: int) -> bytes:
+    """Exactly ``n`` bytes from ``fh``, or ValueError (a torn file)."""
+    at = fh.tell()
+    data = fh.read(n) if n >= 0 else b""
+    if len(data) != n:
+        raise ValueError(f"truncated Avro file: {n} bytes wanted at byte {at}")
+    return data
+
+
+def _read_long(fh) -> int:
+    """One zigzag varint from ``fh``."""
+    shift = acc = 0
     while True:
-        n, pos = _zz_decode(blob, pos)
-        if n == 0:
-            break
+        byte = _read_exact(fh, 1)[0]
+        acc |= (byte & 0x7F) << shift
+        if not byte & 0x80:
+            return (acc >> 1) ^ -(acc & 1)
+        shift += 7
+
+
+def _read_header(fh) -> tuple[str, str, bytes]:
+    """OCF header at ``fh``'s position → (schema JSON, codec, sync),
+    leaving ``fh`` at the first data block.  Reads only the header —
+    magic + metadata map + sync, typically a few KB — never the
+    blocks behind it."""
+    if fh.read(4) != _MAGIC:
+        raise ValueError("not an Avro object container file")
+    meta: dict[str, bytes] = {}
+    while n := _read_long(fh):
         if n < 0:  # negative count: absolute byte size follows
             n = -n
-            _size, pos = _zz_decode(blob, pos)
+            _read_long(fh)
         for _ in range(n):
-            kl, pos = _zz_decode(blob, pos)
-            key = blob[pos : pos + kl].decode()
-            pos += kl
-            vl, pos = _zz_decode(blob, pos)
-            meta[key] = blob[pos : pos + vl]
-            pos += vl
-    schema_json = meta["avro.schema"].decode()
+            key = _read_exact(fh, _read_long(fh)).decode()
+            meta[key] = _read_exact(fh, _read_long(fh))
+    if "avro.schema" not in meta:
+        raise ValueError("Avro header has no avro.schema entry")
     codec = meta.get("avro.codec", b"null").decode()
     if codec not in ("null", "deflate"):
         raise ValueError(f"unsupported avro codec '{codec}'")
-    if pos + 16 > len(blob):
-        raise IndexError("short avro header buffer")
-    sync = blob[pos : pos + 16]
-    return schema_json, codec, sync, pos + 16
+    return meta["avro.schema"].decode(), codec, _read_exact(fh, 16)
 
 
-def _decode_block_body(body: bytes, count: int, rec: dict) -> list[tuple]:
-    rows = []
-    bpos = 0
-    for _ in range(count):
-        row, bpos = _dec_any(body, bpos, rec)
-        rows.append(row)
-    return rows
+def _iter_rows(
+    fh, rec: dict, codec: str, sync: bytes, end: int | None = None
+) -> Iterator[tuple]:
+    """Rows of the data blocks from ``fh``'s position, which must
+    directly follow a sync marker; each block is (object count, byte
+    size, objects, sync).  With ``end``, only blocks whose preceding
+    sync starts before ``end`` are walked (the split ownership rule).
+    EOF exactly at a block boundary ends the walk; EOF anywhere else,
+    a sync mismatch or a body that fails to inflate raises
+    ValueError."""
+    while end is None or fh.tell() - 16 < end:
+        at = fh.tell()
+        if not fh.read(1):
+            return
+        fh.seek(at)
+        count = _read_long(fh)
+        body = _read_exact(fh, _read_long(fh))
+        if _read_exact(fh, 16) != sync:
+            raise ValueError(
+                f"avro block sync mismatch at byte {at} (torn file?)"
+            )
+        if codec == "deflate":
+            try:
+                body = zlib.decompress(body, -15)
+            except zlib.error as e:
+                raise ValueError(
+                    f"avro block at byte {at} does not inflate: {e}"
+                ) from e
+        bpos = 0
+        for _ in range(count):
+            row, bpos = _dec_any(body, bpos, rec)
+            yield row
 
 
 def decode_avro_file(blob: bytes) -> tuple[str, list[tuple]]:
     """One Avro OCF byte string → (schema JSON, rows as tuples)."""
-    schema_json, codec, sync, pos = _decode_header(blob)
+    fh = io.BytesIO(blob)
+    schema_json, codec, sync = _read_header(fh)
     rec = _parse_record(schema_json)
-    rows: list[tuple] = []
-    n_blob = len(blob)
-    while pos < n_blob:
-        count, pos = _zz_decode(blob, pos)
-        size, pos = _zz_decode(blob, pos)
-        body = blob[pos : pos + size]
-        pos += size
-        if blob[pos : pos + 16] != sync:
-            raise ValueError("avro block sync mismatch (torn file?)")
-        pos += 16
-        if codec == "deflate":
-            body = zlib.decompress(body, -15)
-        rows.extend(_decode_block_body(body, count, rec))
-    return schema_json, rows
+    return schema_json, list(_iter_rows(fh, rec, codec, sync))
 
 
 # --- Spark plumbing -----------------------------------------------------------
@@ -635,7 +665,7 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
         raise ValueError(f"no .avro files under {path}")
     # schema from the first file's embedded metadata — header parse
     # only (a few KB), never a whole-file decode on the driver
-    schema_json = _decode_header(bytes(first[0]))[0]
+    schema_json = _read_header(io.BytesIO(bytes(first[0])))[0]
     spark_schema = avro_to_spark_schema(schema_json)
 
     def _decode(kv):
@@ -653,21 +683,6 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame(rdd, spark_schema)
 
 
-def _read_header_stream(fh) -> tuple[str, str, bytes, int]:
-    """Parse an OCF header from an open file WITHOUT reading the whole
-    file: the header is magic + metadata map + sync, typically a few
-    KB (the schema JSON dominates)."""
-    chunk = fh.read(4096)
-    while True:
-        try:
-            return _decode_header(chunk)
-        except IndexError:
-            more = fh.read(len(chunk))
-            if not more:
-                raise ValueError("truncated Avro header") from None
-            chunk += more
-
-
 def _decode_file_range(
     fname: str, start: int, end: int, expect_schema: str | None
 ) -> list[tuple]:
@@ -675,58 +690,23 @@ def _decode_file_range(
     [start, end): the Hadoop AvroInputFormat split contract — scan
     forward from ``start`` to the first 16-byte sync marker and own
     every block whose preceding sync STARTS inside the range.  Only
-    the scan window and the owned blocks are read, never the whole
-    file."""
+    the header, the scan window and the owned blocks are read, never
+    the whole file."""
     with open(fname, "rb") as fh:
-        schema_json, codec, sync, header_end = _read_header_stream(fh)
+        schema_json, codec, sync = _read_header(fh)
         if expect_schema is not None and (
             json.loads(schema_json) != json.loads(expect_schema)
         ):
             raise ValueError("avro schema mismatch across files")
         rec = _parse_record(schema_json)
-        # the earliest sync is the header's trailing one
-        scan_from = max(start, header_end - 16)
-        if scan_from >= end:
-            return []
         # chunked scan (sources/splitscan.py — shared with the
         # seekable stream format) for the first sync STARTING in
-        # [scan_from, end): never buffers the whole split window
-        p0 = scan_first_sync(fh, sync, scan_from, end)
+        # [start, end); the earliest sync is the header's trailing one
+        p0 = scan_first_sync(fh, sync, max(start, fh.tell() - 16), end)
         if p0 is None:
             return []
-        boundary = p0 + 16
-
-        def read_varint() -> int:
-            shift = 0
-            acc = 0
-            while True:
-                b = fh.read(1)
-                if not b:
-                    raise EOFError
-                byte = b[0]
-                acc |= (byte & 0x7F) << shift
-                if not byte & 0x80:
-                    break
-                shift += 7
-            return (acc >> 1) ^ -(acc & 1)
-
-        rows: list[tuple] = []
-        fh.seek(boundary)
-        sync_pos = boundary - 16
-        while sync_pos < end:
-            try:
-                count = read_varint()
-            except EOFError:  # trailing sync was end-of-file
-                break
-            size = read_varint()
-            body = fh.read(size)
-            if fh.read(16) != sync:
-                raise ValueError("avro block sync mismatch (torn file?)")
-            if codec == "deflate":
-                body = zlib.decompress(body, -15)
-            rows.extend(_decode_block_body(body, count, rec))
-            sync_pos = fh.tell() - 16
-        return rows
+        fh.seek(p0 + 16)
+        return list(_iter_rows(fh, rec, codec, sync, end))
 
 
 def read_avro_split(
@@ -748,7 +728,7 @@ def read_avro_split(
     if not files:
         raise ValueError(f"no .avro files under {path}")
     with open(files[0], "rb") as fh:
-        schema_json, _codec, _sync, _he = _read_header_stream(fh)
+        schema_json = _read_header(fh)[0]
     spark_schema = avro_to_spark_schema(schema_json)
     splits = byte_range_splits(files, split_bytes)
     rdd = spark.sparkContext.parallelize(splits, len(splits)).flatMap(

@@ -29,6 +29,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_20_warehouse_spark.sources.seqfile import _SEQ_CODECS
+
 
 # --- text ------------------------------------------------------------------
 
@@ -161,13 +163,6 @@ def read_sequence(spark: SparkSession, path: str) -> DataFrame:
     SURVEY.md §1.2 type table)."""
     rdd = spark.sparkContext.sequenceFile(path)
     return spark.createDataFrame(rdd, ["key", "value"])
-
-
-_SEQ_CODECS = {
-    "default": "org.apache.hadoop.io.compress.DefaultCodec",
-    "gzip": "org.apache.hadoop.io.compress.GzipCodec",
-    "bzip2": "org.apache.hadoop.io.compress.BZip2Codec",
-}
 
 
 def write_sequence(

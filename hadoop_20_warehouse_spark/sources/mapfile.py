@@ -10,19 +10,22 @@ loop handles).  ``Reader.get`` binary-searches the loaded index, seeks
 interval (``MapFile.java:403-445 seekInternal``).
 
 This module re-derives that contract classpath-free on top of
-``sources/seqfile.py``'s container parser (the repo's parquet analog
-``sources/io.write_sorted_table`` remains the native 100 TB path —
-this is the legacy-READ surface so a user arriving with real MapFile
-directories can land or serve them):
+``sources/seqfile.py``: the same header reader and record iterator
+that decode a whole SequenceFile walk every lookup window here (the
+repo's parquet analog ``sources/io.write_sorted_table`` remains the
+native 100 TB path — this is the legacy-READ surface so a user
+arriving with real MapFile directories can land or serve them):
 
 - ``read_mapfile(spark, dir)`` — full typed scan of ``data`` files,
   one task per MapFile directory (the format's own parallelism).
-- ``mapfile_get(dir, key)`` — point lookup with BOUNDED I/O: the
-  driver reads the (small) index, bisects, then reads only
-  ``[position, position + max_scan_bytes)`` of ``data`` — never the
-  whole file.  Uncompressed, record- and block-compressed data files
-  all work (positions are block-aligned in block mode, the writer's
-  own discipline).
+- ``mapfile_get_many(dir, keys)`` / ``mapfile_get(dir, key)`` — point
+  lookups with BOUNDED I/O: the driver reads the (small) index,
+  bisects, then reads only ``[position, position + max_scan_bytes)``
+  of ``data`` per index position — never the whole file — growing
+  the window only while it ends before EOF.  Uncompressed, record-
+  and block-compressed data files all work (positions are
+  block-aligned in block mode, the writer's own discipline); a torn
+  ``data`` file raises ValueError instead of reporting keys absent.
 - ``write_mapfile_jvm`` — fixture writer through the real JVM
   ``MapFile.Writer`` (py4j), pinning the parser against
   reference-written bytes, tiny ``index.interval`` included.
@@ -40,113 +43,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_20_warehouse_spark.sources.seqfile import (
     WRITABLE_DECODERS,
-    _inflater_for,
+    iter_sequence_records,
     parse_sequence_file,
+    read_sequence_header,
 )
 
 _HEADER_PROBE = 64 * 1024  # plenty for class names + metadata pairs
-
-
-def _header_info(blob_prefix: bytes) -> dict:
-    """Header fields needed for range iteration (sync, codec,
-    layout), via the shared container parser on a prefix."""
-    # the parser reads only the prefix for header fields; the records
-    # iterator is never consumed
-    version = blob_prefix[3]
-    pos = 4
-    from hadoop_20_warehouse_spark.sources.seqfile import (
-        _read_text_string,
-        _read_utf8_string,
-    )
-
-    rd = _read_utf8_string if version < 4 else _read_text_string
-    key_class, pos = rd(blob_prefix, pos)
-    value_class, pos = rd(blob_prefix, pos)
-    compressed = block_compressed = False
-    if version > 2:
-        compressed = blob_prefix[pos] != 0
-        pos += 1
-    if version >= 4:
-        block_compressed = blob_prefix[pos] != 0
-        pos += 1
-    codec = "org.apache.hadoop.io.compress.DefaultCodec"
-    if (compressed or block_compressed) and version >= 5:
-        codec, pos = _read_text_string(blob_prefix, pos)
-    if version >= 6:
-        (n_meta,) = struct.unpack_from(">i", blob_prefix, pos)
-        pos += 4
-        for _ in range(n_meta):
-            _, pos = _read_text_string(blob_prefix, pos)
-            _, pos = _read_text_string(blob_prefix, pos)
-    sync = bytes(blob_prefix[pos : pos + 16]) if version > 1 else b""
-    return {
-        "key_class": key_class,
-        "value_class": value_class,
-        "compressed": compressed,
-        "block_compressed": block_compressed,
-        "inflate": _inflater_for(codec)
-        if (compressed or block_compressed)
-        else None,
-        "sync": sync,
-        "data_start": pos + (16 if version > 1 else 0),
-    }
-
-
-def _iter_range(data: bytes, info: dict):
-    """Records from a byte RANGE of the data stream beginning at a
-    record (or sync/block) boundary — the seekInternal scan loop
-    (record framing io/SequenceFile.java:1930; block framing :1659).
-    Stops cleanly at a torn tail (the range is a bounded window)."""
-    sync, inflate = info["sync"], info["inflate"]
-    end = len(data)
-    p = 0
-    if not info["block_compressed"]:
-        while p + 4 <= end:
-            (rec_len,) = struct.unpack_from(">i", data, p)
-            if rec_len == -1:
-                if p + 20 > end:
-                    return
-                if bytes(data[p + 4 : p + 20]) != sync:
-                    raise ValueError("corrupt MapFile data: bad sync")
-                p += 20
-                continue
-            if p + 8 + rec_len > end:
-                return  # torn tail of the bounded window
-            (key_len,) = struct.unpack_from(">i", data, p + 4)
-            key = bytes(data[p + 8 : p + 8 + key_len])
-            val = bytes(data[p + 8 + key_len : p + 8 + rec_len])
-            p += 8 + rec_len
-            yield key, inflate(val) if inflate else val
-        return
-    from hadoop_20_warehouse_spark.sources.recordio import read_vlong
-
-    while p + 20 <= end:
-        (esc,) = struct.unpack_from(">i", data, p)
-        if esc != -1 or bytes(data[p + 4 : p + 20]) != sync:
-            raise ValueError("corrupt MapFile data: block without sync")
-        p += 20
-        try:
-            n, p = read_vlong(data, p)
-            bufs = []
-            for _ in range(4):
-                clen, p = read_vlong(data, p)
-                if p + clen > end:
-                    return  # torn block at the window tail
-                bufs.append(info["inflate"](bytes(data[p : p + clen])))
-                p += clen
-        except (IndexError, struct.error):
-            return
-        key_lens, keys_b, val_lens, vals_b = bufs
-        kq = vq = koff = voff = 0
-        for _ in range(n):
-            klen, kq = read_vlong(key_lens, kq)
-            vlen, vq = read_vlong(val_lens, vq)
-            yield (
-                bytes(keys_b[koff : koff + klen]),
-                bytes(vals_b[voff : voff + vlen]),
-            )
-            koff += klen
-            voff += vlen
 
 
 def _decoder(cls: str):
@@ -182,47 +84,9 @@ def mapfile_get(
     key,
     max_scan_bytes: int = 4 * 1024 * 1024,
 ):
-    """``MapFile.Reader.get``: bisect the index, read ONLY the bounded
-    data range from the chosen position, scan forward until the key is
-    found or passed (keys are sorted, so a larger key ends the scan).
-    Returns the decoded value or None.
-
-    ``max_scan_bytes`` is a STARTING window, not a correctness bound:
-    if the scan exhausts the window without reaching a key >= target
-    and the file has more bytes (oversized values can make one index
-    interval span any window), the window doubles and the scan
-    retries — the JVM Reader contract (any present key IS found)
-    holds at a geometric constant-factor cost, never a silent miss
-    (r18 review)."""
-    kc, keys, positions = read_mapfile_index(map_dir)
-    data_path = os.path.join(map_dir, "data")
-    fsize = os.path.getsize(data_path)
-    with open(data_path, "rb") as fh:
-        head = fh.read(_HEADER_PROBE)
-        info = _header_info(head)
-        if not keys:
-            seek = info["data_start"]
-        else:
-            # rightmost index entry with key <= target; if the target
-            # precedes the first indexed key it can still live in the
-            # (unindexed) records before it — start at data_start
-            i = bisect.bisect_right(keys, key) - 1
-            seek = positions[i] if i >= 0 else info["data_start"]
-        _, dec_k = _decoder(info["key_class"])
-        _, dec_v = _decoder(info["value_class"])
-        scan = max_scan_bytes
-        while True:
-            fh.seek(seek)
-            window = fh.read(scan)
-            for kb, vb in _iter_range(window, info):
-                k, _ = dec_k(kb, 0)
-                if k == key:
-                    return dec_v(vb, 0)[0]
-                if k > key:
-                    return None
-            if seek + len(window) >= fsize:
-                return None  # scanned to EOF: genuinely absent
-            scan *= 2
+    """``MapFile.Reader.get``: the decoded value of ``key``, or None
+    (:func:`mapfile_get_many` with one probe)."""
+    return mapfile_get_many(map_dir, [key], max_scan_bytes).get(key)
 
 
 def read_mapfile(spark: SparkSession, path: str) -> DataFrame:
@@ -296,33 +160,43 @@ def mapfile_get_many(
     max_scan_bytes: int = 4 * 1024 * 1024,
     index: tuple | None = None,
 ) -> dict:
-    """Batched ``get``: load the index ONCE, group the probes by the
-    index position their bisect lands on, and do one bounded data
-    read + forward scan per GROUP (sorted probes inside a group
-    resolve in a single pass — the ``MapFileOutputFormat.getEntry``
-    access pattern amortized).  Returns {key: value} for hits only.
-    ``max_scan_bytes`` is a starting window that doubles until each
-    group's probes resolve or EOF — see :func:`mapfile_get`.
-    ``index`` accepts a pre-parsed ``read_mapfile_index`` result so
-    shard routers that already read it don't re-parse per call."""
-    kc, keys, positions = (
+    """Batched ``MapFile.Reader.get``: load the index ONCE, bisect each
+    probe to the rightmost index entry with key <= probe (or the data
+    start when it precedes every indexed key), and per index POSITION
+    read only ``[position, position + max_scan_bytes)`` of ``data``
+    and walk it forward with the SequenceFile record iterator —
+    sorted probes of one group resolve in one pass, a larger key ends
+    the scan (the ``MapFileOutputFormat.getEntry`` access pattern
+    amortized).  Returns {key: value} for hits only.
+
+    ``max_scan_bytes`` is a STARTING window, not a correctness bound:
+    while the window ends before EOF, a walk that tears at the window
+    tail or ends before every probe resolves doubles the window and
+    retries (oversized values can make one index interval span any
+    window), so any present key IS found — the JVM Reader contract.
+    At EOF a torn record raises ValueError, as does an index position
+    past the end of ``data``.  ``index`` accepts a
+    pre-parsed ``read_mapfile_index`` result so shard routers that
+    already read it don't re-parse per call."""
+    _kc, keys, positions = (
         index if index is not None else read_mapfile_index(map_dir)
     )
     data_path = os.path.join(map_dir, "data")
     fsize = os.path.getsize(data_path)
+    if positions and positions[-1] >= fsize:
+        raise ValueError(
+            f"{data_path}: index position {positions[-1]} is past the "
+            f"end of data ({fsize} bytes): torn data file"
+        )
     out = {}
     with open(data_path, "rb") as fh:
-        head = fh.read(_HEADER_PROBE)
-        info = _header_info(head)
-        _, dec_k = _decoder(info["key_class"])
-        _, dec_v = _decoder(info["value_class"])
+        header = read_sequence_header(fh.read(_HEADER_PROBE))
+        _, dec_k = _decoder(header.key_class)
+        _, dec_v = _decoder(header.value_class)
         groups: dict[int, list] = {}
         for k in probe_keys:
-            if keys:
-                i = bisect.bisect_right(keys, k) - 1
-                seek = positions[i] if i >= 0 else info["data_start"]
-            else:
-                seek = info["data_start"]
+            i = bisect.bisect_right(keys, k) - 1
+            seek = positions[i] if i >= 0 else header.data_start
             groups.setdefault(seek, []).append(k)
         for seek, probes in sorted(groups.items()):
             probes = sorted(probes)
@@ -330,22 +204,54 @@ def mapfile_get_many(
             while True:
                 fh.seek(seek)
                 window = fh.read(scan)
+                at_eof = seek + len(window) >= fsize
                 pi = 0
                 hits = {}
-                for kb, vb in _iter_range(window, info):
-                    k, _ = dec_k(kb, 0)
-                    while pi < len(probes) and probes[pi] < k:
-                        pi += 1  # absent probe: passed without a match
-                    if pi >= len(probes):
+                try:
+                    for kb, vb in iter_sequence_records(window, header, 0):
+                        k, _ = dec_k(kb, 0)
+                        while pi < len(probes) and probes[pi] < k:
+                            pi += 1  # absent probe: passed without a match
+                        if pi == len(probes):
+                            break
+                        if probes[pi] == k:
+                            hits[k] = dec_v(vb, 0)[0]
+                            pi += 1
+                except ValueError as e:
+                    if at_eof:
+                        raise ValueError(
+                            f"{data_path} (read from byte {seek}): {e}"
+                        ) from e
+                else:
+                    if pi == len(probes) or at_eof:
+                        out.update(hits)
                         break
-                    if probes[pi] == k:
-                        hits[k] = dec_v(vb, 0)[0]
-                        pi += 1
-                if pi >= len(probes) or seek + len(window) >= fsize:
-                    out.update(hits)
-                    break
-                scan *= 2  # unresolved probes beyond a torn tail
+                scan *= 2
     return out
+
+
+def _route_shards(root: str, probe_keys) -> list[tuple[str, tuple, list]]:
+    """``MapFileOutputFormat.getEntry`` routing for a range-sharded
+    layout (mapred/MapFileOutputFormat.java:78: pick the reader by
+    partitioner): each ``part-*`` directory's index is read once, its
+    FIRST key bounds the shard, and each probe bisects to the shard
+    that can hold it.  Returns (part dir, parsed index, probes) per
+    probed shard; probes below every first key are dropped."""
+    import glob as _glob
+
+    part_dirs = sorted(_glob.glob(os.path.join(root, "part-*")))
+    if not part_dirs:
+        raise ValueError(f"no part-* MapFile directories under {root}")
+    indexes = [(d, read_mapfile_index(d)) for d in part_dirs]
+    # empty shards (no index) can never hold a probe; drop them
+    shards = [(d, idx) for d, idx in indexes if idx[1]]
+    bounds = [idx[1][0] for _, idx in shards]
+    routed: dict[int, list] = {}
+    for k in probe_keys:
+        i = bisect.bisect_right(bounds, k) - 1
+        if i >= 0:
+            routed.setdefault(i, []).append(k)
+    return [(*shards[i], probes) for i, probes in routed.items()]
 
 
 def _write_parts(
@@ -457,36 +363,12 @@ def mapfile_shards_get_many(
     probe_keys,
     max_scan_bytes: int = 4 * 1024 * 1024,
 ) -> dict:
-    """``MapFileOutputFormat.getEntry`` for a range-sharded layout
-    (mapred/MapFileOutputFormat.java:78: pick the reader by
-    partitioner, then one ``get``): the shard boundaries come from
-    each part directory's FIRST indexed key (read once, O(shards)
-    metadata), each probe bisects to its shard, and each shard serves
-    its probes with ONE :func:`mapfile_get_many` batch.  Returns
-    {key: value} for hits."""
-    import glob as _glob
-
-    part_dirs = sorted(_glob.glob(os.path.join(root, "part-*")))
-    if not part_dirs:
-        raise ValueError(f"no part-* MapFile directories under {root}")
-    idx_cache = {d: read_mapfile_index(d) for d in part_dirs}
-    firsts = [
-        idx_cache[d][1][0] if idx_cache[d][1] else None for d in part_dirs
-    ]
-    # empty shards (no index) can never hold a probe; drop them
-    shards = [(f, d) for f, d in zip(firsts, part_dirs) if f is not None]
-    bounds = [f for f, _ in shards]
-    routed: dict[str, list] = {}
-    for k in probe_keys:
-        i = bisect.bisect_right(bounds, k) - 1
-        if i < 0:
-            continue  # precedes every shard's first key: no shard holds it
-        routed.setdefault(shards[i][1], []).append(k)
+    """``MapFileOutputFormat.getEntry`` over a range-sharded layout:
+    :func:`_route_shards`, then ONE :func:`mapfile_get_many` batch per
+    probed shard.  Returns {key: value} for hits."""
     out = {}
-    for d, probes in routed.items():
-        out.update(
-            mapfile_get_many(d, probes, max_scan_bytes, index=idx_cache[d])
-        )
+    for d, index, probes in _route_shards(root, probe_keys):
+        out.update(mapfile_get_many(d, probes, max_scan_bytes, index=index))
     return out
 
 
@@ -616,8 +498,6 @@ def bloom_shards_get_many(
     get discipline — probabilistic gate, EXACT lookup behind it, so
     the result is deterministic).  Returns ({key: value},
     n_bloom_skipped)."""
-    import glob as _glob
-
     from hadoop_20_warehouse_spark.sources.bloomfile import (
         read_bloom_file,
     )
@@ -625,39 +505,15 @@ def bloom_shards_get_many(
         WRITABLE_ENCODERS,
     )
 
-    part_dirs = sorted(_glob.glob(os.path.join(root, "part-*")))
-    if not part_dirs:
-        raise ValueError(f"no part-* MapFile directories under {root}")
-    # parse each shard's index ONCE (r18 review: this function used to
-    # re-read it three times per probed shard — firsts, key class,
-    # and inside get_many)
-    idx_cache = {d: read_mapfile_index(d) for d in part_dirs}
-    firsts = [
-        idx_cache[d][1][0] if idx_cache[d][1] else None for d in part_dirs
-    ]
-    shards = [(f, d) for f, d in zip(firsts, part_dirs) if f is not None]
-    bounds = [f for f, _ in shards]
-    routed: dict[str, list] = {}
-    for k in probe_keys:
-        i = bisect.bisect_right(bounds, k) - 1
-        if i >= 0:
-            routed.setdefault(shards[i][1], []).append(k)
     out = {}
     skipped = 0
-    for d, probes in routed.items():
-        kc = idx_cache[d][0]
-        enc_k = WRITABLE_ENCODERS[kc]
+    for d, index, probes in _route_shards(root, probe_keys):
+        enc_k = WRITABLE_ENCODERS[index[0]]
         bloom = read_bloom_file(d)
-        survivors = []
-        for k in probes:
-            if bloom.maybe_contains(enc_k(k)):
-                survivors.append(k)
-            else:
-                skipped += 1
+        survivors = [k for k in probes if bloom.maybe_contains(enc_k(k))]
+        skipped += len(probes) - len(survivors)
         if survivors:
             out.update(
-                mapfile_get_many(
-                    d, survivors, max_scan_bytes, index=idx_cache[d]
-                )
+                mapfile_get_many(d, survivors, max_scan_bytes, index=index)
             )
     return out, skipped

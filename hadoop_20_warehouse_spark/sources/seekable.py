@@ -34,6 +34,10 @@ modes fall out:
 
 Chunks hold WHOLE records (lines), so split decode never tears a
 record — the TextInputFormat line contract over compressed data.
+Whole-stream decode, split decode, the uncompressed seek and the
+header-only inventory all walk chunks with one iterator, which checks
+each chunk's sync, offset continuity and inflated length; a stream
+torn anywhere but at a chunk boundary raises ValueError.
 
 Scale: one file per writing partition on the way out; reads
 parallelize by compressed byte ranges regardless of file count.
@@ -42,6 +46,8 @@ parallelize by compressed byte ranges regardless of file count.
 from __future__ import annotations
 
 import hashlib
+import io
+import math
 import os
 import struct
 import zlib
@@ -102,43 +108,82 @@ def encode_ssf(
 
 
 def _read_header(fh) -> bytes:
+    """Stream header → the stream sync, leaving ``fh`` at the first
+    chunk."""
     head = fh.read(20)
     if head[:4] != _MAGIC:
         raise ValueError("not a seekable-compressed (SSF1) stream")
-    return head[4:20]
+    if len(head) < 20:
+        raise ValueError("truncated SSF header")
+    return head[4:]
+
+
+def _iter_chunks(
+    fh,
+    sync: bytes,
+    uoff: int | None = 0,
+    end: int | None = None,
+    inflate_from: float = 0,
+):
+    """Walk the chunks from ``fh``'s position, a chunk boundary,
+    yielding ``(uncompressed_offset, uncomp_len, comp_len, data)``.
+
+    ``data`` is the inflated payload, or None for a chunk ending at or
+    before uncompressed offset ``inflate_from``, whose payload is
+    seeked over unread.  Each chunk's sync, its offset continuing the
+    previous chunk's (the first must be ``uoff``; None accepts any,
+    for a walk that starts mid-stream) and its inflated length are
+    checked.  With ``end``, only chunks starting before ``end`` are
+    walked (the split ownership rule).  EOF exactly at a chunk
+    boundary ends the walk; EOF anywhere else raises ValueError, like
+    every failed check."""
+    at = fh.tell()
+    size = fh.seek(0, os.SEEK_END)
+    fh.seek(at)
+    while at < size and (end is None or at < end):
+        head = fh.read(32)
+        if len(head) < 32:
+            raise ValueError(f"truncated SSF chunk header at byte {at}")
+        if head[:16] != sync:
+            raise ValueError(
+                f"SSF chunk sync mismatch at byte {at} (torn stream?)"
+            )
+        chunk_uoff, ulen, clen = struct.unpack(">QII", head[16:])
+        if uoff is not None and chunk_uoff != uoff:
+            raise ValueError(
+                f"SSF chunk offset discontinuity at byte {at} "
+                f"(header says {chunk_uoff}, stream is at {uoff})"
+            )
+        if at + 32 + clen > size:
+            raise ValueError(f"truncated SSF chunk at byte {at}")
+        data = None
+        if chunk_uoff + ulen <= inflate_from:
+            fh.seek(clen, os.SEEK_CUR)
+        else:
+            try:
+                data = zlib.decompress(fh.read(clen), -15)
+            except zlib.error as e:
+                raise ValueError(
+                    f"SSF chunk at byte {at} does not inflate: {e}"
+                ) from e
+            if len(data) != ulen:
+                raise ValueError(
+                    f"SSF chunk length mismatch at byte {at} "
+                    f"(header says {ulen}, inflated {len(data)})"
+                )
+        yield chunk_uoff, ulen, clen, data
+        uoff = chunk_uoff + ulen
+        at += 32 + clen
 
 
 def decode_ssf(blob: bytes) -> list[str]:
     """Whole-stream decode (the non-split path)."""
-    if blob[:4] != _MAGIC:
-        raise ValueError("not a seekable-compressed (SSF1) stream")
-    sync = blob[4:20]
-    pos = 20
-    text = bytearray()
-    n = len(blob)
-    while pos < n:
-        if blob[pos : pos + 16] != sync:
-            raise ValueError("SSF chunk sync mismatch (torn stream?)")
-        uoff, ulen, clen = struct.unpack_from(">QII", blob, pos + 16)
-        body = blob[pos + 32 : pos + 32 + clen]
-        if len(body) != clen:
-            raise ValueError("truncated SSF chunk")
-        data = zlib.decompress(body, -15)
-        if len(data) != ulen:
-            raise ValueError(
-                "SSF chunk length mismatch "
-                f"(header says {ulen}, inflated {len(data)})"
-            )
-        if uoff != len(text):
-            raise ValueError(
-                "SSF chunk offset discontinuity "
-                f"(header says {uoff}, stream is at {len(text)})"
-            )
-        text += data
-        pos += 32 + clen
+    fh = io.BytesIO(blob)
+    sync = _read_header(fh)
+    text = b"".join(data for _, _, _, data in _iter_chunks(fh, sync))
     # \n is THE record delimiter (splitlines would also break on
     # \x85/\u2028/\v etc. and disagree with read_ssf_lines)
-    return bytes(text).decode("utf-8").split("\n")[:-1]
+    return text.decode("utf-8").split("\n")[:-1]
 
 
 def seek_uncompressed(path: str, offset: int) -> bytes:
@@ -147,26 +192,13 @@ def seek_uncompressed(path: str, offset: int) -> bytes:
     fseek'd over) — the prefix is never inflated."""
     with open(path, "rb") as fh:
         sync = _read_header(fh)
-        out = bytearray()
-        while True:
-            head = fh.read(32)
-            if not head:
-                break
-            if head[:16] != sync:
-                raise ValueError("SSF chunk sync mismatch")
-            uoff, ulen, clen = struct.unpack(">QII", head[16:])
-            if uoff + ulen <= offset:
-                fh.seek(clen, os.SEEK_CUR)  # skip without inflating
-                continue
-            data = zlib.decompress(fh.read(clen), -15)
-            if len(data) != ulen:
-                raise ValueError(
-                    "SSF chunk length mismatch "
-                    f"(header says {ulen}, inflated {len(data)})"
-                )
-            start = max(0, offset - uoff)
-            out += data[start:]
-        return bytes(out)
+        return b"".join(
+            data[max(0, offset - uoff) :]
+            for uoff, _, _, data in _iter_chunks(
+                fh, sync, inflate_from=offset
+            )
+            if data is not None
+        )
 
 
 def _decode_file_range(fname: str, start: int, end: int) -> list[tuple]:
@@ -186,23 +218,7 @@ def _decode_file_range(fname: str, start: int, end: int) -> list[tuple]:
             return []
         fh.seek(boundary)
         rows: list[tuple] = []
-        while True:
-            head = fh.read(32)
-            if len(head) < 32:
-                break
-            if head[:16] != sync:
-                raise ValueError("SSF chunk sync mismatch (torn stream?)")
-            chunk_pos = fh.tell() - 32
-            if chunk_pos >= end:
-                break
-            uoff, ulen, clen = struct.unpack(">QII", head[16:])
-            data = zlib.decompress(fh.read(clen), -15)
-            if len(data) != ulen:
-                raise ValueError(
-                    "SSF chunk length mismatch "
-                    f"(header says {ulen}, inflated {len(data)})"
-                )
-            off = uoff
+        for off, _, _, data in _iter_chunks(fh, sync, uoff=None, end=end):
             for raw in data.split(b"\n")[:-1]:
                 rows.append((off, raw.decode("utf-8")))
                 off += len(raw) + 1
@@ -266,15 +282,10 @@ def ssf_meta(path: str) -> dict:
         out["files"] += 1
         with open(f, "rb") as fh:
             sync = _read_header(fh)
-            while True:
-                head = fh.read(32)
-                if len(head) < 32:
-                    break
-                if head[:16] != sync:
-                    raise ValueError("SSF chunk sync mismatch")
-                _uoff, ulen, clen = struct.unpack(">QII", head[16:])
+            for _, ulen, clen, _ in _iter_chunks(
+                fh, sync, inflate_from=math.inf
+            ):
                 out["chunks"] += 1
                 out["uncompressed"] += ulen
                 out["compressed"] += clen
-                fh.seek(clen, os.SEEK_CUR)
     return out

@@ -25,14 +25,18 @@ ingestion); decode is a generator over bytes — no per-record Python
 object churn beyond the emitted tuples.  Uncompressed, record- and
 block-compressed containers are all parsed (DefaultCodec/GzipCodec/
 BZip2Codec — each record or block buffer is a finished stream);
-other codecs fail loudly with the codec name.
+other codecs fail loudly with the codec name.  One header reader and
+one record/block iterator serve every read, MapFile lookups
+included; a torn record or block raises ValueError naming its byte
+offset.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -92,10 +96,6 @@ def _dec_bytes(b: bytes, pos: int):
     return bytes(b[pos : pos + n]), pos + n
 
 
-def _dec_vint(b: bytes, pos: int):
-    return read_vlong(b, pos)
-
-
 def _dec_null(b: bytes, pos: int):
     return None, pos
 
@@ -109,8 +109,8 @@ WRITABLE_DECODERS: dict[str, tuple[str, object]] = {
     "org.apache.hadoop.io.ByteWritable": ("tinyint", _dec_byte),
     "org.apache.hadoop.io.Text": ("string", _dec_text),
     "org.apache.hadoop.io.BytesWritable": ("binary", _dec_bytes),
-    "org.apache.hadoop.io.VIntWritable": ("bigint", _dec_vint),
-    "org.apache.hadoop.io.VLongWritable": ("bigint", _dec_vint),
+    "org.apache.hadoop.io.VIntWritable": ("bigint", read_vlong),
+    "org.apache.hadoop.io.VLongWritable": ("bigint", read_vlong),
     "org.apache.hadoop.io.NullWritable": ("string", _dec_null),
 }
 
@@ -148,26 +148,29 @@ def _read_utf8_string(b: bytes, pos: int) -> tuple[str, int]:
     return b[pos : pos + n].decode("utf-8"), pos + n
 
 
-def parse_sequence_file(blob: bytes, start_at: int | None = None):
-    """Parse one SequenceFile: returns ``(key_class, value_class,
-    iter[(key_bytes, value_bytes)])`` of the RAW per-record wire bytes.
+class SequenceHeader(NamedTuple):
+    """What the record walk needs from a SequenceFile header."""
 
-    ``start_at`` starts record iteration at that byte offset instead
-    of the header end — the MapFile seek contract (index positions
-    point at record starts, possibly AT a sync escape, which the
-    record loop handles anywhere).
+    key_class: str
+    value_class: str
+    block_compressed: bool
+    inflate: Callable[[bytes], bytes] | None
+    sync: bytes  # b"" for v1, which has no sync and no sync escapes
+    data_start: int
 
-    Container layout (io/SequenceFile.java:1478-1540): ``SEQ`` magic,
-    version byte, key/value class names (Text strings for v4+, UTF8
-    2-byte-length strings for v1-v3 — io/SequenceFile.java:1462),
-    compression booleans (+codec), metadata pairs, 16-byte sync
-    marker (present only for version > 1); then records as BE-int
-    record length + BE-int key length + key bytes + value bytes, with
-    an escape length of -1 introducing a 16-byte sync marker (written
-    every ~SYNC_INTERVAL bytes; never present in v1, which has no
-    sync at all)."""
+
+def read_sequence_header(blob: bytes) -> SequenceHeader:
+    """Header of one SequenceFile (io/SequenceFile.java:1478-1540):
+    ``SEQ`` magic, version byte, key/value class names (Text strings
+    for v4+, UTF8 2-byte-length strings for v1-v3 —
+    io/SequenceFile.java:1462), compression booleans (+codec),
+    metadata pairs, and a 16-byte sync marker present only for
+    version > 1.  ``blob`` needs only to hold the header; a shorter
+    one raises ValueError."""
     if blob[:3] != _SEQ_MAGIC:
         raise ValueError("not a SequenceFile (missing SEQ magic)")
+    if len(blob) < 4:
+        raise ValueError("truncated SequenceFile header")
     version = blob[3]
     if not 1 <= version <= 6:
         raise ValueError(
@@ -177,110 +180,141 @@ def parse_sequence_file(blob: bytes, start_at: int | None = None):
             f"sync, io/SequenceFile.java:1462) — re-write with a modern "
             f"writer or read via a JVM path"
         )
-    pos = 4
-    if version < 4:
-        # UTF8.readFields framing: 2-byte BE unsigned length +
-        # Java-modified-UTF8 bytes (identical to UTF-8 for the ASCII
-        # class names these fields hold)
-        key_class, pos = _read_utf8_string(blob, pos)
-        value_class, pos = _read_utf8_string(blob, pos)
-    else:
-        key_class, pos = _read_text_string(blob, pos)
-        value_class, pos = _read_text_string(blob, pos)
-    compressed = block_compressed = False
-    if version > 2:
-        compressed = blob[pos] != 0
-        pos += 1
-    if version >= 4:
-        block_compressed = blob[pos] != 0
-        pos += 1
-    codec = "org.apache.hadoop.io.compress.DefaultCodec"
-    if (compressed or block_compressed) and version >= 5:
-        codec, pos = _read_text_string(blob, pos)
-    inflate = _inflater_for(codec) if (compressed or block_compressed) \
-        else None
-    if version >= 6:
-        n_meta = struct.unpack_from(">i", blob, pos)[0]
-        pos += 4
-        for _ in range(n_meta):
-            _, pos = _read_text_string(blob, pos)
-            _, pos = _read_text_string(blob, pos)
-    # sync marker exists only for version > 1 (io/SequenceFile.java:
-    # 1462: "if (version > 1) in.readFully(sync)"); v1 streams have no
-    # sync and therefore no -1 escapes between records
-    has_sync = version > 1
-    sync = b""
-    if has_sync:
-        sync = bytes(blob[pos : pos + 16])
-        pos += 16
-
-    if start_at is not None:
-        pos = start_at
-
-    def records() -> Iterator[tuple[bytes, bytes]]:
-        p = pos
-        end = len(blob)
-        while p + 4 <= end:
-            rec_len = struct.unpack_from(">i", blob, p)[0]
-            p += 4
-            if has_sync and rec_len == -1:  # sync escape
-                if bytes(blob[p : p + 16]) != sync:
-                    raise ValueError("corrupt SequenceFile: bad sync marker")
-                p += 16
-                continue
-            key_len = struct.unpack_from(">i", blob, p)[0]
-            p += 4
-            key = bytes(blob[p : p + key_len])
-            val = bytes(blob[p + key_len : p + rec_len])
-            p += rec_len
-            # RecordCompressWriter (io/SequenceFile.java:1108-1139):
-            # same framing, value bytes are one fresh codec stream
-            yield key, inflate(val) if inflate else val
-
-    def block_records() -> Iterator[tuple[bytes, bytes]]:
-        # BlockCompressWriter.sync (io/SequenceFile.java:1257-1283) /
-        # Reader.readBlock (:1659): each block = sync escape (-1 int +
-        # 16-byte sync), vint nRecords, then FOUR framed buffers
-        # ([vint compressedLen][codec stream]): key lengths (vints),
-        # keys, value lengths (vints), values.
-        p = pos
-        end = len(blob)
-
-        def buf(q):
-            clen, q = _dec_vint(blob, q)
-            if q + clen > end:
-                raise ValueError("truncated SequenceFile block buffer")
-            return inflate(bytes(blob[q : q + clen])), q + clen
-
-        while p + 4 <= end:
-            esc = struct.unpack_from(">i", blob, p)[0]
-            p += 4
-            if esc != -1 or bytes(blob[p : p + 16]) != sync:
-                raise ValueError(
-                    "corrupt SequenceFile: block without sync prefix"
-                )
-            p += 16
-            n, p = _dec_vint(blob, p)
-            key_lens_b, p = buf(p)
-            keys_b, p = buf(p)
-            val_lens_b, p = buf(p)
-            vals_b, p = buf(p)
-            kq = vq = 0
-            koff = voff = 0
-            for _ in range(n):
-                klen, kq = _dec_vint(key_lens_b, kq)
-                vlen, vq = _dec_vint(val_lens_b, vq)
-                yield (
-                    bytes(keys_b[koff : koff + klen]),
-                    bytes(vals_b[voff : voff + vlen]),
-                )
-                koff += klen
-                voff += vlen
-
-    return (
+    read_name = _read_utf8_string if version < 4 else _read_text_string
+    try:
+        key_class, pos = read_name(blob, 4)
+        value_class, pos = read_name(blob, pos)
+        compressed = block_compressed = False
+        if version > 2:
+            compressed = blob[pos] != 0
+            pos += 1
+        if version >= 4:
+            block_compressed = blob[pos] != 0
+            pos += 1
+        codec = "org.apache.hadoop.io.compress.DefaultCodec"
+        if (compressed or block_compressed) and version >= 5:
+            codec, pos = _read_text_string(blob, pos)
+        if version >= 6:
+            n_meta = struct.unpack_from(">i", blob, pos)[0]
+            pos += 4
+            for _ in range(2 * n_meta):
+                _, pos = _read_text_string(blob, pos)
+    except (IndexError, struct.error):
+        raise ValueError("truncated SequenceFile header") from None
+    sync_len = 16 if version > 1 else 0
+    if pos + sync_len > len(blob):
+        raise ValueError("truncated SequenceFile header")
+    return SequenceHeader(
         key_class,
         value_class,
-        block_records() if block_compressed else records(),
+        block_compressed,
+        _inflater_for(codec) if compressed or block_compressed else None,
+        bytes(blob[pos : pos + sync_len]),
+        pos + sync_len,
+    )
+
+
+def _torn(at: int) -> ValueError:
+    return ValueError(f"torn SequenceFile frame at byte {at}")
+
+
+def _inflate(inflate, data: bytes, at: int) -> bytes:
+    try:
+        return inflate(data)
+    except (zlib.error, OSError, EOFError, ValueError) as e:
+        raise ValueError(
+            f"SequenceFile frame at byte {at} does not inflate: {e}"
+        ) from e
+
+
+def iter_sequence_records(
+    buf: bytes, header: SequenceHeader, pos: int
+) -> Iterator[tuple[bytes, bytes]]:
+    """RAW (key_bytes, value_bytes) of every record in ``buf`` from
+    ``pos``, which must be a record, sync-escape or block boundary
+    (the header end, or a MapFile index position).
+
+    Record framing (io/SequenceFile.java:1930): BE-int record length +
+    BE-int key length + key bytes + value bytes, the value one finished
+    codec stream when record-compressed (:1108-1139); a length of -1
+    introduces a 16-byte sync marker.  Block framing (:1257-1283 write,
+    :1659 readBlock): each block is a sync escape, a vint record count,
+    then four ``[vint length][codec stream]`` buffers — key lengths
+    (vints), keys, value lengths (vints), values.
+
+    The walk ends quietly only at the end of ``buf`` on a frame
+    boundary; a torn frame, a bad sync or a buffer that fails to
+    inflate raises ValueError naming the frame's byte offset."""
+    sync, inflate, end = header.sync, header.inflate, len(buf)
+    if header.block_compressed:
+        while pos < end:
+            start = pos
+            if pos + 20 > end:
+                raise _torn(start)
+            if (
+                struct.unpack_from(">i", buf, pos)[0] != -1
+                or buf[pos + 4 : pos + 20] != sync
+            ):
+                raise ValueError(
+                    "corrupt SequenceFile: block without sync prefix at "
+                    f"byte {start}"
+                )
+            bufs = []
+            try:
+                n, pos = read_vlong(buf, pos + 20)
+                for _ in range(4):
+                    clen, pos = read_vlong(buf, pos)
+                    if pos + clen > end:
+                        raise _torn(start)
+                    bufs.append(_inflate(inflate, buf[pos : pos + clen], start))
+                    pos += clen
+            except IndexError:
+                raise _torn(start) from None
+            key_lens, keys, val_lens, vals = bufs
+            kq = vq = koff = voff = 0
+            for _ in range(n):
+                klen, kq = read_vlong(key_lens, kq)
+                vlen, vq = read_vlong(val_lens, vq)
+                yield keys[koff : koff + klen], vals[voff : voff + vlen]
+                koff += klen
+                voff += vlen
+        return
+    while pos < end:
+        if pos + 8 > end:
+            raise _torn(pos)
+        rec_len, key_len = struct.unpack_from(">ii", buf, pos)
+        if sync and rec_len == -1:  # sync escape
+            if pos + 20 > end:
+                raise _torn(pos)
+            if buf[pos + 4 : pos + 20] != sync:
+                raise ValueError(
+                    f"corrupt SequenceFile: bad sync marker at byte {pos}"
+                )
+            pos += 20
+            continue
+        if not 0 <= key_len <= rec_len:
+            raise ValueError(f"corrupt SequenceFile record at byte {pos}")
+        key_at, stop = pos + 8, pos + 8 + rec_len
+        if stop > end:
+            raise _torn(pos)
+        val = bytes(buf[key_at + key_len : stop])
+        yield (
+            bytes(buf[key_at : key_at + key_len]),
+            _inflate(inflate, val, pos) if inflate else val,
+        )
+        pos = stop
+
+
+def parse_sequence_file(blob: bytes):
+    """Parse one SequenceFile: returns ``(key_class, value_class,
+    iter[(key_bytes, value_bytes)])`` of the RAW per-record wire bytes
+    (:func:`read_sequence_header`, then :func:`iter_sequence_records`
+    from the header end)."""
+    header = read_sequence_header(blob)
+    return (
+        header.key_class,
+        header.value_class,
+        iter_sequence_records(blob, header, header.data_start),
     )
 
 
@@ -592,7 +626,7 @@ def read_sequence_with_position(
 
 # --- pure-Python SequenceFile WRITER (the parse symmetry) -------------------
 
-_SEQ_WRITE_CODECS = {
+_SEQ_CODECS = {
     "default": "org.apache.hadoop.io.compress.DefaultCodec",
     "gzip": "org.apache.hadoop.io.compress.GzipCodec",
     "bzip2": "org.apache.hadoop.io.compress.BZip2Codec",
@@ -651,7 +685,7 @@ def encode_sequence_file(
     out += b"\x01" if block else b"\x00"
     deflate = None
     if compressed:
-        codec = _SEQ_WRITE_CODECS.get(compression, compression)
+        codec = _SEQ_CODECS.get(compression, compression)
         out += _enc_text(codec)
         deflate = _deflater_for(codec)
     out += struct.pack(">i", 0)  # no metadata pairs

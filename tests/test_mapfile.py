@@ -391,3 +391,38 @@ def test_get_extends_window_past_oversized_values(tmp_path, spark):
     )
     assert set(got) == {"k000", "k031", "k063"}
     assert got["k031"] == big + "31"
+
+
+def test_get_many_raises_on_torn_data(tmp_path):
+    """A ``data`` file cut mid-record raises ValueError for a key past
+    the cut instead of reporting it absent: in the cut's own interval
+    the walk reaches the torn record at EOF; a cut in an earlier
+    interval leaves index positions past the end of data.  Keys the
+    walk resolves before the tear are still served."""
+    from hadoop_20_warehouse_spark.sources.mapfile import mapfile_get_many
+    from hadoop_20_warehouse_spark.sources.seqfile import (
+        WRITABLE_ENCODERS,
+        encode_sequence_file,
+    )
+
+    text, long_cls = "org.apache.hadoop.io.Text", "org.apache.hadoop.io.LongWritable"
+    enc, enc_long = WRITABLE_ENCODERS[text], WRITABLE_ENCODERS[long_cls]
+    pairs = [(enc(f"k{i:03d}"), enc(f"v{i}")) for i in range(40)]
+    data, positions = encode_sequence_file(
+        iter(pairs), text, text, record_positions=True
+    )
+    index = encode_sequence_file(
+        ((pairs[i][0], enc_long(positions[i])) for i in range(0, 40, 8)),
+        text,
+        long_cls,
+    )
+    d = tmp_path / "mf"
+    d.mkdir()
+    (d / "index").write_bytes(index)
+    (d / "data").write_bytes(data[: positions[35] + 5])  # inside k035
+    assert mapfile_get_many(str(d), ["k033"]) == {"k033": "v33"}
+    with pytest.raises(ValueError, match="torn"):
+        mapfile_get_many(str(d), ["k036"])
+    (d / "data").write_bytes(data[: positions[20] + 5])  # inside k020
+    with pytest.raises(ValueError, match="past the end of data"):
+        mapfile_get_many(str(d), ["k036"])

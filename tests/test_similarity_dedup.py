@@ -1150,3 +1150,35 @@ def test_minhash_pairs_emitted_once_at_first_shared_band(spark, tmp_path):
     assert "Aggregate" not in pairs._jdf.queryExecution().executedPlan().toString()
     assert_matches_oracle(pairs, con, minhash_lsh_pairs_sql("docs", "doc_id", "text"))
     con.close()
+
+
+def test_minhash_null_texts_do_not_pair(spark, tmp_path):
+    """NULL-text documents get NULL band digests and pair with nothing,
+    as in the DuckDB oracle, whose ``||`` propagates NULL — a digest
+    that skipped NULL minima would pair every NULL text with every
+    other on ``md5('')``."""
+    import duckdb
+
+    from hadoop_20_warehouse_spark.dedup.minhash import (
+        minhash_lsh_pairs,
+        minhash_lsh_pairs_sql,
+    )
+    from tests.conftest import assert_matches_oracle
+
+    same = "one text written twice so that exactly one pair exists"
+    texts = [None, same, None, same, None] + [
+        None if i % 3 == 0 else f"filler document {i} on topic {i * 11}"
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    path = str(tmp_path / "docs")
+    df.write.parquet(path)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW docs AS SELECT * FROM '{path}/*.parquet'")
+
+    pairs = minhash_lsh_pairs(df, "doc_id", "text")
+    got = {(r.id_a, r.id_b) for r in pairs.collect()}
+    nulls = {i for i, t in enumerate(texts) if t is None}
+    assert (1, 3) in got and not {i for p in got for i in p} & nulls, got
+    assert_matches_oracle(pairs, con, minhash_lsh_pairs_sql("docs", "doc_id", "text"))
+    con.close()
